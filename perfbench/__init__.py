@@ -1,0 +1,1 @@
+"""Benchmark of the CDC engine: see README.md in this directory."""
