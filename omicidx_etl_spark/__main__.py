@@ -57,7 +57,11 @@ def main(argv: "list[str] | None" = None) -> int:
         mod = importlib.import_module(f"jobs.{JOBS[cmd][0]}")
     except ModuleNotFoundError as e:
         # pip-installed package without the repo checkout: jobs/ is not a
-        # sibling of the package dir — say so instead of a raw traceback
+        # sibling of the package dir — say so instead of a raw traceback.
+        # A dependency missing INSIDE the job module is a different fault:
+        # let its traceback through.
+        if e.name != "jobs" and not (e.name or "").startswith("jobs."):
+            raise
         print(
             f"cannot load job {cmd!r}: {e}\n"
             f"the job runners live in the repo's jobs/ directory "

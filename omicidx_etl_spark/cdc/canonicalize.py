@@ -23,7 +23,8 @@ key-partitioned join — O(corpus) with no self-join. ``minhash`` shingles
 token-id n-grams (pure column exprs, no UDF), aggregates K minhashes in
 one wide groupBy, bands them, and bucket-joins candidates
 (``functions.dedup``) — never all-pairs — then takes the transitive
-closure with :func:`~omicidx_etl_spark.functions.dedup.connected_components`.
+closure with :func:`~omicidx_etl_spark.functions.dedup.connected_components`
+(two union-find passes, a fixed number of Spark jobs).
 The delete itself is ``mode="mor"`` by default: an O(losers) delta append,
 no base rewrite.
 """

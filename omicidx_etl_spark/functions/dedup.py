@@ -464,15 +464,44 @@ def incremental_exact_dedup(
     return batch.join(seen, "content_hash", "left_anti").select(id_col, "content_hash")
 
 
+def _min_root_union_find(batches):
+    """``mapInArrow`` body: union-find over the (a, b) rows of one
+    partition, emitting (node, min id of its component) per distinct node.
+    The larger root always links under the smaller, so a root IS its
+    component's minimum; path halving keeps the chains short."""
+    import pyarrow as pa
+
+    parent: dict = {}
+
+    def find(x):
+        while (p := parent.setdefault(x, x)) != x:
+            parent[x] = parent[p]
+            x = parent[x]
+        return x
+
+    id_type = None
+    for batch in batches:
+        id_type = batch.schema.field(0).type
+        for a, b in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist()):
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+    if parent:
+        nodes = list(parent)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(nodes, id_type), pa.array([find(n) for n in nodes], id_type)],
+            names=["node", "root"],
+        )
+
+
 def connected_components(
     pairs: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
-    max_iter: int = 25,
     checkpoint_dir: "str | None" = None,
 ) -> DataFrame:
     """Duplicate-CLUSTER formation: connected components over a near-dup
-    pair set, via iterative min-label propagation with pointer jumping.
+    pair set, in two union-find passes.
 
     The LSH/Jaccard/SimHash families emit PAIRS; an actual dedup pipeline
     needs CLUSTERS (the transitive closure) so it keeps exactly one
@@ -482,126 +511,75 @@ def connected_components(
     in ``omicidx_etl/sql/010_raw_to_parquet.sql:17-87``); cluster
     formation is the transitive step a web-scale corpus needs on top.
 
-    Algorithm — hash-to-min with pointer jumping (cf. Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14): every node's
-    label starts at min(self, neighbors); each round takes the min label
-    over the neighborhood, then shortcuts ``label <- label(label)``.
-    Converges in O(log diameter) rounds and near-dup components are
-    shallow quasi-cliques, so 2-4 rounds in practice. Scale posture: each
-    round is two key-partitioned shuffles over the EDGE set (already
-    LSH-pruned — never all-pairs over the corpus); lineage is truncated
-    each round so the plan stays O(1) per round. Default truncation is
-    ``localCheckpoint`` (fine single-box; blocks live on executors, so an
-    executor loss on a real cluster kills them) — pass ``checkpoint_dir``
-    to use reliable ``checkpoint()`` to shared storage instead, the
-    multi-executor deployment posture. Driver-side work is one
-    ``count()`` per round for the convergence test — O(rounds) scalars,
-    no data collected.
+    1. Local: edges ``(least, greatest)`` are hash-partitioned (AQE sizes
+       the partitions) and each partition runs a union-find in
+       ``mapInArrow``, giving (node, min id of its local component). Each
+       edge sits in one connected local component, so the star graph
+       node—local root has the input's components.
+    2. Global: each node's non-minimum local roots are linked to its
+       minimum one, and ONE task runs the same union-find over those
+       links. A component's min id is the min of its local minimums, so
+       the global root of a node's minimum local root is its label.
+
+    The job count is fixed, whatever the graph's diameter. The global
+    task keeps one union-find entry per local root it is sent (at most
+    one per node); links stream through in Arrow batches. The local-pass
+    frame is materialized once: ``localCheckpoint`` by default (blocks
+    live on executors, so an executor loss kills them), or reliable
+    ``checkpoint()`` files under ``checkpoint_dir`` for multi-executor
+    clusters. Node ids keep the input column type; pairs with a null id
+    are ignored.
 
     Returns (doc_id, cluster_id, cluster_size, is_canonical), one row per
-    doc appearing in any pair; cluster_id is the lexicographic min doc_id
-    of the component (deterministic canonical choice).
+    doc appearing in any pair; cluster_id is the min doc_id of the
+    component (deterministic canonical choice).
     """
-    prev_ckpt_dir: str | None = None
-    if checkpoint_dir is not None:
-        spark = pairs.sparkSession
-        prev_ckpt_dir = spark.sparkContext.getCheckpointDir()
-        if prev_ckpt_dir != checkpoint_dir:
-            spark.sparkContext.setCheckpointDir(checkpoint_dir)
+    from omicidx_etl_spark.session import ensure_worker_package
 
-        def _ckpt(df: DataFrame) -> DataFrame:
-            # reliable checkpoints stay EAGER: a lazy reliable checkpoint
-            # recomputes the plan a second time to write the files
-            return df.checkpoint(eager=True)
+    spark = pairs.sparkSession
+    ensure_worker_package(spark)  # _min_root_union_find unpickles by module name
+    a, b = F.col(a_col), F.col(b_col)
+    edges = pairs.filter(a.isNotNull() & b.isNotNull()).select(
+        F.least(a, b).alias("u"), F.greatest(a, b).alias("v")
+    )
+    id_type = edges.schema["u"].dataType.simpleString()
+    uf_schema = f"node {id_type}, root {id_type}"
+
+    local = (
+        edges.repartition("u")
+        .mapInArrow(_min_root_union_find, uf_schema)
+        .groupBy("node")
+        .agg(F.collect_set("root").alias("roots"))
+        .select("node", F.array_min("roots").alias("r0"), "roots")
+    )
+    if checkpoint_dir is None:
+        local = local.localCheckpoint(eager=True)
     else:
+        sc = spark.sparkContext
+        prev_ckpt_dir = sc.getCheckpointDir()
+        sc.setCheckpointDir(checkpoint_dir)
+        try:
+            local = local.checkpoint(eager=True)
+        finally:
+            # ADVICE r5: don't leak the checkpoint dir to unrelated
+            # checkpoint() users of a long-lived session (the files stay
+            # until the caller removes checkpoint_dir)
+            if prev_ckpt_dir is not None:
+                sc.setCheckpointDir(prev_ckpt_dir)
 
-        def _ckpt(df: DataFrame) -> DataFrame:
-            # LAZY on purpose: each round's convergence count is the first
-            # action on the round's frame, so it materializes the local
-            # checkpoint as a side effect — one Spark job per round instead
-            # of two (localCheckpoint persists the blocks computed by that
-            # same action; nothing is recomputed). At bench scale the
-            # iteration is job-latency-bound, so halving the job count
-            # halves the loop cost.
-            return df.localCheckpoint(eager=False)
-
-    try:
-        e = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        # Symmetrize with ONE explode, not a self-union: a union's two
-        # branches are independent subtrees of the same plan, so the
-        # (potentially expensive) upstream candidate-pair computation (LSH
-        # band self-join + distinct) ran TWICE in the edges job — measured
-        # at sf0.1 as a 64-task stage (2 x 32), each half re-running the
-        # full band join. The explode mirrors each pair row map-side over a
-        # single computation of the pair plan.
-        mirror = F.explode(
-            F.array(
-                F.struct(F.col("src"), F.col("dst")),
-                F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
-            )
-        )
-        edges = _ckpt(
-            e.select(mirror.alias("__e"))
-            .select("__e.src", "__e.dst")
-            .repartition("dst")  # each round's propagate joins on dst
-        )
-
-        labels = _ckpt(
-            edges.groupBy("src")
-            .agg(F.min("dst").alias("nmin"))
-            .select(F.col("src").alias("node"), F.least("src", "nmin").alias("label"))
-        )
-
-        for _ in range(max_iter):
-            nbr = (
-                edges.join(
-                    labels.select(F.col("node").alias("dst"), "label"), "dst"
-                )
-                .groupBy("src")
-                .agg(F.min("label").alias("nmin"))
-                .withColumnRenamed("src", "node")
-            )
-            # carry the pre-round label through the checkpoint so the
-            # convergence test is a FILTER over the just-materialized
-            # round, not a second join-the-two-label-sets job per round
-            # (halves the per-round driver/job count; the filter count
-            # reads checkpointed blocks, no shuffle)
-            prop = labels.join(nbr, "node", "left").select(
-                "node",
-                F.least("label", F.coalesce("nmin", "label")).alias("__p"),
-                F.col("label").alias("__old"),
-            )
-            # pointer jump: label <- min(label, label(label))
-            hop = prop.select(F.col("node").alias("__p"), F.col("__p").alias("__hl"))
-            new_labels = _ckpt(
-                prop.join(hop, "__p", "left").select(
-                    "node",
-                    F.least("__p", F.coalesce("__hl", "__p")).alias("label"),
-                    "__old",
-                )
-            )
-            changed = new_labels.filter(F.col("label") != F.col("__old")).count()
-            labels = new_labels.select("node", "label")
-            if changed == 0:
-                break
-
-        sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("n"))
-        return labels.join(sizes, "label").select(
-            F.col("node").alias("doc_id"),
-            F.col("label").alias("cluster_id"),
-            F.col("n").cast("long").alias("cluster_size"),
-            (F.col("node") == F.col("label")).cast("int").alias("is_canonical"),
-        )
-    finally:
-        # ADVICE r5: don't leak the checkpoint-dir setting to unrelated
-        # checkpoint() users in a long-lived session. (Reliable checkpoint
-        # FILES are only auto-deleted with
-        # spark.cleaner.referenceTracking.cleanCheckpoints=true — callers
-        # doing repeated clustering passes should point checkpoint_dir at
-        # a per-run scratch dir and remove it when the result is
-        # materialized.)
-        if prev_ckpt_dir is not None and prev_ckpt_dir != checkpoint_dir:
-            pairs.sparkSession.sparkContext.setCheckpointDir(prev_ckpt_dir)
+    merged = (
+        local.select("r0", F.explode(F.array_remove("roots", F.col("r0"))))
+        .repartition(1)
+        .mapInArrow(_min_root_union_find, uf_schema)
+        .select(F.col("node").alias("r0"), F.col("root").alias("label"))
+    )
+    label = F.coalesce("label", "r0")
+    return local.join(merged, "r0", "left").select(
+        F.col("node").alias("doc_id"),
+        label.alias("cluster_id"),
+        F.count(F.lit(1)).over(Window.partitionBy(label)).alias("cluster_size"),
+        (F.col("node") == label).cast("int").alias("is_canonical"),
+    )
 
 
 def span_dedup_stats(

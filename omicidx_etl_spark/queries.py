@@ -123,20 +123,22 @@ def oracle_sql() -> dict[str, str]:
     return {k: _REGISTRY[k][1] for k in _ordered_names() if _REGISTRY[k][1] is not None}
 
 
-# Parquet schema cache for the benchmark tables, keyed per SparkContext +
-# path. Schema INFERENCE is driver-side footer IO + a JVM round trip on
-# every read call (~60-85 ms/table measured, guide §5: the driver should
-# do almost no data work); a query joining six tables paid it six times
-# per build. The benchmark tables are immutable, so the first read's
-# schema is authoritative for the rest of the process; an explicit-schema
-# read lists files but skips inference. Not a result cache — every query
-# still scans the parquet data.
-_SCHEMA_CACHE: dict[tuple[int, str], T.StructType] = {}
+# Parquet schema cache for the benchmark tables, keyed per Spark application
+# id + path (not ``id(SparkContext)``: CPython can hand a stopped, collected
+# context's id to a new one, which would then read a stale schema). Schema
+# INFERENCE is driver-side footer IO + a JVM round trip on every read call
+# (~60-85 ms/table measured, guide §5: the driver should do almost no data
+# work); a query joining six tables paid it six times per build. The
+# benchmark tables are immutable, so the first read's schema is
+# authoritative for the rest of the process; an explicit-schema read lists
+# files but skips inference. Not a result cache — every query still scans
+# the parquet data.
+_SCHEMA_CACHE: dict[tuple[str, str], T.StructType] = {}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
-    key = (id(spark.sparkContext), path)
+    key = (spark.sparkContext.applicationId, path)
     sch = _SCHEMA_CACHE.get(key)
     if sch is None:
         df = spark.read.parquet(path)
@@ -1603,10 +1605,10 @@ def dedup_cluster_cc(spark, sf_dir):
     """Duplicate-cluster formation: connected components (transitive
     closure) over the MinHash-LSH pair set — one canonical doc per
     near-dup group, even across pairs LSH never directly emitted. The
-    oracle is the same closure as a DuckDB recursive CTE. Iterative
-    min-label propagation with pointer jumping; see
-    :func:`omicidx_etl_spark.functions.dedup.connected_components` for the
-    per-round shuffle budget."""
+    oracle is the same closure as a DuckDB recursive CTE. Two union-find
+    passes (per partition, then one global merge task) in a fixed number
+    of Spark jobs; see
+    :func:`omicidx_etl_spark.functions.dedup.connected_components`."""
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     pairs = D.minhash_lsh_candidates(d, "doc_id", n=2, k=8, bands=4)
     return D.connected_components(pairs)
@@ -3490,12 +3492,10 @@ def pagerank_bipartite(spark, sf_dir):
     dst — the Pregel message-passing pattern as two hash exchanges per
     round on the SAME key, no driver-side state, no cartesian; at 10^10
     edges rounds are width-proportional; edges and degrees materialize
-    ONCE (``localCheckpoint``, the connected_components convention) so no
-    round re-derives the orders |><| lineitem scan and lineage stays flat
-    across rounds. The top-25 is TakeOrderedAndProject.
-    Same iterative shape as functions/dedup.py:connected_components
-    (pointer jumping); reference consolidation walks entity links
-    one-shot: `omicidx_etl/sql/030_entity_links.sql:1-20`."""
+    ONCE (``localCheckpoint``) so no round re-derives the orders |><|
+    lineitem scan and lineage stays flat across rounds. The top-25 is
+    TakeOrderedAndProject. Reference consolidation walks entity
+    links one-shot: `omicidx_etl/sql/030_entity_links.sql:1-20`."""
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     e0 = (
@@ -3828,8 +3828,8 @@ def triangle_count(spark, sf_dir):
     O(m^1.5) worst case, typically far less; triangles are wedges whose
     closing (v,w) edge exists (an equi semi-join, never a cartesian).
     Every stage is a hash join on node keys — width-proportional at
-    10^10 edges. Output: exact edge and triangle counts. Same
-    iterative-graph family as pagerank_bipartite / connected_components."""
+    10^10 edges. Output: exact edge and triangle counts. Same graph
+    family as pagerank_bipartite."""
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     li = li.filter(F.col("l_orderkey") % 20 == 0)
     l, r = li.alias("l"), li.alias("r")

@@ -7,7 +7,10 @@ argparse contract, JSON-line output and exit codes exactly.
 
 from __future__ import annotations
 
+import importlib
 import json
+
+import pytest
 
 from omicidx_etl_spark import datagen
 from omicidx_etl_spark.__main__ import JOBS, main
@@ -80,3 +83,29 @@ def test_dispatch_preserves_exit_code(spark, tmp_path, capsys):
     rc = main(["maintain", "--table", root, "--auto", "--fsck", "deep"])
     assert rc == 2
     capsys.readouterr()
+
+
+def test_missing_jobs_dir_exit_2(monkeypatch, capsys):
+    """No jobs/ package next to the install: exit 2 with a pointer to
+    the repo checkout, not a traceback."""
+
+    def _no_jobs(name):
+        raise ModuleNotFoundError(f"No module named {name!r}", name="jobs")
+
+    monkeypatch.setattr(importlib, "import_module", _no_jobs)
+    assert main(["maintain", "--table", "x"]) == 2
+    assert "jobs/ directory" in capsys.readouterr().err
+
+
+def test_missing_dependency_in_job_is_not_masked(monkeypatch):
+    """A ModuleNotFoundError raised by a job module's OWN imports (here a
+    missing ``yaml``) propagates instead of being reported as a missing
+    jobs/ directory."""
+
+    def _job_needs_yaml(name):
+        raise ModuleNotFoundError("No module named 'yaml'", name="yaml")
+
+    monkeypatch.setattr(importlib, "import_module", _job_needs_yaml)
+    with pytest.raises(ModuleNotFoundError) as ei:
+        main(["maintain", "--table", "x"])
+    assert ei.value.name == "yaml"
