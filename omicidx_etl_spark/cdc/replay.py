@@ -404,9 +404,10 @@ def replay_log(
 
     def _mk_batch(b: int) -> DataFrame:
         """Build batch b's pruned DataFrame. With a segment index this is
-        PURE DRIVER WORK (explicit schema → no inference job; < the
-        parallel-discovery threshold → listing happens on the driver,
-        no Spark job is submitted)."""
+        PURE DRIVER WORK: the explicit schema skips the inference job, and
+        get_spark's parallelPartitionDiscovery.threshold lists the segment
+        files on the driver at any segment count, so no Spark job is
+        submitted."""
         lo, up = b * chunk_events, (b + 1) * chunk_events
         if segs is not None:
             paths = [p for p, slo, shi in segs if shi > lo and slo <= up]

@@ -20,12 +20,13 @@ merge.
 
 Layout: ``<root>/_index/bloom/<dir with '/'→'__'>.json`` holding
 ``{m, j, n, bits: base64}``. Bit positions are ``pmod(xxhash64(key,
-seed), m)`` for seed in 0..j-1 — computed by the JVM at build AND probe
-time (one tiny job per probe batch collects the raw 64-bit hashes; the
-per-dir ``mod m`` happens driver-side so dirs with different m share one
-hash job). Sizing: m = next-pow2(10 bits/key), capped at 2^20 bits
-(128 KiB) — the build-time ``distinct`` of set bit positions is therefore
-driver-bounded by m, never by dir row count.
+seed), m)`` for seed in 0..j-1 — computed by the JVM at build time and by
+the driver port (``lake.hashing``) at probe time, so a probe submits no
+Spark job; the raw 64-bit hashes are computed once per key and reduced
+``mod m`` per dir, so dirs with different m share them. Sizing: m =
+next-pow2(10 bits/key), capped at 2^20 bits (128 KiB) — the build-time
+``distinct`` of set bit positions is therefore driver-bounded by m, never
+by dir row count.
 """
 
 from __future__ import annotations
@@ -36,6 +37,8 @@ import os
 from typing import Any, Iterable
 
 from pyspark.sql import functions as F
+
+from omicidx_etl_spark.lake.hashing import xxhash64
 
 BLOOM_SUBDIR = os.path.join("_index", "bloom")
 DEFAULT_HASHES = 4
@@ -188,9 +191,10 @@ def dirs_to_skip(
 ) -> "set[str]":
     """Among ``candidate_dirs`` (manifest relpaths), the dirs whose bloom
     proves NONE of ``keys`` can be present. Dirs without a sidecar are
-    never skipped (build_blooms hasn't visited them). One Spark job
-    collects the raw 64-bit seed hashes for the probe keys (len(keys) × j
-    values — driver-bounded); the per-dir ``mod m`` test is pure Python."""
+    never skipped (build_blooms hasn't visited them). Pure driver work:
+    ``F.xxhash64(key, lit(s))`` chains as ``xxhash64(s, seed=xxhash64(key))``,
+    so the len(keys) × j raw hashes come from ``lake.hashing``; the per-dir
+    ``mod m`` test is pure Python."""
     keys = list(keys)
     metas = {d: _load_meta(table.root, d) for d in candidate_dirs}
     metas = {d: m for d, m in metas.items() if m is not None}
@@ -198,26 +202,18 @@ def dirs_to_skip(
         return set()
     snap = table.snapshot()
     key = snap["table"]["key"]
+    dtype = table.current_schema(snap)[key].dataType.simpleString()
     j = max(m["j"] for m in metas.values())
-    kdf = table.spark.createDataFrame(
-        [(k,) for k in keys],
-        "key_value " + dict(
-            (f.name, f.dataType.simpleString())
-            for f in table.current_schema(snap).fields
-        )[key],
-    )
-    hrows = kdf.select(
-        *[F.xxhash64(F.col("key_value"), F.lit(s)).alias(f"h{s}") for s in range(j)]
-    ).collect()
+    hrows = []
+    for k in keys:
+        h = xxhash64(k, dtype)
+        hrows.append([xxhash64(s, "int", seed=h) for s in range(j)])
     skip: set[str] = set()
     for d, meta in metas.items():
         m, bits, jj = meta["m"], meta["_bits"], meta["j"]
         hit = False
         for r in hrows:
-            if all(
-                bits[(r[f"h{s}"] % m) >> 3] >> ((r[f"h{s}"] % m) & 7) & 1
-                for s in range(jj)
-            ):
+            if all(bits[(r[s] % m) >> 3] >> ((r[s] % m) & 7) & 1 for s in range(jj)):
                 hit = True
                 break
         if not hit:

@@ -74,6 +74,13 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from omicidx_etl_spark.lake.hashing import (
+    KEY_TYPES,
+    _murmur3_int32,
+    bucket_expr,
+    bucket_of,
+)
+
 BUCKET_COL = "__bucket"
 SEQ_COL = "__seq"  # per-row version (WAL LSN of the winning event)
 DELETED_COL = "__deleted"  # persisted tombstone flag (merge-on-read delete)
@@ -103,31 +110,6 @@ _WIDEN_OK = {
     ("float", "double"),
     ("bigint", "double"),
 }
-
-
-def bucket_expr(key_col: str, n_buckets: int):
-    """The bucket transform. Must be identical everywhere (write + prune)."""
-    return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
-
-
-def _murmur3_int32(i: int, seed: int = 42) -> int:
-    """Spark's ``Murmur3Hash`` of one INT column value (the hash behind
-    ``HashPartitioning`` / ``F.hash``), replicated so the driver can reason
-    about shuffle-partition placement without a Spark job. Standard public
-    Murmur3_x86_32 finalization over the 4-byte little-endian value."""
-    k1 = (i & 0xFFFFFFFF) * 0xCC9E2D51 & 0xFFFFFFFF
-    k1 = ((k1 << 15) | (k1 >> 17)) & 0xFFFFFFFF
-    k1 = (k1 * 0x1B873593) & 0xFFFFFFFF
-    h1 = (seed ^ k1) & 0xFFFFFFFF
-    h1 = ((h1 << 13) | (h1 >> 19)) & 0xFFFFFFFF
-    h1 = (h1 * 5 + 0xE6546B64) & 0xFFFFFFFF
-    h1 ^= 4  # length in bytes
-    h1 ^= h1 >> 16
-    h1 = (h1 * 0x85EBCA6B) & 0xFFFFFFFF
-    h1 ^= h1 >> 13
-    h1 = (h1 * 0xC2B2AE35) & 0xFFFFFFFF
-    h1 ^= h1 >> 16
-    return h1 - (1 << 32) if h1 >= (1 << 31) else h1  # signed int32
 
 
 _BUCKET_REMAP_CACHE: dict[int, list[int]] = {}
@@ -291,6 +273,13 @@ class LakeTable:
     ) -> "LakeTable":
         if key not in schema.fieldNames():
             raise ValueError(f"key column {key!r} not in schema")
+        key_type = schema[key].dataType.simpleString()
+        if key_type not in KEY_TYPES:
+            # lookups and bloom probes hash keys on the driver (lake.hashing)
+            raise ValueError(
+                f"key column {key!r} has type {key_type}; "
+                f"supported key types: {', '.join(KEY_TYPES)}"
+            )
         os.makedirs(os.path.join(root, "_meta"), exist_ok=True)
         os.makedirs(os.path.join(root, "data"), exist_ok=True)
         t = cls(spark, root)
@@ -902,15 +891,16 @@ class LakeTable:
         (``build_blooms``) that excludes every probed key are skipped
         entirely — the MOR delta-chain defense: a 1-base + N-delta bucket
         reads only the dirs that might hold a probed key. Dirs without a
-        sidecar always scan (safe default)."""
+        sidecar always scan (safe default).
+
+        Planning runs on the driver: buckets and bloom bits come from the
+        driver ports of Spark's hashes (``lake.hashing``), and a
+        ``get_spark`` session lists the chosen dirs on the driver, so the
+        first Spark job is the caller's action on the returned frame."""
         snap = self.snapshot()
         key, nb = snap["table"]["key"], snap["table"]["n_buckets"]
-        kdf = self.spark.createDataFrame(
-            [(k,) for k in keys], T.StructType([self.current_schema(snap)[key]])
-        )
-        buckets = sorted(
-            r["b"] for r in kdf.select(bucket_expr(key, nb).alias("b")).distinct().collect()
-        )
+        dtype = self.current_schema(snap)[key].dataType.simpleString()
+        buckets = sorted({bucket_of(k, nb, dtype) for k in keys})
         skip: "set[str] | None" = None
         if use_blooms:
             from omicidx_etl_spark.lake.bloom import dirs_to_skip
@@ -1364,7 +1354,10 @@ class LakeTable:
             # keep AQE (skew splitting / coalescing matter there).
             # SPARK_GRAFT_MOR_WRITE_AQE=1 reverts. The engine submits no
             # concurrent Spark jobs, so the session-conf flip cannot leak
-            # into a sibling query's planning.
+            # into a sibling query's planning: replay's prefetch thread only
+            # builds the next batch's read, and get_spark's
+            # parallelPartitionDiscovery.threshold keeps that listing on the
+            # driver however many paths it names.
             sess_conf = self.spark.conf
             prev_aqe = sess_conf.get("spark.sql.adaptive.enabled", "true")
             flip_aqe = (
@@ -1867,6 +1860,10 @@ class LakeTable:
     def widen_column(self, name: str, dtype: T.DataType) -> None:
         snap = self.snapshot()
         cur = self.current_schema(snap)
+        if name == snap["table"]["key"] and cur[name].dataType != dtype:
+            # xxhash64 hashes int and bigint differently: a widened key
+            # would bucket new rows away from their existing versions
+            raise ValueError("cannot widen the bucket key column")
         fields = []
         for f in cur.fields:
             if f.name == name:

@@ -82,6 +82,15 @@ def get_spark(
         # --- IO ---
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.files.maxPartitionBytes", "128m")
+        # List a read's input paths on the driver however many there are.
+        # Past the default threshold (32 paths) Spark lists them with a
+        # Spark job; a manifest-resolved lake read names one dir per file
+        # group (16 buckets x base + 4 deltas = 80), and on a host-local
+        # lake that job (40-80 tasks, 137-340 ms measured on 4 cores)
+        # only adds scheduling to what the driver lists in milliseconds.
+        # It also keeps replay's prefetch read job-free
+        # (cdc/replay.py _mk_batch).
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1))
         # Vectorized-reader batch rows (default 4096): the engine's rows
         # carry kB-scale token arrays, so a 4096-row column batch is tens of
         # MB of short-lived large arrays per task — at 32 concurrent tasks

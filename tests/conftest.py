@@ -39,3 +39,26 @@ def spark():
                   extra_conf=extra)
     yield s
     s.stop()
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn()`` under a fresh job group and returns
+    ``(fn(), number of Spark jobs it submitted)``, read from the status
+    tracker once the listener bus has delivered every job-start event."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(fn):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -109,6 +109,23 @@ def test_dirs_to_skip_is_conservative(table):
     assert not (skip & holding)
 
 
+def test_dirs_to_skip_submits_no_spark_job(table, count_jobs):
+    """The probe hashes keys on the driver (lake.hashing), so choosing the
+    dirs to skip costs no Spark job."""
+    table.build_blooms()
+    from omicidx_etl_spark.lake.table import _norm_entry
+
+    dirs = [
+        fe["dir"]
+        for raw in table.snapshot()["buckets"].values()
+        for e in [_norm_entry(raw)]
+        for fe in ([e["base"]] if e["base"] else []) + e["deltas"]
+    ]
+    skip, n_jobs = count_jobs(lambda: dirs_to_skip(table, ["doc_00000002", "nope"], dirs))
+    assert n_jobs == 0
+    assert skip  # the other single-key deltas' blooms exclude both keys
+
+
 def test_bloom_sidecars_pruned_after_compaction(table):
     """Compaction/expiry replace data dirs; the next build_blooms pass
     must remove the dead dirs' sidecars (no unbounded _index/bloom

@@ -160,24 +160,19 @@ def test_multi_partition_adversarial_graphs(spark):
         spark.conf.set(key, prev)
 
 
-def test_job_count_does_not_grow_with_diameter(spark):
+def test_job_count_does_not_grow_with_diameter(spark, count_jobs):
     """The Spark job count is fixed by the plan, not by the graph: a
     12-node path and a 2000-node path run the same number of jobs (an
     iterative label propagation runs more rounds, so more jobs, on the
     longer path)."""
-    sc = spark.sparkContext
 
-    def jobs(n, group):
+    def jobs(n):
         df = spark.createDataFrame(
             [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
         )
-        sc.setJobGroup(group, group)
-        try:
-            assert len(D.connected_components(df).collect()) == n
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        rows, n_jobs = count_jobs(lambda: D.connected_components(df).collect())
+        assert len(rows) == n
+        return n_jobs
 
-    short, long_ = jobs(12, "cc_jobs_12"), jobs(2000, "cc_jobs_2000")
+    short, long_ = jobs(12), jobs(2000)
     assert short == long_, (short, long_)

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -120,6 +121,58 @@ def test_lookup_prunes_to_key_buckets(spark, tmp_path, monkeypatch):
     out = t.lookup(keys).collect()
     assert sorted(r.doc_id for r in out) == sorted(keys)
     assert seen["buckets"] is not None and 1 <= len(seen["buckets"]) <= 2
+
+
+def test_create_rejects_unhashable_key_type(spark, tmp_path):
+    """Keys are hashed on the driver (lake.hashing), which knows Spark's
+    byte encoding for string, int and bigint only; widening a key would
+    re-bucket new rows away from their old versions."""
+    schema = T.StructType(
+        [T.StructField("k", T.DoubleType()), T.StructField("v", T.StringType())]
+    )
+    with pytest.raises(ValueError, match="supported key types"):
+        LakeTable.create(spark, str(tmp_path / "d"), schema, key="k")
+    assert not LakeTable.exists(str(tmp_path / "d"))
+
+    schema = T.StructType(
+        [T.StructField("k", T.IntegerType()), T.StructField("v", T.StringType())]
+    )
+    t = LakeTable.create(spark, str(tmp_path / "i"), schema, key="k", n_buckets=2)
+    with pytest.raises(ValueError, match="bucket key"):
+        t.widen_column("k", T.LongType())
+
+
+def test_read_and_lookup_plan_without_spark_jobs(spark, tmp_path, count_jobs):
+    """Building a manifest read and a point lookup is driver work: a
+    16-bucket table with a base and 4 deltas per bucket (80 dirs, past
+    Spark's default 32-path parallel-listing threshold) reads without a
+    listing job, and a bloom-pruned lookup hashes its keys on the driver.
+    The first job is the caller's action."""
+    t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, key="doc_id", n_buckets=16)
+    t.overwrite(datagen.gen_sequences(spark, 400, seed=6))
+    for i in range(4):
+        ch = spark.createDataFrame(
+            [(1000 * (i + 1) + d, "U", f"doc_{d:08d}", [i, d], 2, "web")
+             for d in range(400)],
+            "seq long, op string, doc_id string, tokens array<int>, n_tok int, source string",
+        )
+        t.merge(dedup_latest(ch), mode="mor")
+    buckets = t.snapshot()["buckets"].values()
+    assert sum(1 + len(e["deltas"]) for e in buckets if e["base"]) == 80
+
+    df, n_jobs = count_jobs(t.read)
+    assert n_jobs == 0
+    assert df.count() == 400
+
+    t.build_blooms()
+    keys = ["doc_00000003", "doc_00000077", "doc_00000150", "doc_00000399"]
+    out, n_jobs = count_jobs(lambda: t.lookup(keys))
+    assert n_jobs == 0
+    rows, n_jobs = count_jobs(out.collect)
+    assert n_jobs > 0  # the counter sees the action's jobs
+    assert sorted((r.doc_id, list(r.tokens)) for r in rows) == [
+        (k, [3, int(k[4:])]) for k in keys
+    ]
 
 
 def test_sorted_compact_clusters_rowgroups(spark, tmp_path):
