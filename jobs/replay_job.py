@@ -40,7 +40,7 @@ def main() -> None:
                    help="batch replay: run in-flight exact corpus dedup "
                         "(cdc.canonicalize) every N batches")
     p.add_argument("--dedup", default="max_by",
-                   choices=["max_by", "window", "salted_window", "prefilter"])
+                   choices=["max_by", "prefilter"])
     p.add_argument("--no-quarantine", action="store_true",
                    help="streaming: fail the stream on a poison batch instead "
                         "of parking it under <table>/_quarantine/")

@@ -12,13 +12,14 @@ Layout
                  the MERGE INTO substrate (Iceberg jar is unavailable
                  offline; same semantics, same API shape).
 - ``cdc``        The replay engine: latest-per-key event dedup (map-side
-                 combinable ``max_by`` aggregation, salted-window variant),
-                 tombstone handling, bucket-pruned copy-on-write merge.
+                 combinable ``max_by`` aggregation or a broadcast winner
+                 join, both from ``operators.cdc_ops``), tombstone
+                 handling, bucket-pruned copy-on-write merge.
 - ``streaming``  Structured Streaming replay: ``readStream`` over the
                  change-log directory + ``foreachBatch`` idempotent merge,
                  checkpoint-resumable.
 - ``operators``  The relational operator library mirroring the reference's
-                 consolidation SQL (SURVEY.md §2): window dedup, joins,
+                 consolidation SQL (SURVEY.md §2): latest-per-key dedup, joins,
                  explode-bridges, unions, staging coercions, views.
 - ``functions``  Scalar/column function library + training-data-pipeline
                  ops: exact/MinHash/SimHash dedup, similarity search,

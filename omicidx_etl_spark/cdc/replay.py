@@ -11,33 +11,12 @@ Semantics (transcribed from the reference, re-expressed Spark-first):
   (``omicidx_etl/sra/catalog.py:291-297``) become the LakeTable's atomic
   per-app batch watermark.
 
-Dedup strategies
-----------------
-``max_by`` (default): ``groupBy(key).agg(max_by(struct(*), seq))``.
-  Hash aggregation with **map-side partial combine** — every hot key is
-  pre-reduced inside each input partition before the shuffle, so Zipf-hot
-  keys never concentrate on one reducer. This is the skew answer for the
-  dedup stage: salting is built into the execution model (partial agg ≡
-  per-partition salt + final reduce) without a second shuffle.
-``window``: the literal transcription of the reference's W1 (row_number).
-  Correct but shuffles *all* events of a hot key to one task — kept for
-  parity testing and to demonstrate the skew difference in the bench.
-``salted_window``: two-phase explicit salt — window over (key, salt) then
-  final max_by over key. Useful when the payload is too wide for an
-  aggregation buffer; shown in the bench for the north rule's
-  "salted repartitioning" evidence.
-``prefilter``: two-pass winner join — a *narrow* aggregation (key, seq
-  only; Catalyst prunes the scan to two columns) finds each key's winning
-  seq, then the wide rows are inner-joined against the broadcast winner
-  set. The wide payload (kB-scale token arrays) never enters an
-  aggregation buffer or a shuffle — the cheapest path when the per-batch
-  distinct-key set fits a broadcast (~tens of MB; chunk sizes up to a few
-  million events). Skew-immune twice over: the narrow agg partial-combines
-  hot keys map-side, and a broadcast join has no shuffle to skew. For
-  chunks whose winner set exceeds broadcast size, use ``max_by``.
-  Precondition: ``seq`` is unique per key within the batch (true for any
-  WAL/binlog feed, where seq is the log offset) — a (key, seq) tie would
-  surface both rows where the other strategies arbitrarily keep one.
+Dedup: ``dedup_latest`` picks one of the two plans in
+``operators/cdc_ops.py`` — ``max_by`` (default; the map-side combinable
+aggregate, always correct) or ``prefilter`` (narrow winner aggregation +
+broadcast join, so kB-scale payloads never shuffle; needs ``seq`` unique
+per key within the batch — true for any WAL/binlog feed, where seq is the
+log offset — and a winner set that fits a broadcast).
 """
 
 from __future__ import annotations
@@ -49,12 +28,13 @@ from typing import TYPE_CHECKING, Any
 if TYPE_CHECKING:
     from omicidx_etl_spark.progress import LogProgress
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from omicidx_etl_spark.lake.table import _WIDEN_OK, BUCKET_COL, LakeTable, bucket_expr
+from omicidx_etl_spark.lake.table import _WIDEN_OK, LakeTable
+from omicidx_etl_spark.operators import cdc_ops as C
 
-DEFAULT_SALT = 16
+DEDUP_METHODS = ("max_by", "prefilter")
 
 
 def evolve_to_batch_schema(
@@ -133,44 +113,18 @@ def dedup_latest(
     key: str = "doc_id",
     seq: str = "seq",
     method: str = "max_by",
-    n_salt: int = DEFAULT_SALT,
 ) -> DataFrame:
     """Collapse a change set to the single latest event per key.
 
     ``seq`` must be a total order (unique); ties are impossible by contract
-    (a WAL LSN). Output columns == input columns. ``method="none"`` returns
-    the input unchanged — legal only for merge-on-read sinks, whose read
-    path reconciles duplicates itself.
+    (a WAL LSN). Output columns == input columns. ``method`` is one of
+    ``DEDUP_METHODS``; see ``operators/cdc_ops.py`` for the two plans.
     """
-    if method == "none":
-        return changes
-    cols = changes.columns
-    payload = [c for c in cols if c != key]
     if method == "max_by":
-        row = F.max_by(F.struct(*[F.col(c) for c in payload]), F.col(seq)).alias("__r")
-        agg = changes.groupBy(key).agg(row)
-        return agg.select(key, *[F.col(f"__r.{c}").alias(c) for c in payload]).select(*cols)
-    if method == "window":
-        w = Window.partitionBy(key).orderBy(F.col(seq).desc())
-        return (
-            changes.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-    if method == "salted_window":
-        salt = F.pmod(F.xxhash64(F.col(seq)), F.lit(n_salt))
-        w = Window.partitionBy(key, "__salt").orderBy(F.col(seq).desc())
-        local = (
-            changes.withColumn("__salt", salt)
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", "__salt")
-        )
-        return dedup_latest(local, key=key, seq=seq, method="max_by")
+        return C.latest_per_key(changes, [key], seq)
     if method == "prefilter":
-        winners = changes.select(key, seq).groupBy(key).agg(F.max(seq).alias(seq))
-        return changes.join(F.broadcast(winners), [key, seq], "inner").select(*cols)
-    raise ValueError(f"unknown dedup method {method!r}")
+        return C.latest_by_winner_join(changes, key, seq)
+    raise ValueError(f"unknown dedup method {method!r}; expected one of {DEDUP_METHODS}")
 
 
 def replay_batch(
@@ -204,8 +158,10 @@ def replay_batch(
     ``table.read(branch=...)``, then ``table.publish(branch)`` — main
     consumers never observe an unaudited batch.
     """
-    if dedup_method == "none" and mode != "mor":
-        raise ValueError("dedup_method='none' requires mode='mor'")
+    if dedup_method not in DEDUP_METHODS:
+        raise ValueError(
+            f"unknown dedup method {dedup_method!r}; expected one of {DEDUP_METHODS}"
+        )
     key = key or table.key
     t0 = time.time()
     evolved: list[str] = []
@@ -219,62 +175,13 @@ def replay_batch(
         F.max(seq).alias("seq_hi"),
         F.sum(F.when(F.col(op_col) == delete_value, 1).otherwise(0)).alias("delete_events"),
     )
-    # Fused single-shuffle path (mor + max_by, opt-in): partition ONCE by
-    # the table's bucket transform, then group by (bucket, key) — bucket is
-    # a pure function of key, so the groups are identical to groupBy(key),
-    # and HashPartitioning(bucket) already satisfies the aggregation's
-    # ClusteredDistribution([bucket, key]): Catalyst inserts no second
-    # exchange, and the dedup shuffle doubles as the write clustering
-    # (merge(pre_bucketed=True) stages without its own repartition). The
-    # wide payload crosses the exchange layer once per batch instead of
-    # twice (plan locked by tests/test_plans.py::
-    # test_fused_replay_single_shuffle).
-    #
-    # DEFAULT OFF — measured, not assumed: on this single box (tmpfs
-    # shuffle = memcpy) interleaved A/B at 500k events ran the fused path
-    # ~10-15% SLOWER at both 1 and 4 pinned cores (best-of: 24.3 vs 21.3 s
-    # at 1 core, 8.5 vs 7.6 s at 4) — the second exchange it removes
-    # carries only the post-dedup winners (~10% of volume, ~free as
-    # memcpy), while fusing couples the final aggregation to the
-    # bucket-count write stage instead of the cores-sized shuffle. On a
-    # REAL cluster, where an exchange is network + disk rather than
-    # memcpy, eliminating a full materialized exchange of the winner set
-    # is the textbook win — hence kept as an opt-in
-    # (SPARK_GRAFT_FUSED_REPLAY=1) rather than deleted.
-    fused = (
-        mode == "mor"
-        and dedup_method == "max_by"
-        and not fanout
-        and os.environ.get("SPARK_GRAFT_FUSED_REPLAY", "0") == "1"
-    )
     if dedup_method == "prefilter":
-        # The winner aggregation is a narrow (key, seq, op) scan of its own;
-        # hang the observation there so the metrics see every event exactly
-        # once (on the wide side they would ride both halves of the
-        # self-join). The wide side stays observation-free.
+        # The observation rides the narrow winner scan, which sees every
+        # event exactly once; the wide side stays observation-free.
         narrow = changes.select(key, seq, op_col).observe(obs, *obs_cols)
-        winners = narrow.groupBy(key).agg(F.max(seq).alias(seq))
-        latest = changes.join(F.broadcast(winners), [key, seq], "inner").select(
-            *changes.columns
-        )
-    elif fused:
-        nb = table.n_buckets
-        cols = changes.columns
-        payload = [c for c in cols if c != key]
-        pre = (
-            changes.withColumn(BUCKET_COL, bucket_expr(key, nb))
-            .observe(obs, *obs_cols)
-            .repartition(F.col(BUCKET_COL))
-        )
-        row = F.max_by(F.struct(*[F.col(c) for c in payload]), F.col(seq)).alias("__r")
-        latest = (
-            pre.groupBy(BUCKET_COL, key)
-            .agg(row)
-            .select(BUCKET_COL, key, *[F.col(f"__r.{c}").alias(c) for c in payload])
-        )
+        latest = C.latest_by_winner_join(changes, key, seq, winners_from=narrow)
     else:
-        changes = changes.observe(obs, *obs_cols)
-        latest = dedup_latest(changes, key=key, seq=seq, method=dedup_method)
+        latest = dedup_latest(changes.observe(obs, *obs_cols), key=key, seq=seq)
     snap = table.merge(
         latest,
         op_col=op_col,
@@ -284,7 +191,6 @@ def replay_batch(
         mode=mode,
         fanout=fanout,
         branch=branch,
-        pre_bucketed=fused,
         extra_summary=lambda: (
             dict(_obs_stats_safe(obs), schema_evolved=evolved)
             if evolved

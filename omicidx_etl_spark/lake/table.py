@@ -80,6 +80,7 @@ from omicidx_etl_spark.lake.hashing import (
     bucket_expr,
     bucket_of,
 )
+from omicidx_etl_spark.operators import cdc_ops as C
 
 BUCKET_COL = "__bucket"
 SEQ_COL = "__seq"  # per-row version (WAL LSN of the winning event)
@@ -94,7 +95,7 @@ DELETED_COL = "__deleted"  # persisted tombstone flag (merge-on-read delete)
 # session codec (zstd) — long-lived, read-optimized storage where the ratio
 # pays off on compressible corpora. Same tiering as Iceberg's
 # write.delete.* vs write.* codec split.
-DELTA_CODEC = os.environ.get("SPARK_GRAFT_DELTA_CODEC", "snappy")
+DELTA_CODEC = "snappy"
 
 # Broadcast gate for the MOR read's winner-prefilter reconciliation (see
 # read/_reconcile_strategy): total dirty rows above this fall back to the
@@ -765,10 +766,8 @@ class LakeTable:
             self.last_reconcile = strategy
             if strategy == "prefilter":
                 # Winner-prefilter reconciliation (guide §2.3: shuffle keys,
-                # not payloads): a NARROW (key, __seq) aggregation — column-
-                # pruned to two columns at the scans, map-side combinable —
-                # finds each key's winning seq; the wide rows are then
-                # broadcast-inner-joined against the winner set, so the
+                # not payloads): the narrow (key, __seq) winner aggregation
+                # is column-pruned to two columns at the scans, so the
                 # kB-scale payloads never enter an aggregation buffer or a
                 # shuffle (measured: the max_by path shuffled 815k full-width
                 # rows ≈ 800 MB to count a 4-delta bench table; this path
@@ -778,25 +777,10 @@ class LakeTable:
                 # _reconcile_strategy (re-delivered events overlap an older
                 # group's seq range and fall back to max_by) — and the
                 # winner set must fit a broadcast (row-count gate from the
-                # manifest). Same payload-vs-metadata split as the replay
-                # writer's 'prefilter' dedup strategy.
-                winners = (
-                    dirty.select(key, SEQ_COL)
-                    .groupBy(key)
-                    .agg(F.max(SEQ_COL).alias(SEQ_COL))
-                )
-                dirty = dirty.join(F.broadcast(winners), [key, SEQ_COL], "inner").select(
-                    *[f.name for f in cur_phys.fields]
-                )
+                # manifest).
+                dirty = C.latest_by_winner_join(dirty, key, SEQ_COL)
             else:
-                payload = [c for c in dirty.columns if c != key]
-                row = F.max_by(F.struct(*[F.col(c) for c in payload]), F.col(SEQ_COL)).alias("__r")
-                dirty = (
-                    dirty.groupBy(key)
-                    .agg(row)
-                    .select(key, *[F.col(f"__r.{c}").alias(c) for c in payload])
-                    .select(*[f.name for f in cur_phys.fields])
-                )
+                dirty = C.latest_per_key(dirty, [key], SEQ_COL)
         if clean is None and dirty is None:
             out = self.spark.createDataFrame([], cur_phys)
         elif clean is None:
@@ -1151,15 +1135,7 @@ class LakeTable:
             for p in parts[1:]:
                 base = base.unionByName(p)
 
-        payload = [c for c in base.columns if c != key]
-        row = F.max_by(
-            F.struct(*[F.col(c) for c in payload]), F.col(SEQ_COL)
-        ).alias("__r")
-        net = (
-            base.groupBy(key)
-            .agg(row)
-            .select(key, *[F.col(f"__r.{c}").alias(c) for c in payload])
-        )
+        net = C.latest_per_key(base, [key], SEQ_COL)
         out = net.withColumn(
             "_change_type",
             F.when(
@@ -1238,7 +1214,6 @@ class LakeTable:
         mode: str = "cow",
         fanout: bool = False,
         branch: str | None = None,
-        pre_bucketed: bool = False,
         on_violation: str = "fail",
     ) -> dict[str, Any]:
         """MERGE INTO this table USING ``changes`` ON key, versioned:
@@ -1271,14 +1246,6 @@ class LakeTable:
         until ``publish``. Conflict validation and rebase run against the
         BRANCH head, so concurrent main commits don't fail branch writes —
         they surface at ``publish`` time instead.
-
-        ``pre_bucketed=True`` (mor only): the caller promises ``changes``
-        already carries ``BUCKET_COL`` (this table's transform) AND is
-        hash-partitioned by it — the fused replay path, where the dedup
-        aggregation's shuffle doubles as the write clustering, so the wide
-        payload crosses the wire exactly once per batch. The merge then
-        writes without its own repartition (each task holds whole buckets,
-        so the one-file-per-bucket layout is preserved).
         """
         refs = self._read_refs() if branch is not None else {}
         snap = (
@@ -1291,14 +1258,7 @@ class LakeTable:
         key, nb = snap["table"]["key"], snap["table"]["n_buckets"]
         cur = self.current_schema(snap)
 
-        if pre_bucketed:
-            if mode != "mor":
-                raise ValueError("pre_bucketed requires mode='mor'")
-            if BUCKET_COL not in changes.columns:
-                raise ValueError(f"pre_bucketed changes must carry {BUCKET_COL}")
-            ch = changes
-        else:
-            ch = changes.withColumn(BUCKET_COL, bucket_expr(key, nb))
+        ch = changes.withColumn(BUCKET_COL, bucket_expr(key, nb))
         is_del = F.coalesce(F.col(op_col) == F.lit(delete_value), F.lit(False))
         have = set(ch.columns)
         user_cols = [
@@ -1337,9 +1297,7 @@ class LakeTable:
             # fanout=True skips the pre-write shuffle — each input task
             # writes into the bucket dirs it touches (Iceberg fanout writer),
             # so the batch payload crosses the wire zero times, at the cost
-            # of tasks×buckets files per commit. pre_bucketed input is
-            # already clustered by the dedup shuffle — writing as-is keeps
-            # one file per bucket with no second exchange. Default keeps the
+            # of tasks×buckets files per commit. Default keeps the
             # clustered one-file-per-bucket layout via the merge's own
             # shuffle.
             # AQE has nothing to offer this plan — the join is an explicit
@@ -1351,24 +1309,22 @@ class LakeTable:
             # (measured ~0.25 s/batch on the 2M-event replay: 19.1 vs
             # 20.1 s with AQE on, clean-steal A/B). Scoped OFF for just
             # this action and restored; reads, COW merges and compaction
-            # keep AQE (skew splitting / coalescing matter there).
-            # SPARK_GRAFT_MOR_WRITE_AQE=1 reverts. The engine submits no
-            # concurrent Spark jobs, so the session-conf flip cannot leak
+            # keep AQE (skew splitting / coalescing matter there). On a
+            # 4-core host, trickle_mixed latency_s measured ~10% worse
+            # without the flip (10 interleaved pairs). The engine submits
+            # no concurrent Spark jobs, so the session-conf flip cannot leak
             # into a sibling query's planning: replay's prefetch thread only
             # builds the next batch's read, and get_spark's
             # parallelPartitionDiscovery.threshold keeps that listing on the
             # driver however many paths it names.
             sess_conf = self.spark.conf
             prev_aqe = sess_conf.get("spark.sql.adaptive.enabled", "true")
-            flip_aqe = (
-                os.environ.get("SPARK_GRAFT_MOR_WRITE_AQE", "0") != "1"
-                and str(prev_aqe).lower() == "true"
-            )
+            flip_aqe = str(prev_aqe).lower() == "true"
             try:
                 if flip_aqe:
                     sess_conf.set("spark.sql.adaptive.enabled", "false")
                 rel = self._stage_write(
-                    delta, new_sid, nb, shuffle=not (fanout or pre_bucketed),
+                    delta, new_sid, nb, shuffle=not fanout,
                     codec=DELTA_CODEC,
                 )
             finally:

@@ -14,31 +14,60 @@ from pyspark.sql import functions as F
 def latest_per_key(
     df: DataFrame,
     key_cols: list[str],
-    order_cols: list[str],
-    method: str = "max_by",
+    order_cols: str | list[str],
 ) -> DataFrame:
     """W1: latest-version-per-key dedup — the reference's
     ``row_number() OVER (PARTITION BY key ORDER BY recency DESC) … rn=1``
-    (``omicidx_etl/sql/010_raw_to_parquet.sql:36-43``).
+    (``omicidx_etl/sql/010_raw_to_parquet.sql:36-43``). Output columns ==
+    input columns.
 
-    ``order_cols`` must be a deterministic total order (append a unique id
-    as tie-break). ``max_by`` runs as a hash aggregate with map-side partial
-    combine (skew-immune); ``window`` is the literal transcription.
+    This module is the engine's only spelling of "latest row per key", as
+    two plans:
+
+    * ``latest_per_key``: one ``max_by(struct(payload), order)`` hash
+      aggregate. Map-side partial combine pre-reduces every hot key inside
+      each input partition before the shuffle, so Zipf-hot keys never
+      concentrate on one reducer (partial agg is a per-partition salt plus
+      a final reduce, with no second shuffle). Always correct.
+    * :func:`latest_by_winner_join`: a narrow ``max(seq)`` per key, then a
+      broadcast inner join on ``(key, seq)``. The wide payload never
+      enters an aggregation buffer or a shuffle. Preconditions: ``seq`` is
+      unique per key in the frame, and the winner set fits a broadcast.
+
+    ``order_cols`` must be a deterministic total order: a single column
+    name (compared as is), or a list of names compared left to right as a
+    struct (append a unique id as tie-break).
     """
-    payload = [c for c in df.columns if c not in key_cols]
-    if method == "max_by":
+    if isinstance(order_cols, str):
+        ordk = F.col(order_cols)
+    else:
         ordk = F.struct(*[F.col(c) for c in order_cols])
-        row = F.max_by(F.struct(*[F.col(c) for c in payload]), ordk).alias("__r")
-        agg = df.groupBy(*key_cols).agg(row)
-        return agg.select(
-            *key_cols, *[F.col(f"__r.{c}").alias(c) for c in payload]
-        ).select(*df.columns)
-    w = Window.partitionBy(*key_cols).orderBy(*[F.col(c).desc() for c in order_cols])
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    payload = [c for c in df.columns if c not in key_cols]
+    row = F.max_by(F.struct(*[F.col(c) for c in payload]), ordk).alias("__r")
+    agg = df.groupBy(*key_cols).agg(row)
+    return agg.select(
+        *key_cols, *[F.col(f"__r.{c}").alias(c) for c in payload]
+    ).select(*df.columns)
+
+
+def latest_by_winner_join(
+    df: DataFrame, key: str, seq: str, winners_from: DataFrame | None = None
+) -> DataFrame:
+    """Latest row per ``key`` by a winner join (see :func:`latest_per_key`
+    for when it applies): ``max(seq)`` per key over the two-column
+    projection — Catalyst prunes the scan to ``(key, seq)`` — then the
+    wide rows of ``df`` inner-join the broadcast winner set.
+
+    A duplicate ``(key, seq)`` row in ``df`` surfaces twice, where
+    ``latest_per_key`` keeps one.
+
+    ``winners_from`` aggregates over a frame the caller supplies instead of
+    ``df`` (it must hold the same ``(key, seq)`` rows), so a caller can hang
+    an ``Observation`` on the narrow side alone: on ``df`` it would ride
+    both halves of the self-join and count every row twice."""
+    narrow = df if winners_from is None else winners_from
+    winners = narrow.select(key, seq).groupBy(key).agg(F.max(seq).alias(seq))
+    return df.join(F.broadcast(winners), [key, seq], "inner").select(*df.columns)
 
 
 def tombstone_filter(df: DataFrame, op_col, delete_value) -> DataFrame:
@@ -55,13 +84,12 @@ def replay_table(
     order_cols: list[str],
     op_col: str,
     delete_value: str,
-    method: str = "max_by",
 ) -> DataFrame:
     """Full CDC consolidation of a change set into current table state:
     latest event per key wins, then tombstones drop the key entirely —
     the reference's whole 010_raw_to_parquet recipe in one operator."""
     return tombstone_filter(
-        latest_per_key(df, key_cols, order_cols, method=method),
+        latest_per_key(df, key_cols, order_cols),
         op_col,
         delete_value,
     )

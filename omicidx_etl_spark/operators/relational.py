@@ -381,11 +381,11 @@ def salted_join(
 
     AQE's ``skewJoin`` does this adaptively for sort-merge joins when
     post-shuffle partition stats reveal the skew; this operator is the
-    explicit form for planned-ahead hot keys (same role as the salted
-    merge in ``cdc.replay``). Caveat: big-side rows identical in EVERY
-    column collide onto one salt — add a line-id column first if exact
-    duplicates dominate the hot key. Reference join-consolidation shape:
-    `omicidx_etl/sql/020_staging_tables.sql` joins.
+    explicit form for planned-ahead hot keys. Caveat: big-side rows
+    identical in EVERY column collide onto one salt — add a line-id column
+    first if exact duplicates dominate the hot key. Reference
+    join-consolidation shape: `omicidx_etl/sql/020_staging_tables.sql`
+    joins.
     """
     keys = [on] if isinstance(on, str) else list(on)
     salt = F.pmod(F.xxhash64(*[F.col(c) for c in big.columns]), F.lit(n_salts))

@@ -255,7 +255,7 @@ def w1_latest_per_key(spark, sf_dir):
     """W1: latest-version-per-key (the engine's core dedup,
     ``010_raw_to_parquet.sql:36-43``) via map-side-combinable max_by."""
     ev = _t(spark, sf_dir, "events")
-    out = C.latest_per_key(ev, ["user_id"], ["ts", "event_id"], method="max_by")
+    out = C.latest_per_key(ev, ["user_id"], ["ts", "event_id"])
     return out.select(
         "user_id",
         "event_id",
@@ -315,7 +315,7 @@ def w3_changelog_interval(spark, sf_dir):
         (F.col("ts") >= F.lit("2024-01-10").cast("timestamp"))
         & (F.col("ts") < F.lit("2024-01-20").cast("timestamp"))
     )
-    out = C.latest_per_key(ev, ["user_id"], ["ts", "event_id"], method="max_by")
+    out = C.latest_per_key(ev, ["user_id"], ["ts", "event_id"])
     return out.select(
         "user_id",
         "event_id",

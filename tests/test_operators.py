@@ -14,11 +14,28 @@ def test_dedup_strategies_agree(spark):
     ch = datagen.gen_changes(spark, 5000, 200, seed=31)
     outs = {
         m: dedup_latest(ch, method=m).orderBy("doc_id").collect()
-        for m in ["max_by", "window", "salted_window", "prefilter"]
+        for m in ["max_by", "prefilter"]
     }
-    assert (
-        outs["max_by"] == outs["window"] == outs["salted_window"] == outs["prefilter"]
-    )
+    assert outs["max_by"] == outs["prefilter"]
+
+
+def test_latest_row_per_key_only_in_cdc_ops():
+    """operators/cdc_ops.py is the engine's only spelling of "latest row
+    per key": no other engine module may call ``F.max_by(`` or join on
+    ``[key, seq]`` / ``[key, SEQ_COL]`` (the winner-join plan)."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "omicidx_etl_spark"
+    pattern = re.compile(r"F\.max_by\(|\[\s*key\s*,\s*(?:seq|SEQ_COL)\s*\]")
+    hits = [
+        f"{path.relative_to(pkg)}:{n}: {line.strip()}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path.relative_to(pkg).as_posix() != "operators/cdc_ops.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert hits == [], hits
 
 
 def test_surrogate_ids_scalable_equals_window(spark):

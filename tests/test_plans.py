@@ -399,66 +399,33 @@ def test_grouped_sample_window_is_per_stratum(spark):
     assert "SinglePartition" not in plan
 
 
-def test_fused_replay_single_shuffle(spark, tmp_path):
-    """The mor+max_by replay path must shuffle the wide payload exactly
-    ONCE per batch: the dedup aggregation's bucket partitioning doubles as
-    the write clustering (merge(pre_bucketed=True)), so there is no second
-    Exchange between the aggregate and the parquet write — the r3 plan
-    paid two full-payload exchanges per batch."""
-    from omicidx_etl_spark import datagen
-    from omicidx_etl_spark.lake.table import BUCKET_COL, LakeTable, bucket_expr
-    from pyspark.sql import functions as F
-
-    ch = datagen.gen_changes(spark, 5000, 300, seed=7)
-    nb = 16
-    pre = ch.withColumn(BUCKET_COL, bucket_expr("doc_id", nb)).repartition(
-        nb, F.col(BUCKET_COL)
-    )
-    payload = [c for c in ch.columns if c != "doc_id"]
-    row = F.max_by(F.struct(*[F.col(c) for c in payload]), F.col("seq")).alias("__r")
-    latest = (
-        pre.groupBy(BUCKET_COL, "doc_id")
-        .agg(row)
-        .select(BUCKET_COL, "doc_id", *[F.col(f"__r.{c}").alias(c) for c in payload])
-    )
-    plan = latest._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1, plan[:1500]
-
-    # end-to-end (opt-in flag on): fused result identical to the reference
-    # window dedup, and the staged layout keeps one file per touched bucket
+def test_mor_replay_one_file_per_bucket(spark, tmp_path):
+    """The default mor replay stages exactly one parquet file per touched
+    bucket: the merge's bucket exchange gives every bucket its own write
+    task (``_bucket_remap``), so a batch never fans out into
+    tasks × buckets small files."""
     import os
 
-    root = str(tmp_path / "fused_t")
+    from omicidx_etl_spark import datagen
+    from omicidx_etl_spark.cdc.replay import replay_batch
+    from omicidx_etl_spark.lake.table import LakeTable
+
+    ch = datagen.gen_changes(spark, 5000, 300, seed=7)
+    root = str(tmp_path / "t")
     t = LakeTable.create(
         spark, root, ch.drop("seq", "op", "event_ts").schema, key="doc_id",
-        n_buckets=nb,
+        n_buckets=16,
     )
-    from omicidx_etl_spark.cdc.replay import replay_batch
+    replay_batch(t, ch, batch_id=0, app_id="r", mode="mor")
 
-    os.environ["SPARK_GRAFT_FUSED_REPLAY"] = "1"
-    try:
-        replay_batch(t, ch, batch_id=0, app_id="f", mode="mor", dedup_method="max_by")
-    finally:
-        os.environ.pop("SPARK_GRAFT_FUSED_REPLAY", None)
-    got = {r["doc_id"]: r["n_tok"] for r in t.read().collect()}
-
-    root2 = str(tmp_path / "win_t")
-    t2 = LakeTable.create(
-        spark, root2, ch.drop("seq", "op", "event_ts").schema, key="doc_id",
-        n_buckets=nb,
-    )
-    replay_batch(t2, ch, batch_id=0, app_id="w", mode="mor", dedup_method="window")
-    exp = {r["doc_id"]: r["n_tok"] for r in t2.read().collect()}
-    assert got == exp
-
-    snap = t.snapshot()
-    for b, entry in snap["buckets"].items():
-        for d in entry["deltas"]:
-            files = [
-                f for f in os.listdir(os.path.join(root, d["dir"]))
-                if f.endswith(".parquet")
-            ]
-            assert len(files) == 1, (b, files)
+    deltas = [d for e in t.snapshot()["buckets"].values() for d in e["deltas"]]
+    assert len(deltas) == 16
+    for d in deltas:
+        files = [
+            f for f in os.listdir(os.path.join(root, d["dir"]))
+            if f.endswith(".parquet")
+        ]
+        assert len(files) == 1, (d["dir"], files)
 
 
 def test_budget_select_no_single_partition_stage(spark):
