@@ -525,8 +525,7 @@ def ensure_change_log(spark, n_events: int, n_docs: int, seed: int, files: int) 
 
 def run_replay(spark, log_path: str, n_events: int, chunk: int, mode: str,
                n_buckets: int, workdir: str, dedup: str = "max_by",
-               fanout: bool = False, retries: int = 3,
-               max_batches: int | None = None) -> dict:
+               retries: int = 3, max_batches: int | None = None) -> dict:
     """Replay the whole log into a fresh LakeTable; return throughput facts."""
     from omicidx_etl_spark.cdc.replay import replay_log
     from omicidx_etl_spark.lake.table import LakeTable
@@ -542,8 +541,7 @@ def run_replay(spark, log_path: str, n_events: int, chunk: int, mode: str,
         s0 = _steal_jiffies()
         t0 = time.time()
         snaps = replay_log(spark, tbl, log_path, chunk_events=chunk, mode=mode,
-                           dedup_method=dedup, fanout=fanout,
-                           max_batches=max_batches)
+                           dedup_method=dedup, max_batches=max_batches)
         dt = time.time() - t0
         stolen = _steal_frac(_steal_jiffies() - s0, dt)
         rows = tbl.read().count()
@@ -555,7 +553,6 @@ def run_replay(spark, log_path: str, n_events: int, chunk: int, mode: str,
             "final_rows": rows,
             "mode": mode,
             "dedup": dedup,
-            "fanout": fanout,
             "steal_frac": round(stolen, 4),
         }
         if best is None or res["events_per_sec"] > best["events_per_sec"]:
@@ -731,7 +728,7 @@ def replay_only(args) -> None:
     warm_chunk = min(args.chunk, 30_000)
     run_replay(spark, log_path, warm_chunk, warm_chunk, args.mode,
                args.buckets, os.path.join(workdir, "warm"), dedup=args.dedup,
-               fanout=args.fanout, retries=1, max_batches=1)
+               retries=1, max_batches=1)
     _mark("warmup")
     # Pre-fault the probe buffers while still unpinned: page supply can run
     # at ~6-12 MB/s in bad windows, and that cost must land here, not
@@ -767,8 +764,7 @@ def replay_only(args) -> None:
     _mark("probes")
     # single attempt here: the parent scaling loop handles retries
     res = run_replay(spark, log_path, args.events, args.chunk, args.mode,
-                     args.buckets, workdir, dedup=args.dedup,
-                     fanout=args.fanout, retries=1)
+                     args.buckets, workdir, dedup=args.dedup, retries=1)
     _mark("timed-replay")
     # Quiesce the JVM BEFORE the post-run probe: at hi core counts the
     # still-live executor's teardown work (GC, shuffle cleaner, temp-file
@@ -871,7 +867,7 @@ def _seg_files(n_events: int) -> int:
 
 
 def _one_scaling_sample(cores: int, n_events: int, n_docs: int, chunk: int,
-                        mode: str, dedup: str, fanout: bool,
+                        mode: str, dedup: str,
                         pin_base: int, probe_floor: float = 0.0,
                         budget_s: float = 1e9,
                         exp_rate: float = 3000.0,
@@ -918,7 +914,7 @@ def _one_scaling_sample(cores: int, n_events: int, n_docs: int, chunk: int,
         "--dedup", dedup, "--pin", "--pin-base", str(pin_base),
         "--probe-floor", str(probe_floor),
         "--drain-timeout", str(drain_t), "--probe-wait", str(probe_w),
-    ] + (["--fanout"] if fanout else [])
+    ]
     env = dict(os.environ, SPARK_GRAFT_CPUS=str(cores))
     # Bounded heap for the sample JVM: in bad windows the host supplies
     # fresh pages at ~6-12 MB/s, so every GB the JVM grows into is minutes
@@ -954,7 +950,7 @@ def _median(xs: list[float]) -> float:
 
 def scaling_study(n_events: int, n_docs: int, chunk: int, mode: str,
                   n_lo: int, n_hi: int, dedup: str = "max_by",
-                  fanout: bool = False, deadline: float | None = None,
+                  deadline: float | None = None,
                   fallback_events: int = 0,
                   escalate_ladder: list[int] | None = None) -> dict:
     """Same job, two parallelism levels, fresh (JIT-warmed) JVM each.
@@ -1178,7 +1174,7 @@ def scaling_study(n_events: int, n_docs: int, chunk: int, mode: str,
         second_reserve = int(1.3 * n_events / (_r * second_cores) + _pad)
         _tw1 = time.time()
         first = _one_scaling_sample(first_cores, n_events, n_docs, chunk,
-                                    mode, dedup, fanout, pin_base=base,
+                                    mode, dedup, pin_base=base,
                                     probe_floor=floor,
                                     budget_s=remaining - second_reserve,
                                     exp_rate=max(3000.0, 0.6 * seen_rate),
@@ -1188,7 +1184,7 @@ def scaling_study(n_events: int, n_docs: int, chunk: int, mode: str,
             remaining = (deadline - time.time()) if deadline else 1e9
             _tw2 = time.time()
             second = _one_scaling_sample(second_cores, n_events, n_docs,
-                                         chunk, mode, dedup, fanout,
+                                         chunk, mode, dedup,
                                          pin_base=base, probe_floor=floor,
                                          budget_s=remaining,
                                          exp_rate=max(3000.0, 0.6 * seen_rate),
@@ -1382,8 +1378,6 @@ def main() -> None:
     # shuffle. Right for this job shape (winners-per-batch ~200k ≈ 5 MB
     # broadcast); use max_by when a batch's winner set exceeds broadcast size.
     p.add_argument("--dedup", default=os.environ.get("SPARK_GRAFT_BENCH_DEDUP", "prefilter"))
-    p.add_argument("--fanout", action="store_true",
-                   default=os.environ.get("SPARK_GRAFT_BENCH_FANOUT", "0") == "1")
     p.add_argument("--buckets", type=int, default=32)
     p.add_argument("--seed", type=int, default=42)
     p.add_argument("--files", type=int, default=128)
@@ -1428,8 +1422,7 @@ def main() -> None:
     log_path = ensure_change_log(spark, n_events, n_docs, args.seed, args.files)
     replay = run_replay(spark, log_path, n_events, chunk, args.mode,
                         args.buckets, os.path.join(CACHE, "replay_main"),
-                        dedup=args.dedup, fanout=args.fanout,
-                        retries=3 if _remaining() > 240 else 1)
+                        dedup=args.dedup, retries=3 if _remaining() > 240 else 1)
     _RESULT["replay"] = replay
     _RESULT["value"] = round(sum(q_times.values()) + replay["sec"], 3)
     # pre-build the scaling slice's log at full parallelism so the first
@@ -1509,7 +1502,7 @@ def main() -> None:
         # The study gets whatever wall budget remains (minus the watchdog's
         # grace); it returns partial gated evidence rather than looping.
         scaling = scaling_study(s_events, n_docs, s_chunk, args.mode, n_lo, n_hi,
-                                dedup=s_dedup, fanout=args.fanout,
+                                dedup=s_dedup,
                                 deadline=_T0 + BUDGET - 30,
                                 fallback_events=s_fallback,
                                 escalate_ladder=s_ladder)

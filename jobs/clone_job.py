@@ -37,7 +37,7 @@ try:
 except ModuleNotFoundError:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from omicidx_etl_spark.session import get_spark
 
 
 def main() -> int:
@@ -56,13 +56,7 @@ def main() -> int:
     )
     args = p.parse_args()
 
-    spark = (
-        SparkSession.builder.appName("lake-clone")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.parquet.compression.codec", "zstd")
-        .getOrCreate()
-    )
+    spark = get_spark("lake-clone")
 
     from omicidx_etl_spark.lake import LakeTable
 

@@ -32,7 +32,7 @@ try:
 except ModuleNotFoundError:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from omicidx_etl_spark.session import get_spark
 
 
 def main() -> None:
@@ -48,15 +48,7 @@ def main() -> None:
     p.add_argument("--batch-id", type=int, default=0)
     args = p.parse_args()
 
-    spark = (
-        SparkSession.builder.appName("corpus-canonicalize")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.parquet.compression.codec", "zstd")
-        .getOrCreate()
-    )
+    spark = get_spark("corpus-canonicalize")
 
     from omicidx_etl_spark.cdc import canonicalize
     from omicidx_etl_spark.lake import LakeTable

@@ -38,7 +38,7 @@ try:
 except ModuleNotFoundError:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from omicidx_etl_spark.session import get_spark
 
 
 def main() -> int:
@@ -51,12 +51,7 @@ def main() -> int:
     p.add_argument("--include-before", action="store_true")
     args = p.parse_args()
 
-    spark = (
-        SparkSession.builder.appName("lake-export-changes")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = get_spark("lake-export-changes")
 
     from omicidx_etl_spark.cdc import ChangelogSubscription
     from omicidx_etl_spark.lake import LakeTable

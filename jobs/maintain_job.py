@@ -40,7 +40,7 @@ try:
 except ModuleNotFoundError:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from omicidx_etl_spark.session import get_spark
 
 
 def main() -> None:
@@ -81,13 +81,7 @@ def main() -> None:
     if args.sort_by and args.zorder_by:
         p.error("--sort-by and --zorder-by are mutually exclusive")
 
-    spark = (
-        SparkSession.builder.appName("lake-maintain")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.parquet.compression.codec", "zstd")
-        .getOrCreate()
-    )
+    spark = get_spark("lake-maintain")
 
     from omicidx_etl_spark.lake import LakeTable
 

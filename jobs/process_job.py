@@ -21,7 +21,7 @@ import argparse
 import json
 import sys
 
-from pyspark.sql import SparkSession
+from omicidx_etl_spark.session import get_spark
 
 
 def main() -> int:
@@ -33,15 +33,7 @@ def main() -> int:
     with open(args.manifest) as f:
         entries = json.load(f)
 
-    spark = (
-        SparkSession.builder.appName("cdc-process")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.parquet.compression.codec", "zstd")
-        .getOrCreate()
-    )
+    spark = get_spark("cdc-process")
 
     from omicidx_etl_spark.orchestrate import EntitySpec, process_entities
 

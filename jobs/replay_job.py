@@ -24,8 +24,7 @@ import argparse
 import json
 import time
 
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
+from omicidx_etl_spark.session import get_spark
 
 
 def main() -> None:
@@ -59,16 +58,8 @@ def main() -> None:
     p.add_argument("--seed", type=int, default=42)
     args = p.parse_args()
 
-    # master/executor topology comes from spark-submit; we only set engine confs
-    spark = (
-        SparkSession.builder.appName("cdc-replay")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.parquet.compression.codec", "zstd")
-        .getOrCreate()
-    )
+    # under spark-submit, get_spark leaves master and sizing to spark-submit
+    spark = get_spark("cdc-replay")
 
     from omicidx_etl_spark import datagen
     from omicidx_etl_spark.lake import LakeTable

@@ -39,7 +39,7 @@ try:
 except ModuleNotFoundError:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from omicidx_etl_spark.session import get_spark
 
 
 def main() -> int:
@@ -62,13 +62,7 @@ def main() -> int:
     p.add_argument("--interval-s", type=float, default=30.0)
     args = p.parse_args()
 
-    spark = (
-        SparkSession.builder.appName("lake-replicate")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.parquet.compression.codec", "zstd")
-        .getOrCreate()
-    )
+    spark = get_spark("lake-replicate")
 
     from omicidx_etl_spark.cdc import ChangelogSubscription, replicate
     from omicidx_etl_spark.lake import LakeTable

@@ -139,7 +139,6 @@ def replay_batch(
     dedup_method: str = "max_by",
     lineage: "LineageLog | None" = None,
     mode: str = "cow",
-    fanout: bool = False,
     branch: str | None = None,
     auto_evolve: bool = False,
 ) -> dict[str, Any]:
@@ -189,7 +188,6 @@ def replay_batch(
         app_id=app_id,
         batch_id=batch_id,
         mode=mode,
-        fanout=fanout,
         branch=branch,
         extra_summary=lambda: (
             dict(_obs_stats_safe(obs), schema_evolved=evolved)
@@ -253,7 +251,6 @@ def replay_log(
     lineage: "LineageLog | None" = None,
     max_batches: int | None = None,
     mode: str = "cow",
-    fanout: bool = False,
     compact_every: int | None = None,
     canonicalize_every: int | None = None,
     canonicalize_method: str = "exact",
@@ -354,7 +351,6 @@ def replay_log(
                 replay_batch(
                     table, batch, batch_id=b, app_id=app_id, seq=seq,
                     dedup_method=dedup_method, lineage=lineage, mode=mode,
-                    fanout=fanout,
                 )
             )
             if progress is not None:

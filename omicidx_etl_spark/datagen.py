@@ -21,8 +21,6 @@ Tables
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -30,6 +28,7 @@ VOCAB_SIZE = 50257
 MAX_TOKENS = 2048
 SOURCES = ("web", "books", "code", "wiki")
 EPOCH0 = 1_600_000_000  # deterministic event-time origin
+WAL_CODEC = "snappy"  # change-log segment codec (see write_change_log)
 
 
 def _h(*cols, seed: int, salt: str):
@@ -189,7 +188,7 @@ def write_change_log(
     path: str,
     files: int = 8,
     ordered: bool = True,
-    codec: str | None = None,
+    codec: str = WAL_CODEC,
 ) -> None:
     """Land the change log as a parquet directory usable by both the batch
     replayer (seq-range reads) and the streaming replayer (file source).
@@ -198,14 +197,13 @@ def write_change_log(
     the shape of real WAL segment files; downstream partition pruning on
     ``seq`` ranges works off parquet row-group stats.
 
-    ``codec`` defaults to snappy (``SPARK_GRAFT_WAL_CODEC``): WAL segments
-    are write-once, read-hot and short-lived, so decode speed beats ratio —
+    ``codec`` defaults to ``WAL_CODEC`` (snappy): WAL segments are
+    write-once, read-hot and short-lived, so decode speed beats ratio —
     the same tiering real CDC relays use (Kafka defaults to snappy/lz4).
     Measured on the bench's token-array events, every replay's wide-side
     scan pays ~3-4x more decode CPU reading a zstd log than a snappy one
     at near-identical segment size (the arrays are incompressible).
     """
-    codec = codec or os.environ.get("SPARK_GRAFT_WAL_CODEC", "snappy")
     (
         changes.repartitionByRange(files, "seq")
         .sortWithinPartitions("seq")

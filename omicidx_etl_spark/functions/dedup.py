@@ -58,17 +58,17 @@ def _exploded_shingles(df: DataFrame, id_col: str, text_col: str, n: int) -> Dat
     would serialize the whole (interpreted, non-codegen) higher-order
     shingle computation onto a single core.
 
-    The partition count is EXPLICIT (``compute_parallelism`` — cores-
-    derived, REPARTITION_BY_NUM): a by-column repartition is an
-    AQE-coalescible shuffle, and AQE sizes partitions by BYTES — a
-    document table of a few MB coalesces to ONE partition, serializing
-    the downstream explode + self-join + aggregation (work that is
-    quadratic per byte) onto a single core. Measured at sf0.1 before the
-    fix: the entire 73M-row shingle self-join of ``ngram_jaccard_pairs``
-    ran as one 21.6 s single-task stage."""
-    from omicidx_etl_spark.session import compute_parallelism
-
-    nparts = compute_parallelism(df.sparkSession)
+    The partition count is EXPLICIT (a REPARTITION_BY_NUM exchange, which
+    AQE never coalesces): a by-column repartition is an AQE-coalescible
+    shuffle, and AQE sizes partitions by BYTES — a document table of a
+    few MB coalesces to ONE partition, serializing the downstream explode
+    + self-join + aggregation (work that is quadratic per byte) onto a
+    single core. Measured at sf0.1 before the fix: the entire 73M-row
+    shingle self-join of ``ngram_jaccard_pairs`` ran as one 21.6 s
+    single-task stage. The count is ``sparkContext.defaultParallelism``:
+    the core count under ``local[N]``, the cluster's total executor cores
+    under a real scheduler."""
+    nparts = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(nparts, F.col(id_col)).select(
         F.col(id_col).alias("doc"), F.explode(shingles_expr(F.col(text_col), n)).alias("shingle")
     )
@@ -96,8 +96,7 @@ def ngram_jaccard_pairs(
     (≤ corpus_shingles/max_df can exceed it), so it broadcasts. Pass
     ``max_df=None`` for unfiltered Jaccard on pre-blocked candidates.
     """
-    from omicidx_etl_spark.session import compute_parallelism
-
+    nparts = df.sparkSession.sparkContext.defaultParallelism
     sh = _exploded_shingles(df, id_col, text_col, n)
     if max_df is not None:
         hot = (
@@ -114,7 +113,7 @@ def ngram_jaccard_pairs(
     # Σ df² rows — byte-sized coalescing serializes the pair generation
     # onto one core (see _exploded_shingles). One REPARTITION_BY_NUM
     # exchange, planned once and reused for both sides of the self-join.
-    part = sh.repartition(compute_parallelism(df.sparkSession), "shingle")
+    part = sh.repartition(nparts, "shingle")
     a = part.alias("a")
     b = part.alias("b")
     # Explicit group-key exchange BEFORE the pair count: the join's output
@@ -131,7 +130,7 @@ def ngram_jaccard_pairs(
         a.join(b, "shingle")
         .filter(F.col("a.doc") < F.col("b.doc"))
         .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .repartition(compute_parallelism(df.sparkSession), "doc_a", "doc_b")
+        .repartition(nparts, "doc_a", "doc_b")
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("common"))
     )

@@ -211,8 +211,6 @@ def pairwise_topk_per_label(
     """Embedding-cosine near-dup pairs within each label group — the
     grouped (blocked) self-join pattern: the cross product only forms inside
     a group, never globally."""
-    from omicidx_etl_spark.session import compute_parallelism
-
     # Hoist the per-vector norm out of the pair loop: ``cosine(a, b)``
     # recomputes BOTH norms for every candidate pair (3 interpreted
     # higher-order aggregates per pair); computing each row's norm once and
@@ -222,14 +220,14 @@ def pairwise_topk_per_label(
     #
     # Explicit-width repartition on the block key: the pairwise stage does
     # O(|block|²·dims) work over a few MB of vectors — AQE's byte-sized
-    # coalescing would run it on one core (see session.compute_parallelism).
+    # coalescing would run it on one core (see dedup._exploded_shingles).
     # Planned once, reused for both sides of the self-join.
     base = df.select(
         F.col(label_col).alias("g"),
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
         l2norm(F.col(vec_col)).alias("nrm"),
-    ).repartition(compute_parallelism(df.sparkSession), "g")
+    ).repartition(df.sparkSession.sparkContext.defaultParallelism, "g")
     a = base.select("g", F.col("id").alias("id_a"), F.col("v").alias("v_a"),
                     F.col("nrm").alias("n_a"))
     b = base.select("g", F.col("id").alias("id_b"), F.col("v").alias("v_b"),
@@ -265,8 +263,6 @@ def semantic_clusters(
     map-side); the argmax is ONE combinable ``max(struct)`` aggregation
     (partial max per vec_id map-side, no per-key window); the assignment
     joins back on the id. Output: ``df`` + ``cluster``."""
-    from omicidx_etl_spark.session import compute_parallelism
-
     cent = df.filter(F.col(id_col) < n_centroids).select(
         F.col(id_col).alias("cid"),
         F.col(vec_col).alias("cvec"),
@@ -281,7 +277,7 @@ def semantic_clusters(
         df.select(
             id_col, vec_col, l2norm(F.col(vec_col)).alias("__nv")
         )
-        .repartition(compute_parallelism(df.sparkSession), id_col)
+        .repartition(df.sparkSession.sparkContext.defaultParallelism, id_col)
         .crossJoin(F.broadcast(cent))
         .select(
             F.col(id_col),

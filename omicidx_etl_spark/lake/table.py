@@ -100,8 +100,8 @@ DELTA_CODEC = "snappy"
 # Broadcast gate for the MOR read's winner-prefilter reconciliation (see
 # read/_reconcile_strategy): total dirty rows above this fall back to the
 # shuffled max_by aggregation. 2M keys ≈ tens of MB broadcast — safe on any
-# reasonably-sized driver; scale deployments tune via env.
-PREFILTER_READ_ROWS = int(os.environ.get("SPARK_GRAFT_READ_PREFILTER_ROWS", "2000000"))
+# reasonably-sized driver.
+PREFILTER_READ_ROWS = 2_000_000
 
 # Allowed no-rewrite type widenings (Iceberg-compatible set),
 # keyed by DataType.simpleString().
@@ -809,7 +809,7 @@ class LakeTable:
         per key (merge contract), so a duplicate (key, seq) needs two
         groups whose seq spans overlap (a re-delivered event replays an old
         seq), and (c) total dirty rows under the broadcast gate
-        (``SPARK_GRAFT_READ_PREFILTER_ROWS``). Anything else → ``max_by``,
+        (``PREFILTER_READ_ROWS``). Anything else → ``max_by``,
         the always-correct wide aggregation."""
         total = 0
         for groups in dirty_meta.values():
@@ -1212,7 +1212,6 @@ class LakeTable:
         batch_id: int | None = None,
         extra_summary: "dict[str, Any] | Callable[[], dict[str, Any]] | None" = None,
         mode: str = "cow",
-        fanout: bool = False,
         branch: str | None = None,
         on_violation: str = "fail",
     ) -> dict[str, Any]:
@@ -1294,12 +1293,6 @@ class LakeTable:
                 F.sum(F.col(DELETED_COL).cast("long")).alias("tombstone_rows"),
                 F.max(F.col(SEQ_COL)).alias("max_seq"),
             )
-            # fanout=True skips the pre-write shuffle — each input task
-            # writes into the bucket dirs it touches (Iceberg fanout writer),
-            # so the batch payload crosses the wire zero times, at the cost
-            # of tasks×buckets files per commit. Default keeps the
-            # clustered one-file-per-bucket layout via the merge's own
-            # shuffle.
             # AQE has nothing to offer this plan — the join is an explicit
             # broadcast (no strategy to revise), the only shuffle is the
             # REPARTITION_BY_NUM bucket exchange (AQE never coalesces it,
@@ -1323,10 +1316,7 @@ class LakeTable:
             try:
                 if flip_aqe:
                     sess_conf.set("spark.sql.adaptive.enabled", "false")
-                rel = self._stage_write(
-                    delta, new_sid, nb, shuffle=not fanout,
-                    codec=DELTA_CODEC,
-                )
+                rel = self._stage_write(delta, new_sid, nb, codec=DELTA_CODEC)
             finally:
                 if flip_aqe:
                     sess_conf.set("spark.sql.adaptive.enabled", prev_aqe)
@@ -2036,7 +2026,6 @@ class LakeTable:
         df: DataFrame,
         sid: int,
         nb: int,
-        shuffle: bool = True,
         sort_by_key: bool = False,
         sort_by: "list[str] | None" = None,
         tasks_per_bucket: int = 1,
@@ -2046,12 +2035,9 @@ class LakeTable:
         """Write df (must carry BUCKET_COL) under data/snap-{sid}/ partitioned
         by bucket; returns {bucket: relpath} for buckets that produced files.
 
-        ``shuffle=True`` clusters each bucket into one task (one file per
-        bucket — the compacted-base layout). ``shuffle=False`` is the fanout
-        writer: tasks write to every bucket they touch, trading file count
-        for zero shuffle — right for high-rate delta appends, wrong for
-        bases (compaction always uses shuffle=True). ``sort_by_key`` adds a
-        task-local key sort (tight row-group stats for point lookups).
+        One task writes each bucket (one file per bucket). ``sort_by_key``
+        adds a task-local key sort (tight row-group stats for point
+        lookups).
 
         ``tasks_per_bucket > 1`` splits each bucket's rewrite across k tasks
         (a deterministic key-hash slice inside the bucket): at 100 TB a hot
@@ -2083,7 +2069,7 @@ class LakeTable:
         # exactly one bucket (or bucket-slice) per write task. Same rows,
         # same bucket dirs, same file count — only the task placement
         # changes.
-        if shuffle and tasks_per_bucket > 1:
+        if tasks_per_bucket > 1:
             slice_col = F.pmod(F.xxhash64(F.col(self.key), F.lit(7)),
                                F.lit(tasks_per_bucket))
             idx = F.col(BUCKET_COL) * tasks_per_bucket + slice_col
@@ -2091,10 +2077,8 @@ class LakeTable:
                 nb * tasks_per_bucket,
                 _bucket_partition_col(idx, nb * tasks_per_bucket),
             )
-        elif shuffle:
-            out_df = df.repartition(nb, _bucket_partition_col(F.col(BUCKET_COL), nb))
         else:
-            out_df = df
+            out_df = df.repartition(nb, _bucket_partition_col(F.col(BUCKET_COL), nb))
         if sort_by or sort_by_key:
             # Leading BUCKET_COL matters: the dynamic-partition writer
             # requires ordering by the partition column and would insert its

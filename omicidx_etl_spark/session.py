@@ -1,16 +1,22 @@
-"""SparkSession factory tuned for the CDC engine.
+"""SparkSession factory: the one place the engine builds a session.
 
 Reference parity: the reference configures its engine (DuckDB) once with
 memory/temp/ordering knobs (``omicidx_etl/db.py:26-29``); this is the Spark
-analogue. Every knob here is a public Spark conf.
+analogue. Jobs, scripts, tests and benchmarks all call ``get_spark``;
+it returns an already-active session as is, with no conf re-applied.
 
-Scale notes (100 TB / 1000 executors):
-- AQE on: runtime coalescing of shuffle partitions + skew-join splitting;
-  the local shuffle-partition default is overridden per-cluster.
-- Arrow on: every pandas UDF / mapInPandas crossing is Arrow-batched
-  (the reference's per-row Python loop is the anti-pattern we replace).
-- UTC session timezone: parquet timestamps compare bit-identically against
-  the DuckDB oracle and across clusters.
+Two kinds of conf:
+- Engine confs (``ENGINE_CONF``) apply to every session it builds: AQE,
+  Arrow, UTC, zstd, driver-side partition discovery, the parquet batch
+  size, shuffle compression and executor GC.
+- Topology and sizing (master, shuffle partitions, driver heap and JVM
+  options, UI) are set only when ``get_spark`` launches the JVM itself.
+  Under ``spark-submit`` (pyspark sets ``PYSPARK_GATEWAY_PORT``) they come
+  from spark-submit.
+
+The engine's only knobs are deployment settings: ``SPARK_GRAFT_CPUS``
+(core count, default: this process's CPU affinity), ``SPARK_MASTER`` and
+``SPARK_DRIVER_MEM``. Anything else goes through ``extra_conf``.
 """
 
 from __future__ import annotations
@@ -19,7 +25,52 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Vectorized-reader batch rows (default 4096): the engine's rows carry
+# kB-scale token arrays, so a 4096-row column batch is tens of MB of
+# short-lived large arrays per task — at 32 concurrent tasks that
+# allocation churn was the top GC driver of the replay's wide scan
+# (measured r6, 2M-event replay: halving to 2048 cut GC 9.8 -> ~3.4 s and
+# wall 26.5 -> ~18 s). Narrow-row tables see no measurable cost (batch
+# count doubles but per-batch work halves).
+PARQUET_BATCH_ROWS = 2048
+
+# Shuffle-payload compression is off, measured: the engine's dominant
+# shuffle payload (token arrays, embeddings, md5 hex) is high-entropy; lz4
+# on the replay's winner shuffle achieved 1.09x (2948 MB vs 3228 MB raw)
+# while costing 17% wall and a third of the GC (22.1 vs 26.5 s measured
+# r6). For compressible payloads on a network cluster, pass
+# ``extra_conf={"spark.shuffle.compress": "true"}``.
+SHUFFLE_COMPRESS = "false"
+
+ENGINE_CONF = {
+    # --- planner / runtime re-planning ---
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # --- python boundary: Arrow everywhere ---
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+    # --- determinism / oracle comparability ---
+    "spark.sql.session.timeZone": "UTC",
+    # --- IO ---
+    "spark.sql.parquet.compression.codec": "zstd",
+    "spark.sql.files.maxPartitionBytes": "128m",
+    # List a read's input paths on the driver however many there are.
+    # Past the default threshold (32 paths) Spark lists them with a Spark
+    # job; a manifest-resolved lake read names one dir per file group (16
+    # buckets x base + 4 deltas = 80), and on a host-local lake that job
+    # (40-80 tasks, 137-340 ms measured on 4 cores) only adds scheduling
+    # to what the driver lists in milliseconds. It also keeps replay's
+    # prefetch read job-free (cdc/replay.py _mk_batch).
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": str(2**31 - 1),
+    "spark.sql.parquet.columnarReaderBatchSize": str(PARQUET_BATCH_ROWS),
+    "spark.shuffle.compress": SHUFFLE_COMPRESS,
+    # ParallelGC: token-array rows are kB-scale objects; G1's humongous-
+    # allocation handling collapses under that churn (GCLocker retries,
+    # 4-5x slower full-width scans at high thread counts). Throughput
+    # collector is the right choice for this allocation profile.
+    "spark.executor.extraJavaOptions": "-XX:+UseParallelGC",
+}
 
 
 def _mem_gib(mem: str) -> float:
@@ -33,22 +84,42 @@ def _mem_gib(mem: str) -> float:
 
 
 def _default_driver_opts(mem: str) -> str:
-    """ParallelGC (see inline note at the config site) plus a BOUNDED young
-    gen on large heaps: ParallelGC's adaptive sizing grows the young gen
-    toward heap/3 (16 GiB on the 48 GiB local driver), and 32-thread
-    stop-the-world scavenges over a young gen that big pause every running
-    task — measured on the bench-shaped 2M-event replay (r6): GC 9.8 s of a
+    """ParallelGC (see ``ENGINE_CONF``) plus a BOUNDED young gen on large
+    heaps: ParallelGC's adaptive sizing grows the young gen toward heap/3
+    (16 GiB on the 48 GiB local driver), and 32-thread stop-the-world
+    scavenges over a young gen that big pause every running task —
+    measured on the bench-shaped 2M-event replay (r6): GC 9.8 s of a
     26.5 s wall with adaptive sizing, 3.2 s of 17.1 s with -Xmn4g, and the
     run-to-run spread collapses because the pause cadence stops drifting.
     A fixed LARGE young gen is the anti-optimization (-Xmn16g measured
     29.1 s / 11.0 s GC). Skipped on heaps < 16 GiB where -Xmn4g would
     starve the old gen (adaptive sizing behaves at that scale; measured
-    24 GiB heap ~ Xmn4g within noise). ``SPARK_DRIVER_JAVA_OPTS``
-    overrides wholesale."""
+    24 GiB heap ~ Xmn4g within noise). ``extra_conf`` overrides
+    ``spark.driver.extraJavaOptions`` wholesale."""
     base = "-XX:+UseParallelGC"
     if _mem_gib(mem) >= 16:
         return base + " -Xmn4g"
     return base
+
+
+def _session_conf(
+    master: str | None, shuffle_partitions: int | None, extra_conf: dict[str, str] | None
+) -> dict[str, str]:
+    """The confs ``get_spark`` builds a new session with (see its docstring)."""
+    conf = dict(ENGINE_CONF)
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+        mem = os.environ.get("SPARK_DRIVER_MEM", "48g")
+        conf.update({
+            "spark.master": master or os.environ.get("SPARK_MASTER", f"local[{cpus}]"),
+            "spark.sql.shuffle.partitions": str(shuffle_partitions or cpus),
+            "spark.ui.enabled": "false",
+            "spark.driver.memory": mem,
+            "spark.driver.maxResultSize": "4g",
+            "spark.driver.extraJavaOptions": _default_driver_opts(mem),
+        })
+    conf.update(extra_conf or {})
+    return conf
 
 
 def get_spark(
@@ -57,95 +128,35 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with engine defaults.
+    """The active session as is, else a new one with ``ENGINE_CONF``.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` in the sandbox; on a
-    real cluster it is supplied by spark-submit and left untouched.
+    When this call launches the JVM, it also sets the topology:
+    ``master`` (default ``$SPARK_MASTER``, else ``local[$SPARK_GRAFT_CPUS]``),
+    ``shuffle_partitions`` (default the core count), the driver heap
+    (``$SPARK_DRIVER_MEM``, default 48g) and GC options, and turns the UI
+    off. Under spark-submit those come from spark-submit and the
+    arguments are ignored. ``extra_conf`` is applied last.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
-    nshuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
-
-    builder = (
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
+    spark = (
         SparkSession.builder.appName(app_name)
-        .master(master)
-        # --- planner / runtime re-planning ---
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(nshuffle))
-        # --- python boundary: Arrow everywhere ---
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # --- determinism / oracle comparability ---
-        .config("spark.sql.session.timeZone", "UTC")
-        # --- IO ---
-        .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.sql.files.maxPartitionBytes", "128m")
-        # List a read's input paths on the driver however many there are.
-        # Past the default threshold (32 paths) Spark lists them with a
-        # Spark job; a manifest-resolved lake read names one dir per file
-        # group (16 buckets x base + 4 deltas = 80), and on a host-local
-        # lake that job (40-80 tasks, 137-340 ms measured on 4 cores)
-        # only adds scheduling to what the driver lists in milliseconds.
-        # It also keeps replay's prefetch read job-free
-        # (cdc/replay.py _mk_batch).
-        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1))
-        # Vectorized-reader batch rows (default 4096): the engine's rows
-        # carry kB-scale token arrays, so a 4096-row column batch is tens of
-        # MB of short-lived large arrays per task — at 32 concurrent tasks
-        # that allocation churn was the top GC driver of the replay's wide
-        # scan (measured r6, 2M-event replay: halving to 2048 cut GC
-        # 9.8 -> ~3.4 s and wall 26.5 -> ~18 s). Narrow-row tables see no
-        # measurable cost (batch count doubles but per-batch work halves).
-        .config(
-            "spark.sql.parquet.columnarReaderBatchSize",
-            os.environ.get("SPARK_GRAFT_PQ_BATCH", "2048"),
-        )
-        # Shuffle-payload compression: OFF by default, measured — the
-        # engine's dominant shuffle payload (token arrays, embeddings,
-        # md5 hex) is high-entropy; lz4 on the replay's winner shuffle
-        # achieved 1.09x (2948 MB vs 3228 MB raw) while costing 17% wall
-        # and a third of the GC (22.1 vs 26.5 s measured r6). On a
-        # network cluster with compressible payloads set
-        # SPARK_GRAFT_SHUFFLE_COMPRESS=true (wire bytes then dominate);
-        # for this engine's payload profile even 25 GbE saves only ~9%
-        # wire for real CPU.
-        .config(
-            "spark.shuffle.compress",
-            os.environ.get("SPARK_GRAFT_SHUFFLE_COMPRESS", "false"),
-        )
-        # local mode: keep the UI off and the JVM quiet
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
-        .config("spark.driver.maxResultSize", "4g")
-        # ParallelGC: token-array rows are kB-scale objects; G1's humongous-
-        # allocation handling collapses under that churn (GCLocker retries,
-        # 4-5x slower full-width scans at high thread counts). Throughput
-        # collector is the right choice for this allocation profile.
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get(
-                "SPARK_DRIVER_JAVA_OPTS",
-                _default_driver_opts(os.environ.get("SPARK_DRIVER_MEM", "48g")),
-            ),
-        )
-        .config("spark.executor.extraJavaOptions", "-XX:+UseParallelGC")
+        .config(map=_session_conf(master, shuffle_partitions, extra_conf))
+        .getOrCreate()
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
-    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     _warm_session(spark)
     return spark
 
 
-_WARMED_CONTEXTS: set[int] = set()
+# Keyed on applicationId, not id(sc): CPython can reuse a stopped
+# context's id for a new one.
+_WARMED_CONTEXTS: set[str] = set()
 
 
 def _warm_session(spark: SparkSession) -> None:
-    """Once-per-JVM warmup of shared engine primitives (md5, wide hash
+    """Once-per-context warmup of shared engine primitives (md5, wide hash
     aggregation, window/sort, broadcast hash join, explode) over a few
     thousand synthetic rows. First-execution latency of these paths is
     JIT/codegen-framework warmup that every first real query otherwise
@@ -154,14 +165,11 @@ def _warm_session(spark: SparkSession) -> None:
     chains show a similar cold tax. This computes nothing reusable and
     caches no data — it compiles code paths, the same thing the first
     query of any long-lived job/service session would do implicitly.
-    ~2 s once per JVM; skipped on reused contexts and by
-    ``SPARK_GRAFT_SESSION_WARMUP=0`` (e.g. for sub-second CLI probes)."""
+    About 2 s, paid once by every new session, CLI jobs included."""
     sc = spark.sparkContext
-    if id(sc) in _WARMED_CONTEXTS:
+    if sc.applicationId in _WARMED_CONTEXTS:
         return
-    _WARMED_CONTEXTS.add(id(sc))
-    if os.environ.get("SPARK_GRAFT_SESSION_WARMUP", "1") == "0":
-        return
+    _WARMED_CONTEXTS.add(sc.applicationId)
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -204,36 +212,8 @@ def _warm_session(spark: SparkSession) -> None:
         sc.setJobDescription(None)
 
 
-def compute_parallelism(spark: SparkSession) -> int:
-    """Partition count for compute-dense, byte-light stages (shingle
-    explodes, pairwise similarity blocks): AQE's partition coalescing is
-    sized by shuffle BYTES, but these stages do work quadratic-ish in rows
-    per byte — a 1.5 MB exchange coalesces to one partition and the whole
-    join/aggregate runs on a single core (measured: dedup_ngram_jaccard
-    21.6 s CPU in ONE task at sf0.1; guide §2.2/§2.5 — partitioning must
-    be scale-adaptive, and byte-derived sizing is the wrong adaptivity for
-    compute-bound operators). An EXPLICIT partition count produces a
-    REPARTITION_BY_NUM exchange, which AQE never coalesces.
-
-    ``sparkContext.defaultParallelism`` is the scale-adaptive source: the
-    local core count under ``local[N]``, the cluster's total executor
-    cores under a real scheduler — no constant tuned to either.
-    ``SPARK_GRAFT_COMPUTE_PARTS`` overrides for deployments where the
-    compute-dense stages need more slices than cores (severe per-key
-    skew)."""
-    env = os.environ.get("SPARK_GRAFT_COMPUTE_PARTS")
-    if env:
-        return int(env)
-    return spark.sparkContext.defaultParallelism
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
-
-
-_SHIPPED_CONTEXTS: set[int] = set()
+# Keyed on applicationId, like _WARMED_CONTEXTS.
+_SHIPPED_CONTEXTS: set[str] = set()
 
 
 def ensure_worker_package(spark: SparkSession) -> None:
@@ -244,7 +224,7 @@ def ensure_worker_package(spark: SparkSession) -> None:
     ``spark-submit --py-files`` uses). No-op when the package is already
     running from a --py-files zip, or on repeat calls."""
     sc = spark.sparkContext
-    if id(sc) in _SHIPPED_CONTEXTS:
+    if sc.applicationId in _SHIPPED_CONTEXTS:
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     if os.path.isdir(pkg_dir):
@@ -296,4 +276,4 @@ def ensure_worker_package(spark: SparkSession) -> None:
             sc.addPyFile(zpath)
         except Exception:
             pass  # already registered on this context
-    _SHIPPED_CONTEXTS.add(id(sc))
+    _SHIPPED_CONTEXTS.add(sc.applicationId)

@@ -1,11 +1,15 @@
 #!/usr/bin/env bash
 # Package the engine and run the replay job via spark-submit --py-files —
-# the north rule's deployment shape. MASTER defaults to local[N] in the
-# sandbox; on a cluster pass MASTER=yarn / spark://host:7077.
+# the north rule's deployment shape. Topology and sizing are set here, on
+# the spark-submit line: under spark-submit, the job's get_spark applies
+# only the engine confs. MASTER defaults to local[N] with N =
+# SPARK_GRAFT_CPUS or the CPU count; on a cluster pass MASTER=yarn /
+# spark://host:7077.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-MASTER="${MASTER:-local[${SPARK_GRAFT_CPUS:-32}]}"
+CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
+MASTER="${MASTER:-local[$CPUS]}"
 ZIP=/tmp/omicidx_etl_spark.zip
 
 rm -f "$ZIP"
@@ -21,5 +25,5 @@ with zipfile.ZipFile('$ZIP', 'w') as z:
 
 exec spark-submit --master "$MASTER" --py-files "$ZIP" \
     --conf spark.driver.memory="${SPARK_DRIVER_MEM:-48g}" \
-    --conf spark.sql.shuffle.partitions="${SPARK_GRAFT_SHUFFLE_PARTITIONS:-32}" \
+    --conf spark.sql.shuffle.partitions="$CPUS" \
     jobs/replay_job.py "$@"

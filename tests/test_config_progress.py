@@ -1,7 +1,5 @@
-"""Deployment profile (config.py) and console heartbeat (progress.py) —
-the engine's equivalents of the reference's env-backed settings module
-(omicidx_etl/config.py:1-34) and rate-limited LogProgress
-(omicidx_etl/log.py:187-259)."""
+"""Console heartbeat (progress.py) — the engine's equivalent of the
+reference's rate-limited LogProgress (omicidx_etl/log.py:187-259)."""
 
 from __future__ import annotations
 
@@ -10,44 +8,7 @@ import json
 
 import pytest
 
-from omicidx_etl_spark.config import Settings, settings
 from omicidx_etl_spark.progress import LogProgress
-
-
-def test_settings_defaults_and_env_override():
-    s = settings(env={})
-    assert s.warehouse == "/data/lake" and s.mode == "mor"
-    assert s.shuffle_partitions == 32
-    s = settings(
-        env={
-            "SPARK_GRAFT_WAREHOUSE": "/lake/prod",
-            "SPARK_GRAFT_SHUFFLE_PARTITIONS": "512",
-            "SPARK_GRAFT_MODE": "cow",
-            "SPARK_GRAFT_MASTER": "spark://m:7077",
-        }
-    )
-    assert s.warehouse == "/lake/prod"
-    assert s.shuffle_partitions == 512
-    assert s.mode == "cow" and s.master == "spark://m:7077"
-    assert s.spark_conf()["spark.sql.shuffle.partitions"] == "512"
-
-
-def test_settings_validation():
-    with pytest.raises(ValueError, match="MODE"):
-        settings(env={"SPARK_GRAFT_MODE": "merge"})
-    with pytest.raises(ValueError, match="SHUFFLE_PARTITIONS"):
-        settings(env={"SPARK_GRAFT_SHUFFLE_PARTITIONS": "many"})
-
-
-def test_path_resolution_cli_precedence():
-    """Bare names resolve under the profile roots; explicit paths/URIs
-    pass through untouched (CLI arg > env > default)."""
-    s = settings(env={"SPARK_GRAFT_WAREHOUSE": "/w", "SPARK_GRAFT_FEEDS": "/f"})
-    assert s.table_path("events") == "/w/events"
-    assert s.table_path("/abs/t") == "/abs/t"
-    assert s.table_path("s3a://bucket/t") == "s3a://bucket/t"
-    assert s.feed_path("out") == "/f/out"
-    assert s.checkpoint_path("rel/ck") == "rel/ck"  # has a separator
 
 
 def test_progress_rate_limited_by_time():

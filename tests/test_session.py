@@ -1,0 +1,97 @@
+"""session.get_spark is the engine's one session factory: engine confs on
+every session it builds, topology only when it launches the JVM itself,
+an active session returned as is. Per-context caches are keyed on the
+application id."""
+
+from __future__ import annotations
+
+import os
+import pathlib
+import re
+from types import SimpleNamespace
+
+from omicidx_etl_spark import session
+
+REPO = pathlib.Path(__file__).resolve().parents[1]
+PKG = REPO / "omicidx_etl_spark"
+
+
+def test_active_session_returned_as_is(spark):
+    got = session.get_spark("other-app", shuffle_partitions=3)
+    assert got.sparkContext.applicationId == spark.sparkContext.applicationId
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+
+
+def test_topology_resolved_per_call(monkeypatch):
+    """SPARK_GRAFT_CPUS is read when the session is built, for both the
+    master and the shuffle partitions; unset, it is the CPU affinity."""
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    monkeypatch.delenv("SPARK_MASTER", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    conf = session._session_conf(None, None, None)
+    assert conf["spark.master"] == "local[3]"
+    assert conf["spark.sql.shuffle.partitions"] == "3"
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    n = len(os.sched_getaffinity(0))
+    conf = session._session_conf(None, None, {"spark.ui.enabled": "true"})
+    assert conf["spark.master"] == f"local[{n}]"
+    assert conf["spark.sql.shuffle.partitions"] == str(n)
+    assert conf["spark.ui.enabled"] == "true"  # extra_conf applies last
+
+
+def test_spark_submit_keeps_its_topology(monkeypatch):
+    """Under spark-submit only the engine confs are set: master, shuffle
+    partitions, driver sizing and the UI stay spark-submit's."""
+    monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "12345")
+    conf = session._session_conf("local[2]", 3, None)
+    assert conf == session.ENGINE_CONF
+
+
+def test_worker_package_shipped_once_per_application(monkeypatch):
+    """A new context can reuse a stopped one's id(); the ship cache must
+    still add the package to it."""
+    monkeypatch.setattr(session, "_SHIPPED_CONTEXTS", set())
+    shipped = []
+    sc = SimpleNamespace(applicationId="local-stub-1", addPyFile=shipped.append)
+    stub = SimpleNamespace(sparkContext=sc)
+    session.ensure_worker_package(stub)
+    session.ensure_worker_package(stub)
+    sc.applicationId = "local-stub-2"
+    session.ensure_worker_package(stub)
+    assert len(shipped) == 2
+
+
+def _lines(paths):
+    for path in paths:
+        for n, line in enumerate(path.read_text().splitlines(), 1):
+            yield path.relative_to(REPO).as_posix(), n, line.strip()
+
+
+def test_session_built_and_configured_only_in_session_py():
+    """No module but session.py builds a session or reads the environment,
+    and it reads only the three deployment knobs plus pyspark's
+    spark-submit marker."""
+    engine = sorted(PKG.rglob("*.py")) + sorted((REPO / "jobs").glob("*.py"))
+    allowed = {"SPARK_GRAFT_CPUS", "SPARK_MASTER", "SPARK_DRIVER_MEM", "PYSPARK_GATEWAY_PORT"}
+    builders, env_reads = [], []
+    for rel, n, line in _lines(engine):
+        where = f"{rel}:{n}: {line}"
+        if "SparkSession.builder" in line and rel != "omicidx_etl_spark/session.py":
+            builders.append(where)
+        if re.search(r"\b(environ|getenv)\b", line):
+            names = set(re.findall(r"[\"']([A-Z][A-Z0-9_]*)[\"']", line))
+            if rel != "omicidx_etl_spark/session.py" or not names or not names <= allowed:
+                env_reads.append(where)
+    assert builders == [], builders
+    assert env_reads == [], env_reads
+
+
+def test_retired_options_stay_gone():
+    assert not (PKG / "config.py").exists()
+    retired = re.compile(
+        r"fanout|SPARK_GRAFT_(PQ_BATCH|SHUFFLE_COMPRESS|WAL_CODEC|READ_PREFILTER_ROWS"
+        r"|SESSION_WARMUP|COMPUTE_PARTS|BENCH_FANOUT)|SPARK_DRIVER_JAVA_OPTS"
+    )
+    files = sorted(PKG.rglob("*.py")) + sorted((REPO / "jobs").glob("*.py")) + [REPO / "bench.py"]
+    hits = [f"{rel}:{n}: {line}" for rel, n, line in _lines(files) if retired.search(line)]
+    assert hits == [], hits
