@@ -1,92 +1,73 @@
 #!/usr/bin/env python
-"""Benchmark harness — the driver's per-round feedback loop.
+"""Headline benchmark: the 17 headline query leaves plus the MOR replay.
 
 Prints ONE JSON line:
-  {"metric": ..., "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ...,
-   "replay": {...events/sec...}, "scaling": {...N vs 4N...}}
+  {"metric": ..., "value": <total sec>, "unit": "sec", "sf": ...,
+   "queries": {name: sec, ...}, "replay": {"events_per_sec": ..., ...}}
 
-Three parts:
-1. Headline operator queries from ``omicidx_etl_spark.queries`` timed at
-   ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-   ``local[$SPARK_GRAFT_CPUS]``; each forced through a noop sink so every
-   column materializes (no collect-to-driver skew in the timing).
-2. Flagship CDC replay throughput (change-events/sec) — the BASELINE.json
-   north metric — replaying a cached deterministic change log
-   (``datagen.gen_changes``) into a LakeTable.
-3. Scaling-efficiency evidence per the north rule (>=0.8 from N to 4N
-   executors): the same replay at local[N] and local[4N] in clean
-   subprocesses (fresh JVM each, shuffle partitions = cores, JIT warmed by
-   an untimed replay batch, CPUs pinned to a stride-spread set — adjacent
-   vCPUs share host resources and measure ~40% slow). Samples are taken as
-   interleaved (lo, hi) pairs so a host-contention episode degrades both
-   levels of a pair instead of one level of the study; the headline
-   efficiency is the median of per-pair efficiencies over >=3 clean pairs.
-   Skipped when SPARK_GRAFT_BENCH_SCALING=0.
+Two parts, both on one ``session.get_spark`` session (cores from
+``$SPARK_GRAFT_CPUS``, else this process's CPU affinity):
+1. The headline leaves (``perfbench.layers.HEADLINE``) of
+   ``omicidx_etl_spark.queries`` on the tables at ``$SPARK_GRAFT_SF_DIR``
+   (default: the sf0.1 test tables), each forced through a noop sink so
+   every column materializes (no collect-to-driver skew in the timing).
+2. Change-events/sec of a MOR replay (prefilter dedup, 32 buckets, 4
+   batches) of a cached deterministic change log (``datagen.gen_changes``)
+   into a fresh LakeTable: 2M events over 200k docs at sf0.1.
+
+The change-log cache and the replay table live under
+``$SPARK_GRAFT_BENCH_SCRATCH`` (default /tmp/spark_graft_bench). The full
+result goes to BENCH/last_run_detail.json; the line keeps the headline.
 
 Usage:
-  python bench.py                    # full bench, one JSON line on stdout
-  python bench.py --replay-only --master local[8] --events 2000000 ...
-                                     # internal: used by the scaling runs
+  python bench.py
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
 import shutil
-import subprocess
+import signal
 import sys
-import threading
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
 REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
-# ---------------------------------------------------------------------------
-# Hard wall-clock budget. Round 2's driver run was killed (rc 124) because the
-# scaling study loops until >=3 probe-clean pairs with bounded per-sample
-# waits but NO overall ceiling, and the single JSON line prints only at exit —
-# a contended window produced hours of sampling and zero evidence. Now:
-#   * the whole bench targets SPARK_GRAFT_BENCH_BUDGET seconds (default 12 min);
-#   * phases check the remaining budget before starting expensive work and the
-#     scaling study sizes each subprocess timeout against what is left;
-#   * a watchdog thread force-emits the partial result JSON and exits cleanly
-#     if anything overruns anyway — the artifact is never empty again.
-# ---------------------------------------------------------------------------
+from perfbench.layers import HEADLINE  # noqa: E402
+
+SCRATCH = os.environ.get("SPARK_GRAFT_BENCH_SCRATCH") or "/tmp/spark_graft_bench"
+CACHE = os.path.join(SCRATCH, "cache")
+
+# The headline replay shape. prefilter: narrow winner agg + broadcast join,
+# so the wide token arrays never shuffle (winners per batch ~200k ≈ 5 MB
+# broadcast at sf0.1).
+MODE = "mor"
+DEDUP = "prefilter"
+BUCKETS = 32
+SEED = 42
+FILES = 128
+# A replay attempt that lost more than this share of its CPU time to the
+# hypervisor measured the neighbours, not the engine: retry, keep the best.
+STEAL_OK = 0.02
+RETRIES = 3
+
 _T0 = time.time()
-# Default 20 min: round 1's driver run (2M-event scaling pair, ~15+ min
-# total) completed without an external kill, so the harness allows at least
-# that; the SIGTERM handler below still guarantees evidence if a future
-# harness budget is tighter.
-BUDGET = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET", "1200"))
-
-
-def _remaining() -> float:
-    return BUDGET - (time.time() - _T0)
-
-
 _RESULT: dict = {}
-_EMIT_LOCK = threading.Lock()
 _EMITTED = False
 
 
 def _compact_result(full: dict) -> dict:
-    """Shrink the emitted line under the driver's ~2000-char tail capture
-    (round 3's line embedded the full pairs[] array and came back
-    ``parsed: null`` despite rc 0). Per-pair / ambient detail lives in
-    BENCH/last_run_detail.json; the line keeps only the headline numbers."""
+    """Keep the emitted line under 1500 chars: callers that capture only
+    the last ~2000 chars of output could not parse a 4 KB line despite
+    rc 0. Detail lives in BENCH/last_run_detail.json; the line keeps the
+    headline."""
     out = dict(full)
-    sc = out.get("scaling")
-    if isinstance(sc, dict):
-        sc = {k: v for k, v in sc.items() if k not in ("pairs", "ambient")}
-        out["scaling"] = sc
     rp = out.get("replay")
     if isinstance(rp, dict):
         keep = ("events_per_sec", "sec", "events", "chunk", "mode", "dedup",
-                "attempts", "steal_frac")
+                "final_rows", "attempts", "steal_frac")
         out["replay"] = {k: rp[k] for k in keep if k in rp}
     out.pop("scratch", None)
     line = json.dumps(out)
@@ -100,114 +81,39 @@ def _compact_result(full: dict) -> dict:
     return out
 
 
-def _emit_result(budget_exhausted: bool = False) -> None:
-    """Print the single JSON line exactly once (main exit or watchdog)."""
+def _emit_result() -> None:
+    """Print the single JSON line exactly once (main exit or signal)."""
     global _EMITTED
-    with _EMIT_LOCK:
+    if _EMITTED:
+        return
+    _EMITTED = True
+    _RESULT["elapsed_sec"] = round(time.time() - _T0, 1)
+    try:
+        detail_path = os.path.join(REPO, "BENCH", "last_run_detail.json")
+        os.makedirs(os.path.dirname(detail_path), exist_ok=True)
+        with open(detail_path, "w") as f:
+            json.dump(_RESULT, f, indent=1)
+    except OSError:
+        pass  # never let detail-spill block the line
+    sys.stdout.write("\n" + json.dumps(_compact_result(_RESULT)) + "\n")
+    sys.stdout.flush()
+
+
+def _emit_on_signal() -> None:
+    """A harness ``timeout`` sends SIGTERM before SIGKILL: print the partial
+    line the instant we are told to die, so a killed run still leaves
+    parseable evidence. A signal that lands while the line is being
+    printed returns, and the normal exit finishes it."""
+
+    def _on_signal(signum, frame):
         if _EMITTED:
             return
-        _EMITTED = True
-        if budget_exhausted:
-            _RESULT["budget_exhausted"] = True
-        _RESULT["elapsed_sec"] = round(time.time() - _T0, 1)
-        try:
-            detail_path = os.path.join(REPO, "BENCH", "last_run_detail.json")
-            os.makedirs(os.path.dirname(detail_path), exist_ok=True)
-            with open(detail_path, "w") as f:
-                json.dump(_RESULT, f, indent=1)
-        except OSError:
-            pass  # never let detail-spill block the line
-        sys.stdout.write("\n" + json.dumps(_compact_result(_RESULT)) + "\n")
-        sys.stdout.flush()
-
-
-def _arm_watchdog(grace: float = 20.0) -> None:
-    """Emit whatever evidence exists ``grace`` seconds before the budget
-    expires, then hard-exit. Daemon thread: never blocks a normal exit."""
-
-    def _fire():
-        delay = max(BUDGET - grace - (time.time() - _T0), 1.0)
-        time.sleep(delay)
-        _emit_result(budget_exhausted=True)
-        os._exit(0)
-
-    threading.Thread(target=_fire, daemon=True).start()
-    # Defense in depth against an EXTERNAL timeout shorter than our budget
-    # (round 2's rc-124 came from the harness's own `timeout`, which sends
-    # SIGTERM before SIGKILL): dump the partial JSON the instant we're told
-    # to die, so even a harness-killed run leaves parseable evidence.
-    import signal
-
-    def _on_term(signum, frame):
         _RESULT.setdefault("killed_by_signal", signum)
-        _emit_result(budget_exhausted=True)
+        _emit_result()
         os._exit(0)
 
     for sig in (signal.SIGTERM, signal.SIGINT, signal.SIGHUP):
-        try:
-            signal.signal(sig, _on_term)
-        except (ValueError, OSError):
-            pass  # non-main thread or unsupported signal
-
-
-def _scratch_dir() -> str:
-    """Bench scratch root: tmpfs (/dev/shm) when it has headroom, else /tmp.
-
-    The shared virtio disk is a *fixed* host resource that neighbors can
-    (and do) saturate — measured 2026-08-17: <10 MB/s fdatasync writes vs
-    ~600 MB/s healthy, flattening 1-vs-2-core replay to 1.01x with clean
-    steal AND clean DRAM probes (the job writes ~2 GB/sample, so every
-    sample became a disk-queue measurement). On a real N→4N *executor*
-    scale-up, storage bandwidth grows with the cluster; a fixed local disk
-    is exactly the resource the scaling evidence must not be bound by, so
-    bench I/O (change log, tables, shuffle spill) lives on tmpfs — the
-    single-box proxy for storage-that-scales. DRAM probes still guard the
-    genuinely shared resource that remains."""
-    shm = "/dev/shm"
-    try:
-        st = os.statvfs(shm)
-        if st.f_bavail * st.f_frsize > (32 << 30):
-            return os.path.join(shm, "spark_graft_bench")
-    except OSError:
-        pass
-    return "/tmp/spark_graft_bench"
-
-
-SCRATCH = os.environ.get("SPARK_GRAFT_BENCH_SCRATCH") or _scratch_dir()
-CACHE = os.environ.get("SPARK_GRAFT_BENCH_CACHE", os.path.join(SCRATCH, "cache"))
-
-# Headline queries: one per operator family (windows/CDC, joins, aggs,
-# staging, dedup, ANN, text) — the full 39-query registry is exercised by
-# tests/test_oracle_parity.py; the bench times the representative hot paths.
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "w1_latest_per_key",
-    "cdc_replay_events",
-    "topk_per_group",
-    "sessionize",
-    "j2_denormalize",
-    "dedup_minhash_lsh",
-    "ann_cosine_topk",
-    "token_count",
-    "doc_fingerprint",
-    # heavy training-data-pipeline paths (VERDICT r4 #4): regressions in
-    # the most expensive LLM-curation operators must show in the driver
-    # bench, not only in parity
-    "semantic_dedup",
-    "span_dedup",
-    "dedup_ngram_jaccard",
-    "dedup_cluster_cc",
-    "pack_sequences",
-]
-
-TABLE_SCHEMA_FIELDS = [
-    ("doc_id", "string"),
-    ("tokens", "array<int>"),
-    ("n_tok", "int"),
-    ("source", "string"),
-]
+        signal.signal(sig, _on_signal)
 
 
 def _table_schema():
@@ -223,33 +129,13 @@ def _table_schema():
     )
 
 
-HOST_CPUS = os.cpu_count() or 32
-
-
-def _affinity() -> set[int] | None:
-    try:
-        return os.sched_getaffinity(0)
-    except (AttributeError, OSError):
-        return None
-
-
 def _steal_jiffies() -> int:
-    """Cumulative CPU-steal jiffies over the CPUs this process may run on
-    (field 8 of the per-cpu /proc/stat lines). The sandbox host
-    occasionally steals 10-70% of CPU for minutes at a time; a throughput
-    sample taken inside such an episode measures the host, not the engine.
-
-    Affinity-aware on purpose: for a pinned 1-core sample, VM-wide steal
-    dilutes the signal 32× — 40% steal on the pinned core reads as 1.2%
-    globally and sails through the gate (observed on 2026-08-17). Summing
-    only the affinity set measures exactly the cores the timed job
-    competes for; unpinned runs degenerate to the VM-wide counter."""
-    cpus = _affinity()
+    """Cumulative CPU-steal clock ticks over the CPUs this process may run
+    on (field 8 of the per-cpu /proc/stat lines). The host occasionally
+    steals 10-70% of CPU for minutes at a time."""
+    cpus = os.sched_getaffinity(0)
+    total = 0
     try:
-        if cpus is None or len(cpus) >= HOST_CPUS:
-            with open("/proc/stat") as f:
-                return int(f.readline().split()[8])
-        total = 0
         with open("/proc/stat") as f:
             for ln in f:
                 name = ln.split(" ", 1)[0]
@@ -257,254 +143,15 @@ def _steal_jiffies() -> int:
                     break
                 if name != "cpu" and int(name[3:]) in cpus:
                     total += int(ln.split()[8])
-        return total
     except (OSError, IndexError, ValueError):
         return 0
+    return total
 
 
 def _steal_frac(steal_delta: int, wall_s: float) -> float:
-    """Fraction of this run's CPU budget that the host stole (jiffies are
-    1/100 s; the budget is the affinity set's CPU-time, so pinned and
-    unpinned runs gate at the same relative severity)."""
-    cpus = _affinity()
-    ncpu = len(cpus) if cpus else HOST_CPUS
-    budget = max(wall_s, 0.001) * ncpu * 100
-    return steal_delta / budget
-
-
-STEAL_OK = float(os.environ.get("SPARK_GRAFT_BENCH_STEAL_OK", "0.02"))
-
-# A sample is probe-clean when its slowest DRAM probe reaches this fraction
-# of the best probe seen anywhere in the study (same single-thread probe in
-# every subprocess, so levels are directly comparable) — OR the absolute
-# floor below. The relative gate exists to catch 3.5x bus collapses
-# (probe 2 GB/s vs 7 ambient); without the absolute escape one late lucky
-# 8.8 GB/s reading retroactively disqualified every pair in the ordinary
-# 6.5-7.9 GB/s band (measured r3: 4/4 substantive pairs probe-failed while
-# absolutely healthy, pushing the headline onto the noisy 100k fallback).
-PROBE_OK = float(os.environ.get("SPARK_GRAFT_BENCH_PROBE_OK", "0.85"))
-PROBE_ABS_OK = float(os.environ.get("SPARK_GRAFT_BENCH_PROBE_ABS", "4000"))
-# Minimum fresh-page supply rate (MB/s) for a scaling sample to count as
-# clean; healthy windows fault at GB/s, degraded ones at 5-15 MB/s.
-FAULT_OK = float(os.environ.get("SPARK_GRAFT_BENCH_FAULT_OK", "100"))
-# Minimum AGGREGATE DRAM bandwidth (N-thread concurrent memcpy MB/s,
-# measured inside the pinned hi-leg subprocess) for a pair to count as
-# clean. Third hi-leg-clipping mechanism found on this box (r4 run 4,
-# 2026-08-19): steal 0.05%, single-thread probes 7.7-8.0 GB/s, fault probe
-# healthy — yet a 256 MB memcpy+strided-sum loop scaled 1→4 pinned cores
-# at only 0.63 because the host capped the 4-core AGGREGATE at 9.4 GB/s
-# (2.5x the single-core rate). Any DRAM-bound job in such a window caps at
-# ~agg/(4·single) regardless of engine quality, invisibly to every
-# single-threaded probe. Calibration sweep (same day): healthy pin sets
-# measure 19-21 GB/s aggregate; the capped regime measures 9.4-10.5 GB/s.
-# 14 GB/s splits the modes. The gate is ABSOLUTE (not agg/single ratio):
-# one thread legitimately pulls ~8-9 GB/s of the ~21 GB/s socket ceiling,
-# so even quiet windows only show ratio ~2.2-2.6 — a ratio gate at any
-# useful threshold would fail healthy windows. BW_OK is kept as a ratio
-# ESCAPE hatch for unlike hardware (agg ≥ BW_OK × single passes even when
-# the absolute number is below AGG_OK, e.g. a narrow-channel box).
-AGG_OK = float(os.environ.get("SPARK_GRAFT_BENCH_AGG_OK", "14000"))
-BW_OK = float(os.environ.get("SPARK_GRAFT_BENCH_BW_OK", "3.0"))
-# Maximum credible pair efficiency: a 1->4-core pair physically cannot
-# exceed 1.0 beyond small cache effects (4x the L2/L3 working share) —
-# r3 quiet-window medians peaked at 1.08. Anything far above that means
-# the LO leg was depressed by a co-tenant burst on its core mid-pair
-# (r4 run 5: lo leg 2004 ev/s — worst ever measured, all probes green —
-# against a healthy hi leg gave "efficiency" 1.844). Such a pair is as
-# mis-measured as a clipped-hi-leg one, just in the flattering direction;
-# it must not enter any trusted tier, and marking it dirty makes the
-# study's existing retry loop re-measure instead of accepting it.
-SUPER_OK = float(os.environ.get("SPARK_GRAFT_BENCH_SUPER_OK", "1.3"))
-# Minimum 1-core leg duration for a scaling pair to measure the engine
-# rather than the fixed ~4-6 s serial driver term (Amdahl cap at t1=120 s
-# is ~0.93 vs ~0.73 at t1=49 s — measured 2026-08-18). Pairs whose lo leg
-# runs shorter trigger slice escalation to the next pre-generated ladder
-# size (window-speed-adaptive: events are only a proxy, time is the spec).
-# Default raised 110 → 150 s with the measured-overhead pair floor: pairs
-# consistently measure 83-92% of the Amdahl cap t1/(t1+3s), so clearing
-# 0.8 on a typical draw needs cap ≥ ~0.94 ⇒ t1 ≥ ~150 s at s≈3 (r4 run 3:
-# two 1M pairs at t1≈100 s, cap 0.92, measured 0.821/0.735 → headline
-# 0.778; the 2M slice in the same window runs t1≈200 s, cap ≈ 0.96).
-ESCALATE_T1 = float(os.environ.get("SPARK_GRAFT_SCALE_T1", "150"))
-
-
-def _wait_writeback_drain(max_mb: int = 256, timeout_s: int = 180) -> bool:
-    """Sync and wait until dirty/writeback pages drop below ``max_mb``.
-
-    The bench's own earlier phases write GBs of parquet (/tmp is ext4 on
-    the shared virtio disk); the kernel flushes those dirty pages for
-    minutes afterwards and throttles new writers meanwhile. A scaling
-    sample taken in that window measures writeback throttling, not the
-    engine — with clean steal AND clean DRAM probes (measured: 4x lower
-    replay throughput, probes ~8.5 GB/s throughout). Draining first makes
-    samples independent of whatever ran before them."""
-    os.sync()
-    t0 = time.time()
-    while time.time() - t0 < timeout_s:
-        vals = {}
-        with open("/proc/meminfo") as f:
-            for ln in f:
-                k = ln.split(":")[0]
-                if k in ("Dirty", "Writeback"):
-                    vals[k] = int(ln.split()[1])
-        if (vals.get("Dirty", 0) + vals.get("Writeback", 0)) // 1024 <= max_mb:
-            return True
-        time.sleep(2)
-    return False
-
-
-_PROBE_BUFS = None
-_FAULT_MBPS: float | None = None
-_FAULT_DIAG_MB = 32
-
-
-def _fault_probe_mbps(refresh: bool = False) -> float:
-    """Fresh-page supply rate (MB/s): best of 3 DISTINCT 32 MB anonymous
-    mmaps, touched page-by-page. In bad windows the hypervisor hands out
-    fresh pages at 5-15 MB/s on EVERY rep (healthy: >=1.3 GB/s) while
-    steal AND memcpy probes read clean — this is the only probe that sees
-    that failure mode.
-
-    Why distinct mmaps + best-of-3 (the single-first-allocation variant
-    marked every 2026-08-18 scaling pair unclean): a process's FIRST large
-    allocation pays a one-off glibc/THP setup cost — measured 35 MB/s in a
-    HEALTHY window, i.e. a guaranteed false positive against the 100 MB/s
-    gate — while re-allocating the SAME size reuses already-faulted arena
-    pages and measures zeroing (2.5 GB/s), not supply. Distinct mappings
-    fault fresh pages each rep; best-of-3 forgives the one-off cost but a
-    genuine collapse stays low across all reps.
-
-    Cached per process; ``refresh=True`` re-measures and keeps the max —
-    called again after the writeback drain so the warmup's own dirty-page
-    pressure (measured: 46 MB/s right after a 500 MB tmpfs write, healthy
-    host) cannot read as a host collapse."""
-    global _FAULT_MBPS
-    if _FAULT_MBPS is None or refresh:
-        import mmap as _mmap
-
-        best = 0.0
-        for _ in range(3):
-            t0 = time.perf_counter()
-            m = _mmap.mmap(-1, _FAULT_DIAG_MB << 20)
-            for i in range(0, _FAULT_DIAG_MB << 20, 4096):
-                m[i] = 1
-            best = max(best, _FAULT_DIAG_MB / (time.perf_counter() - t0))
-            m.close()
-        _FAULT_MBPS = round(max(_FAULT_MBPS or 0.0, best), 1)
-    return _FAULT_MBPS
-
-
-def _probe_arrays(n: int, mb: int):
-    """memcpy probe buffers: tmpfs-mmap-shared across sample subprocesses.
-
-    Every scaling sample is a fresh subprocess; anonymous buffers made each
-    sample pay the fresh-page cost (~30 s per sample in a page-supply
-    collapse — exactly the window where wall budget is scarcest). Backing
-    them with one shared file on tmpfs means only the FIRST process faults
-    the pages in; later samples mmap the same resident tmpfs pages and
-    start probing immediately. tmpfs pages ARE page-cache DRAM, so the
-    memcpy measures the same bus; falls back to anonymous arrays when the
-    scratch dir isn't tmpfs (a disk-backed mmap would measure writeback)."""
-    import numpy as np
-
-    if not SCRATCH.startswith("/dev/shm"):
-        return np.ones(n, dtype=np.float64), np.ones(n, dtype=np.float64), None
-    import mmap as _mmap
-
-    nbytes = n * 8
-    path = os.path.join(SCRATCH, f"probe_{mb}mb.buf")
-    ready = path + ".ready"
-    try:
-        os.makedirs(SCRATCH, exist_ok=True)
-        fresh = not (os.path.exists(ready)
-                     and os.path.exists(path)
-                     and os.path.getsize(path) == 2 * nbytes)
-        f = open(path, "w+b" if fresh else "r+b")
-        f.truncate(2 * nbytes)
-        m = _mmap.mmap(f.fileno(), 2 * nbytes, _mmap.MAP_SHARED)
-        a = np.frombuffer(m, dtype=np.float64, count=n)
-        b = np.frombuffer(m, dtype=np.float64, count=n, offset=nbytes)
-        if fresh:
-            a[:] = 1.0
-            b[:] = 1.0
-            with open(ready, "w") as rf:
-                rf.write("1")
-        return a, b, (f, m)
-    except (OSError, ValueError):
-        return np.ones(n, dtype=np.float64), np.ones(n, dtype=np.float64), None
-
-
-def _dram_probe_mbps(mb: int = 128, reps: int = 3) -> float:
-    """Single-thread DRAM-bandwidth probe (large memcpy), best of ``reps``.
-
-    The steal counter only sees CPU the hypervisor takes; neighbors
-    saturating the shared memory bus are invisible to it yet cut this
-    replay's throughput up to ~3× (the workload is bandwidth-bound: ~4 KB
-    token arrays). A ~25 ms memcpy measured from inside the pinned
-    subprocess, immediately before and after the timed run, reads the
-    ambient bandwidth directly — samples taken in a contended window are
-    rejected no matter what the steal counter says.
-
-    Buffers are created once per process and shared across processes via a
-    tmpfs mmap (see _probe_arrays); the fresh-page supply diagnostic is a
-    separate small allocation (_fault_probe_mbps)."""
-    global _PROBE_BUFS
-    import numpy as np
-
-    _fault_probe_mbps()
-    n = mb * 1024 * 1024 // 8
-    if _PROBE_BUFS is None or len(_PROBE_BUFS[0]) != n:
-        _PROBE_BUFS = _probe_arrays(n, mb)
-    a, b = _PROBE_BUFS[0], _PROBE_BUFS[1]
-    best = float("inf")
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        np.copyto(b, a)
-        best = min(best, time.perf_counter() - t0)
-    return mb / best
-
-
-def _agg_probe_mbps(threads: int, mb: int = 128, reps: int = 3) -> float:
-    """AGGREGATE DRAM-bandwidth probe: ``threads`` concurrent memcpys over
-    disjoint slices of the shared probe buffers, best-of-``reps`` MB/s.
-
-    Exists because the single-thread probe cannot see an aggregate-
-    bandwidth ceiling: r4 run 4 measured single-thread 7.7-8.0 GB/s (gate
-    green) while the 4-core aggregate saturated at 2.5x single — capping
-    any DRAM-bound 1→4 pair at ~0.63 with every existing gate clean.
-    ``np.copyto`` releases the GIL, so plain threads measure true
-    concurrent traffic; threads inherit the process pin set, so inside a
-    pinned hi-leg subprocess this reads exactly the bandwidth those
-    ``threads`` cores can jointly pull in this window."""
-    global _PROBE_BUFS
-    import threading
-    import numpy as np
-
-    n = mb * 1024 * 1024 // 8
-    if _PROBE_BUFS is None or len(_PROBE_BUFS[0]) != n:
-        _PROBE_BUFS = _probe_arrays(n, mb)
-    a, b = _PROBE_BUFS[0], _PROBE_BUFS[1]
-    step = n // threads
-    slices = [(a[i * step:(i + 1) * step], b[i * step:(i + 1) * step])
-              for i in range(threads)]
-    best = float("inf")
-    for _ in range(reps):
-        barrier = threading.Barrier(threads + 1)
-
-        def _copy(src, dst):
-            barrier.wait()
-            np.copyto(dst, src)
-
-        ts = [threading.Thread(target=_copy, args=s, daemon=True)
-              for s in slices]
-        for t in ts:
-            t.start()
-        barrier.wait()
-        t0 = time.perf_counter()
-        for t in ts:
-            t.join()
-        best = min(best, time.perf_counter() - t0)
-    return (step * threads * 8 / (1024 * 1024)) / best
+    """Share of this run's CPU time (wall × affinity CPUs) the host stole."""
+    ticks = max(wall_s, 0.001) * len(os.sched_getaffinity(0)) * os.sysconf("SC_CLK_TCK")
+    return steal_delta / ticks
 
 
 def ensure_change_log(spark, n_events: int, n_docs: int, seed: int, files: int) -> str:
@@ -523,43 +170,39 @@ def ensure_change_log(spark, n_events: int, n_docs: int, seed: int, files: int) 
     return path
 
 
-def run_replay(spark, log_path: str, n_events: int, chunk: int, mode: str,
-               n_buckets: int, workdir: str, dedup: str = "max_by",
-               retries: int = 3, max_batches: int | None = None) -> dict:
+def run_replay(spark, log_path: str, n_events: int, chunk: int, workdir: str) -> dict:
     """Replay the whole log into a fresh LakeTable; return throughput facts."""
     from omicidx_etl_spark.cdc.replay import replay_log
     from omicidx_etl_spark.lake.table import LakeTable
 
     tbl_path = os.path.join(workdir, "bench_table")
-    shutil.rmtree(tbl_path, ignore_errors=True)
-    # Retry if the host stole a meaningful share of CPU mid-run (the sample
-    # would measure the noisy neighbor, not the engine); keep the best.
     best = None
-    for attempt in range(max(retries, 1)):
+    for attempt in range(1, RETRIES + 1):
+        shutil.rmtree(tbl_path, ignore_errors=True)
         tbl = LakeTable.create(spark, tbl_path, _table_schema(), key="doc_id",
-                               n_buckets=n_buckets)
+                               n_buckets=BUCKETS)
         s0 = _steal_jiffies()
         t0 = time.time()
-        snaps = replay_log(spark, tbl, log_path, chunk_events=chunk, mode=mode,
-                           dedup_method=dedup, max_batches=max_batches)
+        snaps = replay_log(spark, tbl, log_path, chunk_events=chunk, mode=MODE,
+                           dedup_method=DEDUP)
         dt = time.time() - t0
         stolen = _steal_frac(_steal_jiffies() - s0, dt)
-        rows = tbl.read().count()
         res = {
             "events": n_events,
             "sec": round(dt, 3),
             "events_per_sec": round(n_events / dt, 1),
+            "chunk": chunk,
             "batches": len(snaps),
-            "final_rows": rows,
-            "mode": mode,
-            "dedup": dedup,
+            "final_rows": tbl.read().count(),
+            "mode": MODE,
+            "dedup": DEDUP,
             "steal_frac": round(stolen, 4),
         }
         if best is None or res["events_per_sec"] > best["events_per_sec"]:
             best = res
         if stolen <= STEAL_OK:
             break
-        shutil.rmtree(tbl_path, ignore_errors=True)
+    best["attempts"] = attempt
     return best
 
 
@@ -583,811 +226,8 @@ def bench_queries(spark, sf_dir: str) -> dict[str, float]:
     return out
 
 
-def _disk_probe_mbps(path: str = "/tmp", mb: int = 16) -> float:
-    """Shared-disk health probe: fdatasync-bounded sequential write, MB/s.
-
-    Purely diagnostic (bench I/O runs on tmpfs, see _scratch_dir) — emitted
-    in the bench JSON so a degraded-disk window is visible when comparing
-    rounds; the 2026-08-17 incident read 2.7 MB/s here while steal and DRAM
-    probes were both clean."""
-    import uuid
-
-    p = os.path.join(path, f".diskprobe-{uuid.uuid4().hex}")
-    buf = b"\x00" * (4 << 20)
-    t0 = time.perf_counter()
-    try:
-        fd = os.open(p, os.O_WRONLY | os.O_CREAT | os.O_TRUNC, 0o600)
-        try:
-            for _ in range(mb // 4):
-                os.write(fd, buf)
-            os.fdatasync(fd)
-        finally:
-            os.close(fd)
-        return round(mb / (time.perf_counter() - t0), 1)
-    except OSError:
-        return -1.0
-    finally:
-        try:
-            os.remove(p)
-        except OSError:
-            pass
-
-
-def _spark(master: str, cores: int, cap_jvm_cpus: bool = False):
-    from omicidx_etl_spark.session import get_spark
-
-    conf = {
-        # shuffle/spill scratch on tmpfs with the rest of the bench I/O
-        "spark.local.dir": os.path.join(SCRATCH, "spark_local"),
-    }
-    if cap_jvm_cpus:
-        # Emulated N-core node: the JVM must size GC/JIT/common pools for N
-        # cpus even though it LAUNCHES unpinned (startup + warmup run wide;
-        # only the timed run is pinned — see replay_only). -Xms floor +
-        # AlwaysPreTouch pre-faults the heap the replay will live in DURING
-        # STARTUP (untimed): in page-supply-degraded windows (host hands
-        # out fresh pages at 100-400 MB/s) lazy heap growth otherwise
-        # faults INSIDE the timed run — and the 4-core half, faulting 4x
-        # faster than the supply, eats the bias, which reads as fake
-        # sub-linear scaling. 2g covers the timed slice's live set without
-        # wasting scarce pages on the full 8g ceiling.
-        pretouch = os.environ.get("SPARK_GRAFT_SCALE_XMS", "2g")
-        conf["spark.driver.extraJavaOptions"] = (
-            f"-XX:+UseParallelGC -XX:ActiveProcessorCount={cores} "
-            f"-Xms{pretouch} -XX:+AlwaysPreTouch"
-        )
-    return get_spark("bench", master=master, shuffle_partitions=cores,
-                     extra_conf=conf)
-
-
-def _descendant_pids(pid: int) -> list[int]:
-    out, stack = [], [pid]
-    while stack:
-        p = stack.pop()
-        tdir = f"/proc/{p}/task"
-        try:
-            tasks = os.listdir(tdir)
-        except OSError:
-            continue
-        for t in tasks:
-            try:
-                with open(f"{tdir}/{t}/children") as f:
-                    kids = [int(k) for k in f.read().split()]
-            except (OSError, ValueError):
-                kids = []
-            out.extend(kids)
-            stack.extend(kids)
-    return out
-
-
-def _pin_tree(cpus: set[int]) -> None:
-    """Pin this process AND every thread of every descendant (JVM, pyspark
-    worker daemons) to ``cpus``. sched_setaffinity(pid) moves only one
-    thread; ``taskset -a -p`` walks all of a pid's threads."""
-    os.sched_setaffinity(0, cpus)
-    mask = ",".join(str(c) for c in sorted(cpus))
-    for pid in _descendant_pids(os.getpid()):
-        subprocess.run(
-            ["taskset", "-a", "-p", "-c", mask, str(pid)],
-            stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
-        )
-
-
-def _pin_set(cores: int, base: int = 0) -> set[int]:
-    """Stride-spread CPU set over cpus 1..H-1: {1+base, 1+base+stride, ...}.
-
-    Adjacent vCPU ids on this host share physical resources (measured ~40%
-    replay penalty for 0-3 vs 0,8,16,24), so an N-core 'cluster' is
-    emulated on maximally separated cores; ``base`` rotates the set
-    between samples so one bad physical core cannot poison a whole level.
-
-    cpu0 is excluded outright: it absorbs the VM's IRQ/timer/hypervisor
-    housekeeping, and a 1-core sample pinned there measured 1.0-1.4k
-    events/sec vs 7.7k on any other core (2026-08-17, clean steal and
-    DRAM probes throughout — the noise is invisible to every gate, so the
-    only defense is not standing in front of it)."""
-    avail = max(HOST_CPUS - 1, 1)
-    stride = max(avail // cores, 1)
-    return {1 + ((base + i * stride) % avail) for i in range(cores)}
-
-
-def replay_only(args) -> None:
-    cores = int(args.master.split("[")[1].rstrip("]"))
-    # Emulating an N-core cluster node only requires the TIMED run to be
-    # restricted to N cpus. Startup, warmup and gate waits run UNPINNED on
-    # purpose: a 1-core-pinned JVM start + warmup measured ~220 s of
-    # overhead per sample (vs ~40 s wide), which blew sample timeouts and
-    # starved the study. The JVM still sizes its pools for N cpus
-    # (ActiveProcessorCount) so post-pin behavior matches a true N-core
-    # node; _pin_tree then clamps every thread before timing starts.
-    t_phase = time.time()
-    phases: dict[str, float] = {}
-
-    def _mark(name: str) -> None:
-        nonlocal t_phase
-        now = time.time()
-        phases[name] = round(now - t_phase, 1)
-        sys.stderr.write(f"[replay-only] {name}: {now - t_phase:.1f}s\n")
-        t_phase = now
-
-    spark = _spark(args.master, cores, cap_jvm_cpus=args.pin)
-    _mark("spark-start")
-    log_path = ensure_change_log(spark, args.events, args.docs, args.seed, args.files)
-    _mark("log-ready")
-    workdir = os.path.join(CACHE, f"replay_{cores}")
-    # Untimed warmup: replay one batch into a scratch table so JIT/codegen,
-    # zstd codecs and parquet reader/writer paths are compiled before the
-    # timed run — a fresh JVM otherwise burns ~20-30 s of compile inside
-    # the measurement, ~all of it serial, which distorts the small-core
-    # sample most.
-    # 30k events fully exercises every codegen/codec path (C2 tiers up in
-    # ~10k invocations) while faulting ~3x fewer fresh pages than 100k —
-    # in bad windows the host supplies pages at 5-15 MB/s and the warmup's
-    # working set, not JIT, is what the wall pays for (measured: 192 s
-    # warmup at 100k events with fault_mbps 5.4).
-    warm_chunk = min(args.chunk, 30_000)
-    run_replay(spark, log_path, warm_chunk, warm_chunk, args.mode,
-               args.buckets, os.path.join(workdir, "warm"), dedup=args.dedup,
-               retries=1, max_batches=1)
-    _mark("warmup")
-    # Pre-fault the probe buffers while still unpinned: page supply can run
-    # at ~6-12 MB/s in bad windows, and that cost must land here, not
-    # inside the pinned pre/post probes.
-    _dram_probe_mbps()
-    _mark("probe-prefault")
-    # Writeback from the warmup (and anything before this subprocess) must
-    # drain before timing starts — the kernel throttles new writers while
-    # flushing, invisibly to both steal jiffies and the DRAM probe.
-    _wait_writeback_drain(timeout_s=args.drain_timeout)
-    _mark("drain")
-    if args.pin:
-        _pin_tree(_pin_set(cores, args.pin_base))
-        _mark("pin")
-    # DRAM probes bracket the timed run: ambient-bandwidth evidence for the
-    # parent's pair-cleanliness gate (steal jiffies can't see bus neighbors).
-    # With --probe-floor the subprocess also WAITS (<=--probe-wait s) for a
-    # quiet window before burning minutes on a sample the gate would reject.
-    probe_pre = _dram_probe_mbps()
-    if args.probe_floor > 0:
-        deadline = time.time() + args.probe_wait
-        while probe_pre < args.probe_floor and time.time() < deadline:
-            time.sleep(5)
-            probe_pre = _dram_probe_mbps()
-    # Post-drain fault re-measure: the pre-drain reading may reflect the
-    # warmup's own dirty-page pressure, not host supply (keeps the max).
-    _fault_probe_mbps(refresh=True)
-    # Pre-run aggregate bracket (post-run half lives after spark-stop):
-    # like the single probe, the gate takes the MIN of both brackets so a
-    # window that was capped at either end of the timed run is labeled.
-    agg_pre = _agg_probe_mbps(cores) if cores > 1 else None
-    probe_pre_single = probe_pre
-    _mark("probes")
-    # single attempt here: the parent scaling loop handles retries
-    res = run_replay(spark, log_path, args.events, args.chunk, args.mode,
-                     args.buckets, workdir, dedup=args.dedup, retries=1)
-    _mark("timed-replay")
-    # Quiesce the JVM BEFORE the post-run probe: at hi core counts the
-    # still-live executor's teardown work (GC, shuffle cleaner, temp-file
-    # sweeps) shares the pin set with the single-thread memcpy and read as
-    # a 3.5x ambient-bandwidth collapse (r3c pair 1: probe_mbps_hi 2024 vs
-    # 7265 ambient, killing the study's BEST pair) — a self-contention
-    # false positive that systematically anti-selects well-scaled samples,
-    # because the healthier the hi run, the more teardown overlaps the
-    # probe. The probe buffers are tmpfs mmaps, independent of Spark.
-    spark.stop()
-    _mark("spark-stop")
-    probe_post = _dram_probe_mbps()
-    res["probe_mbps"] = round(min(probe_pre, probe_post), 1)
-    if cores > 1:
-        # aggregate-ceiling evidence for the parent's bw gate: how much
-        # bandwidth can these N pinned cores pull TOGETHER, relative to
-        # the single-thread probe taken in the same instant (see BW_OK);
-        # min over the pre/post brackets, like the single-thread gate
-        agg_post = _agg_probe_mbps(cores)
-        res["agg_mbps"] = round(min(agg_pre or agg_post, agg_post), 1)
-        ratios = [agg_post / max(probe_post, 1.0)]
-        if agg_pre is not None:
-            ratios.append(agg_pre / max(probe_pre_single, 1.0))
-        res["bw_headroom"] = round(min(ratios), 2)
-    res["fault_mbps"] = _FAULT_MBPS  # page-supply rate seen at first alloc
-    res["disk_mbps"] = _disk_probe_mbps()
-    res["phases"] = phases  # where the wall went (post-mortem for timeouts)
-    _mark("post-probes")
-    print(json.dumps(res))
-    sys.stdout.flush()
-
-
-def _core_speed(cpu: int, n: int = 500_000) -> float:
-    """~20 ms pinned busy-loop, M iter/s — relative health of one vCPU."""
-    os.sched_setaffinity(0, {cpu})
-    t0 = time.perf_counter()
-    s = 0
-    for i in range(n):
-        s += i
-    return n / (time.perf_counter() - t0) / 1e6
-
-
-def _pick_pin_base(n_lo: int, n_hi: int) -> int:
-    """Measure per-core health and choose the rotation base whose lo+hi pin
-    sets avoid degraded cores.
-
-    Measured 2026-08-17: one vCPU ran a pinned replay 5-7× slower than its
-    neighbors for tens of minutes with clean steal and clean DRAM probes —
-    blind base rotation parks whole 20-minute samples on such a core. A
-    ~0.7 s sweep of 20 ms pinned busy-loops before each round finds the
-    degraded cores; the base maximizing the slowest member of the union
-    pin set dodges them. Falls back to base 0 when affinity APIs are
-    unavailable."""
-    try:
-        saved = os.sched_getaffinity(0)
-    except (AttributeError, OSError):
-        return 0
-    try:
-        speeds = {c: _core_speed(c) for c in range(1, HOST_CPUS)}
-        scored = []
-        seen = set()
-        for b in range(HOST_CPUS - 1):
-            cpus = frozenset(_pin_set(n_lo, b) | _pin_set(n_hi, b))
-            if cpus in seen:
-                continue
-            seen.add(cpus)
-            scored.append((min(speeds.get(c, 0.0) for c in cpus), b))
-        scored.sort(reverse=True)
-        best_speed = scored[0][0]
-        # Aggregate-bandwidth tie-break over the busy-loop survivors:
-        # measured 2026-08-19, one pin set's N-thread aggregate memcpy ran
-        # at 10.5 GB/s while its neighbors hit 19-21, with every per-core
-        # busy-loop healthy — a compute probe cannot see a memory-path
-        # squeeze. Among bases within 15% of the best core speed, probe
-        # the hi pin set's aggregate bandwidth (~0.1 s each) and take the
-        # widest pipe.
-        cand = [b for s, b in scored[:4] if s >= best_speed * 0.85]
-        if len(cand) > 1:
-            best_base, best_agg = cand[0], -1.0
-            for b in cand:
-                os.sched_setaffinity(0, _pin_set(n_hi, b))
-                agg = _agg_probe_mbps(n_hi, mb=64, reps=2)
-                if agg > best_agg:
-                    best_base, best_agg = b, agg
-            return best_base
-        return scored[0][1]
-    finally:
-        os.sched_setaffinity(0, saved)
-
-
-def _seg_files(n_events: int) -> int:
-    """File count for a scaling-slice change log: ~20k events/segment
-    (the production WAL shape). The fixed 128-file layout made a 250k-event
-    sample read 128 ~2k-event files — per-file scan-task scheduling and
-    footer work became the Amdahl term and the measured 1→4 pair dropped to
-    ~0.73 with every probe clean (r3: 12-file relayout alone moved the same
-    pair to ~0.8 and raised absolute rates 1.7-2×). Segment size must scale
-    with the slice, like a real relay's size-rolled segments."""
-    return max(8, n_events // 20_000)
-
-
-def _one_scaling_sample(cores: int, n_events: int, n_docs: int, chunk: int,
-                        mode: str, dedup: str,
-                        pin_base: int, probe_floor: float = 0.0,
-                        budget_s: float = 1e9,
-                        exp_rate: float = 3000.0,
-                        meas_rate: float = 0.0) -> dict | None:
-    """One pinned replay subprocess; None when it exceeds the poisoned-core
-    timeout (a healthy sample runs minutes; 5-7× slow means the pinned
-    core is degraded and the whole pair should be retried elsewhere) or
-    when ``budget_s`` can't fit even a gate-shortened sample.
-
-    The subprocess's bounded pre-run waits (writeback drain, probe-floor
-    quiet window) are passed down explicitly and counted into the timeout,
-    so a sample that merely waited at a gate is never misclassified as a
-    poisoned core; when the remaining budget is tight the waits shrink
-    first and the timed work is preserved."""
-    # pessimistic timed+warmup work allowance; exp_rate rises to 0.6x the
-    # study's best measured per-core rate so a fast window's escalated
-    # slice isn't refused on a slow-window worst case
-    work = int(n_events * 2 / (exp_rate * cores))
-    drain_t = int(min(180, max(budget_s * 0.2, 20)))
-    probe_w = int(min(120, max(budget_s * 0.1, 0))) if probe_floor > 0 else 0
-    # 150 s fixed: JVM startup + log-cache check + warmup replay batch
-    timeout = int(min(150 + drain_t + probe_w + work, budget_s))
-    # Affordability gate, decoupled from the poisoned-core timeout: before
-    # any rate is measured, require the full pessimistic allowance; once
-    # the study has a measured per-core lo rate, gate on a REALISTIC cost
-    # (1.5x expected work at that rate + 120 s fixed). The old gate
-    # composed the 2x work allowance with the 0.6x rate hedge (3.3x the
-    # actual cost), which refused the escalated 2M slice precisely in the
-    # fast windows that could afford it (r4 run 1: never attempted with
-    # ~600 s remaining; a 2M pair actually costs ~300 s in the window that
-    # triggers escalation). An attempt that does run out of wall is killed
-    # at timeout=budget_s and recorded as a timeout pair — it only spends
-    # tail budget that would otherwise go unused.
-    need = 60 + work
-    if meas_rate > 0:
-        need = min(need, int(1.5 * n_events / (meas_rate * cores)) + 120)
-    if timeout < need:
-        return "NO_BUDGET"  # distinct from a timed-out sample: caller stops
-    cmd = [
-        sys.executable, os.path.abspath(__file__), "--replay-only",
-        "--master", f"local[{cores}]", "--events", str(n_events),
-        "--docs", str(n_docs), "--chunk", str(chunk), "--mode", mode,
-        "--files", str(_seg_files(n_events)),
-        "--dedup", dedup, "--pin", "--pin-base", str(pin_base),
-        "--probe-floor", str(probe_floor),
-        "--drain-timeout", str(drain_t), "--probe-wait", str(probe_w),
-    ]
-    env = dict(os.environ, SPARK_GRAFT_CPUS=str(cores))
-    # Bounded heap for the sample JVM: in bad windows the host supplies
-    # fresh pages at ~6-12 MB/s, so every GB the JVM grows into is minutes
-    # of invisible stall — a 250k-event replay fits comfortably in 8g.
-    env.setdefault("SPARK_DRIVER_MEM", "8g")
-    timeout = int(os.environ.get("SPARK_GRAFT_SCALE_SAMPLE_TIMEOUT", timeout))
-    try:
-        r = subprocess.run(cmd, capture_output=True, text=True, env=env,
-                           timeout=timeout)
-    except subprocess.TimeoutExpired as e:
-        err = (e.stderr or b"")
-        if isinstance(err, bytes):
-            err = err.decode(errors="replace")
-        # the subprocess's phase marks say where the wall actually went
-        marks = [l for l in err.splitlines() if l.startswith("[replay-only]")]
-        sys.stderr.write(
-            f"[scaling] {cores}-core sample timed out after {timeout}s; "
-            f"phases: {'; '.join(marks) or '(none)'}\n"
-        )
-        return None
-    try:
-        line = [l for l in r.stdout.strip().splitlines() if l.startswith("{")][-1]
-        return json.loads(line)
-    except (IndexError, json.JSONDecodeError):
-        return None
-
-
-def _median(xs: list[float]) -> float:
-    s = sorted(xs)
-    n = len(s)
-    return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2
-
-
-def scaling_study(n_events: int, n_docs: int, chunk: int, mode: str,
-                  n_lo: int, n_hi: int, dedup: str = "max_by",
-                  deadline: float | None = None,
-                  fallback_events: int = 0,
-                  escalate_ladder: list[int] | None = None) -> dict:
-    """Same job, two parallelism levels, fresh (JIT-warmed) JVM each.
-
-    Sampling protocol (the measurement, not the engine, is the noisy part
-    on this host — see BENCH/BASELINE.md):
-    - samples come in interleaved (lo, hi) PAIRS run back-to-back, so a
-      host-contention episode lands on both halves of a pair rather than
-      on one whole level;
-    - each subprocess pins a stride-spread CPU set whose base rotates per
-      round (adjacent vCPUs share host resources; a single bad physical
-      core must not poison a level);
-    - every subprocess brackets its timed run with a single-thread DRAM
-      memcpy probe; a pair is 'clean' only when both halves pass the steal
-      check AND both probes reach PROBE_OK of the study's best probe — the
-      bandwidth gate catches the bus contention that steal jiffies cannot;
-    - sampling continues until >=`SPARK_GRAFT_SCALE_PAIRS` probe-clean
-      pairs (default 3), `SPARK_GRAFT_SCALE_MAX_ROUNDS` rounds
-      (default 6), or the wall-clock ``deadline`` — whichever first; the
-      study reports whatever gated median exists at that point rather
-      than blocking the whole bench artifact on 3 clean pairs;
-    - headline = median of per-pair efficiencies over clean pairs (all
-      pairs if none are clean), with raw samples reported for
-      transparency;
-    - the slice is sized in TIME, not events: the per-batch serial driver
-      term (~4-6 s of job scheduling + snapshot commit) is fixed, so the
-      Amdahl efficiency cap depends on how long the 1-core leg runs — a
-      500 k slice that measures t1~180 s in a slow window caps at ~0.93,
-      but the SAME slice in a fast window (10 k ev/s/core measured
-      2026-08-18, 3.7x the slow-window rate, all gates green both times)
-      runs t1~49 s and caps at ~0.73 — the pair then measures the
-      driver's serial term, not the engine. When a completed pair's lo
-      leg shows t1 < ESCALATE_T1 the study switches to the next
-      pre-generated ladder slice big enough to push t1 back over the
-      threshold (budget permitting, at the measured rate with a 30%
-      margin); the headline's slice-homogeneity rule then keeps the
-      escalated pairs and the warm-up-sized ones from averaging.
-    """
-    want_pairs = int(os.environ.get("SPARK_GRAFT_SCALE_PAIRS", "3"))
-    # Runaway backstop only — the wall-clock deadline is the real bound.
-    # (The old default of 6 stopped a contended-window study with 200 s of
-    # budget unused, exactly when extra rounds had the best odds of
-    # catching a clean window.)
-    max_rounds = int(os.environ.get("SPARK_GRAFT_SCALE_MAX_ROUNDS", "48"))
-    pairs: list[dict] = []
-
-    def _mark_clean() -> int:
-        full = [p for p in pairs if not p.get("timeout")]
-        probes = [p["probe_mbps_lo"] for p in full] + [
-            p["probe_mbps_hi"] for p in full
-        ]
-        ref = max([p for p in probes if p] or [0.0])
-        for p in pairs:
-            if p.get("timeout"):
-                p["clean"] = False
-                continue
-            probe_min = min(p["probe_mbps_lo"] or 0.0, p["probe_mbps_hi"] or 0.0)
-            # relative gate (bus-collapse detector) with an absolute-healthy
-            # escape: a pair probing >= PROBE_ABS_OK is clean regardless of
-            # how lucky the study's best probe reading was (see PROBE_ABS_OK)
-            probe_ok = probe_min >= min(PROBE_OK * ref, PROBE_ABS_OK)
-            # Page-supply gate: in bad windows the host hands out fresh
-            # pages at 5-15 MB/s (healthy: GB/s) while memcpy probes AND
-            # steal both read clean — a sample whose JVM faulted its
-            # working set at that rate timed the host, not the engine.
-            # Clearly bimodal, so a fixed floor works.
-            fault_ok = (
-                min(p.get("fault_mbps_lo") or 1e9, p.get("fault_mbps_hi") or 1e9)
-                >= FAULT_OK
-            )
-            # Aggregate-bandwidth gate: the hi leg measures (inside its
-            # pin set, bracketing the timed run) how much bandwidth its N
-            # cores can pull TOGETHER. A window whose aggregate caps at
-            # ~9-10 GB/s (vs 19-21 healthy) clips every DRAM-bound hi leg
-            # to ~0.63 with all single-threaded probes green (r4 run 4).
-            # Gate is absolute (see AGG_OK) with a ratio escape for
-            # unlike hardware; a missing reading (old artifact / lo-only)
-            # passes — the gate only excludes measured-capped windows.
-            agg = p.get("agg_mbps_hi")
-            bw = p.get("bw_headroom")
-            bw_ok = (agg is None or agg >= AGG_OK
-                     or (bw is not None and bw >= BW_OK))
-            # Superlinear sanity gate: efficiency far above 1.0 can only
-            # mean the lo leg was burst-depressed (see SUPER_OK) — the
-            # flattering mirror image of a clipped hi leg, equally dirty.
-            super_ok = (p.get("efficiency") or 0.0) <= SUPER_OK
-            p["probe_ok"], p["fault_ok"], p["bw_ok"] = probe_ok, fault_ok, bw_ok
-            p["super_ok"] = super_ok
-            p["clean"] = (p["steal_ok"] and probe_ok and fault_ok and bw_ok
-                          and super_ok)
-        return sum(p["clean"] for p in pairs)
-
-    # Cheapest credible pair: timed+warmup work at an *expected* 4k
-    # events/s/core plus ~200 s of fixed startup/gates for both halves
-    # (2 x (JVM start ~10 + probes + slack)); the warmup replays at most
-    # 30k events (see replay_only), so it is part of the fixed term, not
-    # a second full slice. Deliberately not worst-case — the per-sample
-    # timeout already bounds a degraded sample, and a truncated attempt
-    # beats declining to try.
-    # Expected per-core rate for floor estimates: pessimistic 4k ev/s/core
-    # until a pair completes, then 0.6x the best MEASURED lo rate (windows
-    # vary 2.7k-10k ev/s/core; a fixed 4k floor at an escalated slice
-    # would un-escalate it immediately in exactly the fast windows that
-    # needed the bigger slice).
-    seen_rate = 0.0
-    # Max MEASURED per-leg overhead (sample wall minus n/rate: JVM start,
-    # probe/drain waits, warmup). The fixed 280 s worst-case pad refused a
-    # third affordable 1M pair in r4 run 3 (~400 s remaining vs a 479 s
-    # floor while real per-leg overhead ran ~30-60 s) — once a pair has
-    # completed, hedge 1.3x the measured overhead instead of assuming the
-    # worst; a mis-hedge costs one truncated attempt (watchdog still
-    # emits), the worst-case pad costs systematically missing pairs.
-    seen_ovh = 0.0
-
-    def _pair_floor(n: int) -> int:
-        # Once a rate is measured, mirror the sample-launch requirement
-        # exactly (realistic lo-leg cost + the hi-leg reserve) so the
-        # round gate, the escalation affordability check, and the
-        # NO_BUDGET gate agree — two different cost models here measurably
-        # bounce the slice (escalate → floor-shrink → re-escalate).
-        if seen_rate > 0:
-            hedged = max(4000.0, 0.6 * seen_rate)
-            pads = max(80.0, 2.6 * seen_ovh) if seen_ovh > 0 else 280.0
-            return int(1.5 * n / (seen_rate * n_lo)
-                       + 1.3 * n / (hedged * n_hi) + pads)
-        return int(n / (4000.0 * n_lo) + n / (4000.0 * n_hi)) + 200
-
-    def _headline_slice(clean: list[dict]) -> int:
-        """Largest slice with >=2 clean pairs (a 1-pair 'median' over a
-        window that swings 1.7x between back-to-back hi legs is not a
-        headline); falls back to the largest slice present when no slice
-        has two."""
-        counts: dict[int, int] = {}
-        for p in clean:
-            counts[p["events"]] = counts.get(p["events"], 0) + 1
-        multi = [e for e, c in counts.items() if c >= 2]
-        return max(multi) if multi else (max(counts) if counts else 0)
-
-    pair_floor = _pair_floor(n_events)
-    budget_stop = False
-    best_probe = 0.0
-    # Ambient host health at study start: when the study returns few or no
-    # pairs, these say WHY (page-supply collapse and disk saturation are
-    # invisible to steal jiffies) without any sample having to complete.
-    ambient = {
-        "dram_mbps": _dram_probe_mbps(),
-        "fault_mbps": _FAULT_MBPS,
-        "disk_mbps": _disk_probe_mbps(),
-        # wall already spent when the study began — says whether a small
-        # slice was a budget squeeze (late start) or a window judgment
-        "t_start_sec": round(time.time() - _T0, 1),
-    }
-    # Page-supply collapse visible BEFORE the first sample → start at the
-    # small slice immediately instead of burning ~400 s discovering it via
-    # a full-size timeout (r3 validation run paid exactly that).
-    if (fallback_events and n_events > fallback_events
-            and (ambient["fault_mbps"] or 1e9) < FAULT_OK):
-        n_events = chunk = fallback_events
-        pair_floor = _pair_floor(n_events)
-
-    base_events = n_events
-
-    def _shrink() -> bool:
-        """Step the slice DOWN one pre-generated ladder level (escalated →
-        base → fallback), so a budget squeeze after an escalation retries
-        the base slice instead of jumping straight to the noisy fallback.
-        Returns False at the bottom."""
-        nonlocal n_events, chunk, pair_floor
-        downs = sorted(d for d in ({fallback_events, base_events}
-                                   | set(escalate_ladder or ()))
-                       if d and d < n_events)
-        if not downs:
-            return False
-        n_events = chunk = downs[-1]
-        pair_floor = _pair_floor(n_events)
-        return True
-
-    for rnd in range(max_rounds):
-        remaining = (deadline - time.time()) if deadline else 1e9
-        # Not enough wall left for a pair at this slice: shrink a level
-        # (noisier, but a small measured pair beats none; the parent
-        # pre-generated every ladder log). Recorded per-pair via 'events'.
-        while remaining < pair_floor and _shrink():
-            pass
-        if remaining < pair_floor:
-            budget_stop = True
-            break
-        # A pair below a SECURED headline slice (>=2 clean pairs — a real
-        # median) can never join the slice-homogeneous headline — stop
-        # instead of spending the tail of the wall on context-only small
-        # pairs (r4 run 3 spent ~300 s on a 500k and a 100k pair after two
-        # 1M pairs existed). A 1-pair slice doesn't block smaller rounds:
-        # two pairs at an affordable slice beat one unquorate big pair.
-        _secured = {}
-        for p in pairs:
-            if p.get("clean"):
-                _secured[p["events"]] = _secured.get(p["events"], 0) + 1
-        if n_events < max((e for e, c in _secured.items() if c >= 2),
-                          default=0):
-            budget_stop = True
-            break
-        # quiet-window wait target, capped at the absolute-healthy floor so
-        # one lucky 8.8 GB/s probe doesn't make later samples wait for a
-        # window that never comes (same rationale as the clean-gate escape)
-        floor = min(PROBE_OK * best_probe, PROBE_ABS_OK)
-        base = _pick_pin_base(n_lo, n_hi)
-        # ABBA ordering: alternate which half runs first each round. A
-        # monotone host-drift window (page supply recovering, neighbor
-        # ramping up) biases every (lo, hi) pair the same direction; with
-        # alternating order the drift bias flips sign pair-to-pair and the
-        # median over >=3 pairs cancels it instead of inheriting it.
-        first_cores, second_cores = (n_lo, n_hi) if rnd % 2 == 0 else (n_hi, n_lo)
-        # Reserve for the pair's second half: 1.3x the expected work at
-        # the hedged rate plus fixed startup/gates. (Was 2x at a fixed
-        # 4k ev/s/core — 3x+ pessimistic in fast windows, which starved
-        # escalated slices of budget they actually fit; a mid-pair
-        # slowdown is already handled by the per-sample timeout + the
-        # NO_BUDGET shrink-and-retry path.)
-        _r = max(4000.0, 0.6 * seen_rate)
-        _pad = max(80.0, 1.3 * seen_ovh) if seen_ovh > 0 else 160.0
-        second_reserve = int(1.3 * n_events / (_r * second_cores) + _pad)
-        _tw1 = time.time()
-        first = _one_scaling_sample(first_cores, n_events, n_docs, chunk,
-                                    mode, dedup, pin_base=base,
-                                    probe_floor=floor,
-                                    budget_s=remaining - second_reserve,
-                                    exp_rate=max(3000.0, 0.6 * seen_rate),
-                                    meas_rate=seen_rate)
-        wall_first, second = time.time() - _tw1, None
-        if first is not None and first != "NO_BUDGET":
-            remaining = (deadline - time.time()) if deadline else 1e9
-            _tw2 = time.time()
-            second = _one_scaling_sample(second_cores, n_events, n_docs,
-                                         chunk, mode, dedup,
-                                         pin_base=base, probe_floor=floor,
-                                         budget_s=remaining,
-                                         exp_rate=max(3000.0, 0.6 * seen_rate),
-                                         meas_rate=seen_rate)
-            wall_second = time.time() - _tw2
-        if "NO_BUDGET" in (first, second):
-            # A full-size sample no longer fits, but a fallback-size pair
-            # might (headline stays slice-homogeneous, so extra small pairs
-            # only add context — they never dilute the full-size median).
-            # 'first' hit the gate before launching anything, so no wall
-            # was burned; shrink and retry the round at the smaller slice.
-            if first == "NO_BUDGET" and _shrink():
-                continue
-            budget_stop = True
-            break
-        lo, hi = (first, second) if rnd % 2 == 0 else (second, first)
-        if lo is None or hi is None:
-            if deadline and deadline - time.time() < pair_floor:
-                pairs.append({"round": rnd, "pin_base": base, "timeout": True,
-                              "budget_truncated": True, "clean": False})
-                budget_stop = True
-                break
-            # poisoned-core / degraded-window sample exceeded its timeout;
-            # record the miss and re-probe for a better pin next round
-            pairs.append({"round": rnd, "pin_base": base, "timeout": True,
-                          "clean": False})
-            # A timeout means the window is slow (page supply, bus, or a
-            # degraded core) — drop straight to the smaller slice so the
-            # NEXT attempt's work term shrinks 2.5x instead of burning the
-            # remaining wall on a second full-size miss.
-            if fallback_events and n_events > fallback_events:
-                n_events = chunk = fallback_events
-                pair_floor = _pair_floor(n_events)
-            continue
-        best_probe = max(best_probe, lo.get("probe_mbps") or 0.0,
-                         hi.get("probe_mbps") or 0.0)
-        eff = (hi["events_per_sec"] / lo["events_per_sec"]) / (n_hi / n_lo)
-        t1 = n_events / lo["events_per_sec"]
-        seen_rate = max(seen_rate, lo["events_per_sec"] / n_lo)
-        # measured per-leg overhead = sample wall minus timed work
-        wall_lo, wall_hi = ((wall_first, wall_second) if rnd % 2 == 0
-                           else (wall_second, wall_first))
-        seen_ovh = max(seen_ovh,
-                       wall_lo - n_events / lo["events_per_sec"],
-                       wall_hi - n_events / hi["events_per_sec"])
-        pairs.append({
-            "round": rnd,
-            "t1_sec": round(t1, 1),
-            "events": n_events,
-            "pin_base": base,
-            "order": "lo-hi" if rnd % 2 == 0 else "hi-lo",
-            "events_per_sec_lo": lo["events_per_sec"],
-            "events_per_sec_hi": hi["events_per_sec"],
-            "efficiency": round(eff, 3),
-            "steal_ok": (lo.get("steal_frac", 0.0) <= STEAL_OK
-                         and hi.get("steal_frac", 0.0) <= STEAL_OK),
-            "steal_frac_lo": lo.get("steal_frac"),
-            "steal_frac_hi": hi.get("steal_frac"),
-            "fault_mbps_lo": lo.get("fault_mbps"),
-            "fault_mbps_hi": hi.get("fault_mbps"),
-            "probe_mbps_lo": lo.get("probe_mbps"),
-            "probe_mbps_hi": hi.get("probe_mbps"),
-            "agg_mbps_hi": hi.get("agg_mbps"),
-            "bw_headroom": hi.get("bw_headroom"),
-        })
-        # Time-targeted slice escalation: a short lo leg means the fixed
-        # serial term dominates the pair (see docstring). Switch to the
-        # smallest pre-generated ladder slice that pushes t1 back over the
-        # threshold, if the remaining wall fits a pair at the MEASURED
-        # rate (x1.3 safety) — a fast window is exactly when big slices
-        # are cheap. De-escalation on timeout/NO_BUDGET stays as-is.
-        if t1 < ESCALATE_T1 and (escalate_ladder or n_events < base_events):
-            rate_lo = lo["events_per_sec"]
-            remaining = (deadline - time.time()) if deadline else 1e9
-            # affordability uses the SAME floor the round loop gates on —
-            # two different cost models here measurably bounce the slice
-            # (escalate → floor-shrink → re-escalate). base_events is a
-            # candidate too: an ambient-probe demotion to the fallback
-            # slice must be able to climb BACK to the base slice once a
-            # measured pair shows the window affords it (r4 run 2 stayed
-            # pinned at 100k — cap ~0.66 — because the ladder held only
-            # 1M/2M rungs while the affordable 500k base wasn't a target).
-            afford = [L for L in sorted({base_events, *escalate_ladder})
-                      if L > n_events and remaining > _pair_floor(L)]
-            # smallest affordable size that restores t1 >= threshold;
-            # else the largest affordable one (partial de-dilution of the
-            # serial term still beats staying put)
-            target = next((L for L in afford if L / rate_lo >= ESCALATE_T1),
-                          afford[-1] if afford else None)
-            if target:
-                sys.stderr.write(
-                    f"[scaling] t1={t1:.0f}s < {ESCALATE_T1}s at "
-                    f"{n_events} events (fast window, serial-term "
-                    f"regime); escalating slice to {target}\n")
-                n_events = chunk = target
-                pair_floor = _pair_floor(n_events)
-        # Stop on clean pairs AT THE HEADLINE SLICE (the largest slice any
-        # clean pair has), not across slices: after an escalation the
-        # first run stopped with 3 clean pairs of which only 2 were at the
-        # escalated slice — a 2-pair median over a window that swings 1.7x
-        # between back-to-back hi legs, with 600 s of budget unused.
-        _mark_clean()
-        clean_now = [p for p in pairs if p["clean"]]
-        if clean_now:
-            top_now = _headline_slice(clean_now)
-            if sum(p["events"] == top_now for p in clean_now) >= want_pairs:
-                break
-    _mark_clean()
-    full = [p for p in pairs if not p.get("timeout")]
-    # Tiered evidence: fully-gated pairs; else pairs clean on steal+DRAM
-    # (only the page-supply gate failed — the least-biased contaminated
-    # tier: fault collapse slows both halves where steal poisons one);
-    # else every completed pair. The tier is REPORTED so a consumer can
-    # weigh the number instead of mistaking a poisoned-window median for
-    # a clean one.
-    tiers = [
-        ("clean", [p for p in pairs if p["clean"]]),
-        # every gate green EXCEPT aggregate bandwidth: the pairs are
-        # honest measurements of a window whose host caps the N-core
-        # aggregate DRAM rate below AGG_OK — their median is a FLOOR on
-        # the engine's scaling, not its capability (see AGG_OK)
-        ("bw-capped", [p for p in full if p["steal_ok"] and p.get("probe_ok")
-                       and p.get("fault_ok") and p.get("super_ok", True)]),
-        ("steal+probe", [p for p in full if p["steal_ok"] and p.get("probe_ok")
-                         and p.get("super_ok", True)]),
-        ("all", full),
-    ]
-    tier_name, use = next(((n, t) for n, t in tiers if t), ("none", []))
-    # Slice-homogeneous headline: pair efficiency is slice-size-dependent
-    # (the fixed per-batch serial term s~4 s caps a clean 100k-event pair
-    # at ~0.66 and a 250k pair at ~0.80 on a QUIET host — measured curve,
-    # see the s_events comment in main), so mixing fallback-slice pairs
-    # into the median with full-size ones averages two different Amdahl
-    # regimes. Headline uses only the largest slice present in the tier;
-    # smaller (degraded-window fallback) pairs stay visible in `pairs`.
-    if use:
-        top = _headline_slice(use)
-        use = [p for p in use if p["events"] == top]
-    if not use:
-        return {
-            "cores_lo": n_lo, "cores_hi": n_hi, "events": n_events,
-            "mode": mode, "dedup": dedup, "budget_stop": budget_stop,
-            "error": "no completed pairs"
-            + (" (wall budget exhausted)" if budget_stop else " (all timed out)"),
-            "ambient": ambient,
-            "pairs": pairs,
-        }
-    return {
-        "cores_lo": n_lo,
-        "cores_hi": n_hi,
-        "events": n_events,
-        "mode": mode,
-        "dedup": dedup,
-        "events_per_sec_lo": _median([p["events_per_sec_lo"] for p in use]),
-        "events_per_sec_hi": _median([p["events_per_sec_hi"] for p in use]),
-        "scaling_efficiency": round(_median([p["efficiency"] for p in use]), 3),
-        # timeit-style best-of per level: on a steal-prone VM measurement
-        # noise is strictly one-directional (contention only ever SLOWS a
-        # run), so the max rate observed at each level is the closest
-        # estimate of the machine's true capability — reported alongside
-        # the pair median for transparency, not as the headline.
-        "efficiency_best": round(
-            max(p["events_per_sec_hi"] for p in use)
-            / max(p["events_per_sec_lo"] for p in use) / (n_hi / n_lo), 3),
-        "headline_events": use[0]["events"],
-        "headline_pairs": len(use),
-        "evidence_tier": tier_name,
-        "clean_pairs": len([p for p in pairs if p["clean"]]),
-        # median N-core aggregate DRAM bandwidth over the headline pairs:
-        # the window's DRAM Amdahl context (19-21 GB/s healthy on this
-        # box, 9.4-10.5 = the r4-run-4 capped regime; gate at AGG_OK)
-        "agg_mbps": (_median([p["agg_mbps_hi"] for p in use
-                              if p.get("agg_mbps_hi") is not None])
-                     if any(p.get("agg_mbps_hi") is not None for p in use)
-                     else None),
-        "budget_stop": budget_stop,
-        "ambient": ambient,
-        "pairs": pairs,
-    }
-
-
 def main() -> None:
-    p = argparse.ArgumentParser()
-    p.add_argument("--replay-only", action="store_true")
-    p.add_argument("--master", default=None)
-    p.add_argument("--events", type=int, default=None)
-    p.add_argument("--docs", type=int, default=None)
-    p.add_argument("--chunk", type=int, default=None)
-    p.add_argument("--mode", default=os.environ.get("SPARK_GRAFT_BENCH_MODE", "mor"))
-    # prefilter: narrow winner agg + broadcast join — wide token arrays never
-    # shuffle. Right for this job shape (winners-per-batch ~200k ≈ 5 MB
-    # broadcast); use max_by when a batch's winner set exceeds broadcast size.
-    p.add_argument("--dedup", default=os.environ.get("SPARK_GRAFT_BENCH_DEDUP", "prefilter"))
-    p.add_argument("--buckets", type=int, default=32)
-    p.add_argument("--seed", type=int, default=42)
-    p.add_argument("--files", type=int, default=128)
-    p.add_argument("--pin", action="store_true")
-    p.add_argument("--pin-base", type=int, default=0)
-    p.add_argument("--probe-floor", type=float, default=0.0)
-    p.add_argument("--drain-timeout", type=int, default=180)
-    p.add_argument("--probe-wait", type=int, default=120)
-    p.add_argument("--skip-scaling", action="store_true")
-    args = p.parse_args()
+    from omicidx_etl_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
@@ -1395,17 +235,11 @@ def main() -> None:
     except ValueError:
         sf = 0.1
     # Replay size scales with sf: sf0.1 -> 2M events / 200k docs.
-    n_events = args.events or max(int(20_000_000 * sf), 100_000)
-    n_docs = args.docs or max(int(2_000_000 * sf), 10_000)
-    chunk = args.chunk or max(n_events // 4, 1)
+    n_events = max(int(20_000_000 * sf), 100_000)
+    n_docs = max(int(2_000_000 * sf), 10_000)
+    chunk = max(n_events // 4, 1)
 
-    if args.replay_only:
-        args.events, args.docs, args.chunk = n_events, n_docs, chunk
-        replay_only(args)
-        return
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    _arm_watchdog()
+    _emit_on_signal()
     _RESULT.update({
         "metric": "headline-suite seconds (queries + CDC replay) at sf; "
                   "replay.events_per_sec is the north-star throughput",
@@ -1413,102 +247,17 @@ def main() -> None:
         "unit": "sec",
         "sf": sf,
         "scratch": SCRATCH,
-        "budget_sec": BUDGET,
     })
-    spark = _spark(f"local[{cpus}]", cpus)
+    spark = get_spark("bench")
     q_times = bench_queries(spark, sf_dir)
     _RESULT["queries"] = q_times
     _RESULT["value"] = round(sum(q_times.values()), 3)
-    log_path = ensure_change_log(spark, n_events, n_docs, args.seed, args.files)
-    replay = run_replay(spark, log_path, n_events, chunk, args.mode,
-                        args.buckets, os.path.join(CACHE, "replay_main"),
-                        dedup=args.dedup, retries=3 if _remaining() > 240 else 1)
+    log_path = ensure_change_log(spark, n_events, n_docs, SEED, FILES)
+    replay = run_replay(spark, log_path, n_events, chunk,
+                        os.path.join(CACHE, "replay_main"))
     _RESULT["replay"] = replay
     _RESULT["value"] = round(sum(q_times.values()) + replay["sec"], 3)
-    # pre-build the scaling slice's log at full parallelism so the first
-    # (1-core-pinned) subprocess doesn't pay the generation cost. Slice
-    # sizing is an Amdahl decision, measured on this boot's quiet-window
-    # curve (2026-08-18: 250k events, 1/2/4/8 pinned cores -> 5503/9885/
-    # 17545/28612 ev/s fits t(n) = P/n + s with P = 41.6 s of parallel work
-    # and s = 3.9 s of FIXED per-batch serial driver work — job scheduling,
-    # snapshot commit — predicting the 2- and 8-core points within 3%).
-    # At 250k events that serial term alone caps a PERFECTLY QUIET 1->4
-    # pair at 0.80; at 500k the same machine measures ~0.88, and real
-    # deployments replay 10^6+-event chunks where s is <1%. 500k keeps a
-    # full (lo, hi) pair inside ~5-6 min, so 2-3 pairs fit the wall budget.
-    # The full-rigor 1M-event study (BENCH/BASELINE.md) stays reachable via
-    # SPARK_GRAFT_SCALE_EVENTS + a larger SPARK_GRAFT_BENCH_BUDGET.
-    s_events = int(os.environ.get("SPARK_GRAFT_SCALE_EVENTS",
-                                  str(min(n_events, 500_000))))
-    ensure_change_log(spark, s_events, n_docs, args.seed, _seg_files(s_events))
-    s_fallback = min(s_events, 100_000)
-    if s_fallback < s_events:
-        ensure_change_log(spark, s_fallback, n_docs, args.seed,
-                          _seg_files(s_fallback))
-    # Escalation ladder for fast windows (see scaling_study docstring /
-    # ESCALATE_T1): pre-generate the 2x slice at full parallelism so an
-    # escalated sample never pays generation inside its own wall. One rung
-    # only, and only when the remaining budget could actually afford an
-    # escalated pair — the first escalation-run generated 2x AND 4x rungs
-    # unconditionally and spent ~5 min of a degraded window on logs the
-    # study then couldn't afford to use.
-    s_ladder = []
-    _L = min(2 * s_events, n_events)
-    if _L > s_events and _remaining() > 500:
-        ensure_change_log(spark, _L, n_docs, args.seed, _seg_files(_L))
-        s_ladder = [_L]
-        # 4x rung (2M at the driver's sf0.1): GENERATION is cheap (~10-20 s
-        # of column exprs at full width; often already cached as the main
-        # replay's log) — whether a 2M PAIR fits the remaining wall is the
-        # study's own affordability check (_pair_floor), not this guard's
-        # job. r3 gated this rung behind remaining > 1400, which a 1200 s
-        # driver budget can never satisfy: every fast-window pair was stuck
-        # at the 1M slice (t1 ~63 s, Amdahl cap ~0.83) with 600 s of budget
-        # left unused. The 2M slice runs t1 ~126 s -> cap ~0.90.
-        _L4 = min(4 * s_events, n_events)
-        if _L4 > _L and _remaining() > 600:
-            ensure_change_log(spark, _L4, n_docs, args.seed, _seg_files(_L4))
-            s_ladder.append(_L4)
     spark.stop()
-
-    scaling = None
-    if not args.skip_scaling and os.environ.get("SPARK_GRAFT_BENCH_SCALING", "1") != "0":
-        # N=1 vs 4N=4 pinned cores: the pair must sit inside the host's
-        # linear region — on this shared box the full-width token-array
-        # replay saturates shared DRAM bandwidth beyond ~4-8 concurrent
-        # cores (boot-dependent; neighbors share the bus), and a pair that
-        # straddles the knee measures the host's memory system, not the
-        # engine. On a real N→4N *executor* scale-up every executor brings
-        # its own memory bandwidth — the dimension capped here is exactly
-        # the one that grows. Full measured core curve: BENCH/BASELINE.md.
-        n_lo = int(os.environ.get("SPARK_GRAFT_SCALE_LO", "1"))
-        n_hi = int(os.environ.get("SPARK_GRAFT_SCALE_HI", "4"))
-        # The scaling pair replays its slice as ONE batch: per-batch
-        # driver-side work (job scheduling, broadcast build, snapshot
-        # commit, ~1.5-2 s) is serial, and at 4x125k-event micro-batches it
-        # is ~20% of the 4-core runtime — the pair would measure Amdahl on
-        # the driver, not the engine. Real deployments replay 10^6-10^8
-        # event chunks where that cost is <2%; one 1M-event batch is the
-        # representative shape (probe-gated study, BENCH/BASELINE.md).
-        s_chunk = int(os.environ.get("SPARK_GRAFT_SCALE_CHUNK", str(s_events)))
-        # The scaling pair runs the generic shuffle-dedup path (max_by):
-        # prefilter's per-core throughput is ~3x higher, which on ONE box
-        # pushes its 4-core level against the shared DRAM ceiling
-        # (measured 0.75-0.97 pair efficiency vs max_by's ~0.95) — on a
-        # real cluster each executor brings its own memory bus, the
-        # dimension this box cannot scale. Both paths' measured pairs are
-        # tabled in BENCH/BASELINE.md.
-        s_dedup = os.environ.get("SPARK_GRAFT_SCALE_DEDUP", "max_by")
-        # The study gets whatever wall budget remains (minus the watchdog's
-        # grace); it returns partial gated evidence rather than looping.
-        scaling = scaling_study(s_events, n_docs, s_chunk, args.mode, n_lo, n_hi,
-                                dedup=s_dedup,
-                                deadline=_T0 + BUDGET - 30,
-                                fallback_events=s_fallback,
-                                escalate_ladder=s_ladder)
-
-    _RESULT["scaling"] = scaling
-    _RESULT["disk_mbps"] = _disk_probe_mbps()
     _emit_result()
 
 

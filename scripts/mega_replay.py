@@ -75,7 +75,6 @@ def main() -> int:
     ap.add_argument("--dir", default="/dev/shm/spark_graft_mega")
     args = ap.parse_args()
 
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
     # 28g, not the default 48g: spark.local.dir is tmpfs (= RAM), so the
     # heap competes with shuffle files and the table itself for the same
     # 125 GB — the first 10^8 attempt OOM-killed at 44 GB JVM RSS + 59 GB

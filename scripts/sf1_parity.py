@@ -240,7 +240,6 @@ def main() -> int:
     build(args.dir)
     gen_sec = round(time.time() - t0, 1)
 
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "16")
     os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
     from omicidx_etl_spark import queries as Q
     from omicidx_etl_spark.plans.oracle import compare
@@ -251,7 +250,7 @@ def main() -> int:
         # minutes at a time (hypervisor page-supply stalls); the default
         # 120 s heartbeat kill wedges the session mid-sweep.
         return get_spark(
-            "sf1-parity", master="local[16]", shuffle_partitions=32,
+            "sf1-parity",
             extra_conf={
                 "spark.local.dir": os.path.join(args.dir, "_spark_local"),
                 "spark.network.timeout": "1200s",

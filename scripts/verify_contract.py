@@ -21,7 +21,6 @@ import shutil
 import sys
 import tempfile
 
-os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_VERIFY_SF", "/root/testdata/sf0.01")
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -53,7 +52,7 @@ def main() -> int:
 
     from omicidx_etl_spark.session import get_spark
 
-    spark = get_spark("verify", master="local[8]", shuffle_partitions=8)
+    spark = get_spark("verify")
 
     # --- 1. driver contract ---
     rows = E.entry(spark).count()

@@ -2,8 +2,8 @@
 ``spark-submit --py-files`` onto a ``local-cluster[2,4,2048]`` master —
 two REAL executor JVMs with their own Python workers, block managers and
 serialization boundaries (the closest a single box gets to the north
-rule's "multi-executor cluster at N and 4N executors"; the throughput
-half of that rule is bench.py's pinned-core pair, see BENCH/BASELINE.md).
+rule's "multi-executor cluster at N and 4N executors"; the 32-core
+throughput record is in BENCH/BASELINE.md).
 
 What only this test can catch (local[] cannot): code that accidentally
 depends on driver-local state — a file:// path visible only to the

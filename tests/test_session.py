@@ -87,11 +87,26 @@ def test_session_built_and_configured_only_in_session_py():
 
 
 def test_retired_options_stay_gone():
+    """Deleted options, the bench's 32-core scaling harness included, stay
+    deleted; only get_spark picks the core count; scripts stand alone."""
     assert not (PKG / "config.py").exists()
+    for gone in ("bench_extra.py", "scripts/executor_scaling.py", "scripts/sustained_replay.py"):
+        assert not (REPO / gone).exists(), gone
     retired = re.compile(
         r"fanout|SPARK_GRAFT_(PQ_BATCH|SHUFFLE_COMPRESS|WAL_CODEC|READ_PREFILTER_ROWS"
         r"|SESSION_WARMUP|COMPUTE_PARTS|BENCH_FANOUT)|SPARK_DRIVER_JAVA_OPTS"
+        r"|SPARK_GRAFT_BENCH_(BUDGET|STEAL_OK|PROBE_\w+|FAULT_OK|AGG_OK|BW_OK|SUPER_OK"
+        r"|SCALING|MODE|DEDUP|CACHE)|SPARK_GRAFT_SCALE_|SPARK_GRAFT_EXEC_"
+        # a hard-coded core count: environ.get/setdefault("SPARK_GRAFT_CPUS", "32")
+        # or environ["SPARK_GRAFT_CPUS"] = "32"
+        r"|SPARK_GRAFT_CPUS[\"']\s*(,|\]\s*=)"
+        r"|^(import|from) bench\b"
     )
-    files = sorted(PKG.rglob("*.py")) + sorted((REPO / "jobs").glob("*.py")) + [REPO / "bench.py"]
+    files = (
+        sorted(PKG.rglob("*.py"))
+        + sorted((REPO / "jobs").glob("*.py"))
+        + sorted((REPO / "scripts").glob("*.py"))
+        + [REPO / "bench.py"]
+    )
     hits = [f"{rel}:{n}: {line}" for rel, n, line in _lines(files) if retired.search(line)]
     assert hits == [], hits
