@@ -16,7 +16,9 @@ Two kinds of conf:
 
 The engine's only knobs are deployment settings: ``SPARK_GRAFT_CPUS``
 (core count, default: this process's CPU affinity), ``SPARK_MASTER`` and
-``SPARK_DRIVER_MEM``. Anything else goes through ``extra_conf``.
+``SPARK_DRIVER_MEM`` (driver heap, default: half of physical RAM in whole
+GiB, capped at 48g; see ``_driver_mem``). Anything else goes through
+``extra_conf``.
 """
 
 from __future__ import annotations
@@ -83,6 +85,23 @@ def _mem_gib(mem: str) -> float:
     return {"g": val, "m": val / 1024, "k": val / (1024 * 1024), "t": val * 1024}.get(unit, 0.0)
 
 
+def _driver_mem() -> str:
+    """The driver heap: ``$SPARK_DRIVER_MEM``, else half of physical RAM
+    rounded down to whole GiB (at least 1g), capped at 48g. In local mode
+    the driver JVM runs every task, so its heap is the engine's memory
+    budget; the other half stays for Python workers, the page cache and
+    tmpfs shuffle files. Measured on a 4-core / 15.7 GiB host (perfbench,
+    10 interleaved pairs per workload): a fixed 48g with -Xmn4g peaked at
+    a median 5.2-5.4 GB RSS; the 7g this rule picks there, 2.7 GB, with
+    throughput and latency unchanged within noise. 48g stays the size on
+    hosts with 96 GiB and more."""
+    mem = os.environ.get("SPARK_DRIVER_MEM")
+    if mem:
+        return mem
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(48, max(1, ram // 2**31))}g"
+
+
 def _default_driver_opts(mem: str) -> str:
     """ParallelGC (see ``ENGINE_CONF``) plus a BOUNDED young gen on large
     heaps: ParallelGC's adaptive sizing grows the young gen toward heap/3
@@ -109,13 +128,16 @@ def _session_conf(
     conf = dict(ENGINE_CONF)
     if "PYSPARK_GATEWAY_PORT" not in os.environ:
         cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
-        mem = os.environ.get("SPARK_DRIVER_MEM", "48g")
+        mem = _driver_mem()
         conf.update({
             "spark.master": master or os.environ.get("SPARK_MASTER", f"local[{cpus}]"),
             "spark.sql.shuffle.partitions": str(shuffle_partitions or cpus),
             "spark.ui.enabled": "false",
             "spark.driver.memory": mem,
-            "spark.driver.maxResultSize": "4g",
+            # At most half the heap, so a big collect trips this guard
+            # before the driver runs out of heap; 4g on 8 GiB and up. An
+            # unparseable heap string keeps 4g rather than 0 (= unlimited).
+            "spark.driver.maxResultSize": f"{min(4096, int(_mem_gib(mem) * 512)) or 4096}m",
             "spark.driver.extraJavaOptions": _default_driver_opts(mem),
         })
     conf.update(extra_conf or {})
@@ -133,9 +155,11 @@ def get_spark(
     When this call launches the JVM, it also sets the topology:
     ``master`` (default ``$SPARK_MASTER``, else ``local[$SPARK_GRAFT_CPUS]``),
     ``shuffle_partitions`` (default the core count), the driver heap
-    (``$SPARK_DRIVER_MEM``, default 48g) and GC options, and turns the UI
-    off. Under spark-submit those come from spark-submit and the
-    arguments are ignored. ``extra_conf`` is applied last.
+    (``$SPARK_DRIVER_MEM``, default half of physical RAM capped at 48g),
+    ``spark.driver.maxResultSize`` (half the heap, at most 4g) and GC
+    options, and turns the UI off. Under spark-submit those come from
+    spark-submit and the arguments are ignored. ``extra_conf`` is applied
+    last.
     """
     active = SparkSession.getActiveSession()
     if active is not None:

@@ -16,7 +16,9 @@ must prove four things at once:
    latest-per-key dedup of the full log, row for row (``exceptAll`` both
    ways), and their count equals the DuckDB latest-per-key oracle's.
 
-Emits ONE JSON line and writes BENCH/auto_maintain_replay_r05.json.
+Emits ONE JSON line and writes BENCH/auto_maintain_replay_r05.json; a run
+with fewer events than the one recorded there (a smoke run) writes
+BENCH/auto_maintain_replay_smoke.json instead.
 Run ALONE (benchmark hygiene). ~3-6 min at the default size.
 """
 
@@ -136,9 +138,20 @@ def main() -> int:
         "row_mismatches": int(mismatch),
     }
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    with open(
-        os.path.join(REPO, "BENCH", "auto_maintain_replay_r05.json"), "w"
-    ) as f:
+    # Overwrite guard, as in mega_replay.py: a smaller run never clobbers
+    # the recorded artifact.
+    art = os.path.join(REPO, "BENCH", "auto_maintain_replay_r05.json")
+    try:
+        with open(art) as f:
+            prev = json.load(f)["line"]
+        prev_events = prev["batches"] * prev["batch_events"]
+    except (OSError, ValueError, KeyError):
+        prev_events = 0
+    if BATCHES * BATCH_EVENTS < prev_events:
+        art = os.path.join(REPO, "BENCH", "auto_maintain_replay_smoke.json")
+        print(f"[auto_maintain_replay] the recorded artifact has {prev_events} events, "
+              f"more than this run; writing {art}", file=sys.stderr)
+    with open(art, "w") as f:
         json.dump({"line": out, "rates": [round(r, 1) for r in rates]}, f, indent=1)
     print(json.dumps(out))
     spark.stop()

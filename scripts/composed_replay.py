@@ -28,7 +28,9 @@ Reference analogue: the per-entity skip-guards + pydantic validation +
 errors side-channel of ``omicidx_etl/sra/catalog.py:291-371``, composed
 here with schema evolution and retention policy at sustained scale.
 
-Emits ONE JSON line and writes BENCH/composed_replay_r05.json.
+Emits ONE JSON line and writes BENCH/composed_replay_r05.json; a run
+with fewer events than the one recorded there (a smoke run) writes
+BENCH/composed_replay_smoke.json instead.
 Run ALONE (benchmark hygiene). ~4-6 min at the default size.
 """
 
@@ -248,7 +250,20 @@ def main() -> int:
         "rows": len(have),
     }
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    with open(os.path.join(REPO, "BENCH", "composed_replay_r05.json"), "w") as f:
+    # Overwrite guard, as in mega_replay.py: a smaller run never clobbers
+    # the recorded artifact.
+    art = os.path.join(REPO, "BENCH", "composed_replay_r05.json")
+    try:
+        with open(art) as f:
+            prev = json.load(f)["line"]
+        prev_events = prev["batches"] * prev["batch_events"]
+    except (OSError, ValueError, KeyError):
+        prev_events = 0
+    if BATCHES * BATCH_EVENTS < prev_events:
+        art = os.path.join(REPO, "BENCH", "composed_replay_smoke.json")
+        print(f"[composed_replay] the recorded artifact has {prev_events} events, "
+              f"more than this run; writing {art}", file=sys.stderr)
+    with open(art, "w") as f:
         json.dump(
             {"line": out, "rates": [[b, round(r, 1)] for b, r in rates]},
             f,

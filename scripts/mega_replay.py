@@ -26,6 +26,15 @@ Design (why this is honest at this scale):
 Usage: python scripts/mega_replay.py [--events 100000000] [--chunk 1000000]
        [--docs 2000000] [--compact-every 8] [--budget 2700]
 Emits ONE JSON line; detail in BENCH/mega_replay_r04.json.
+
+Heap: ``--dir`` is tmpfs (= RAM) by default and holds spark.local.dir,
+so the driver heap competes with shuffle files and the table for the
+same memory. The recorded 10^8 run on a 125 GB host used
+``SPARK_DRIVER_MEM=28g``: a 48g heap OOM-killed at 44 GB JVM RSS + 59 GB
+of accumulated shuffle files + 15 GB table, a 32g one at 39 GB RSS +
+~50 GB of shuffle files piled up between the 8-batch compaction-boundary
+GCs. On such a host set it the same way; the default (half of RAM,
+capped at 48g) is too big there.
 """
 
 from __future__ import annotations
@@ -75,13 +84,6 @@ def main() -> int:
     ap.add_argument("--dir", default="/dev/shm/spark_graft_mega")
     args = ap.parse_args()
 
-    # 28g, not the default 48g: spark.local.dir is tmpfs (= RAM), so the
-    # heap competes with shuffle files and the table itself for the same
-    # 125 GB — the first 10^8 attempt OOM-killed at 44 GB JVM RSS + 59 GB
-    # of accumulated shuffle files + 15 GB table; the second at 39 GB RSS
-    # (32g heap) + ~50 GB of shuffle junk piled up between the 8-batch
-    # compaction-boundary GCs
-    os.environ.setdefault("SPARK_DRIVER_MEM", "28g")
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 

@@ -240,7 +240,6 @@ def main() -> int:
     build(args.dir)
     gen_sec = round(time.time() - t0, 1)
 
-    os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
     from omicidx_etl_spark import queries as Q
     from omicidx_etl_spark.plans.oracle import compare
     from omicidx_etl_spark.session import get_spark

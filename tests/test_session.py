@@ -39,9 +39,43 @@ def test_topology_resolved_per_call(monkeypatch):
     assert conf["spark.ui.enabled"] == "true"  # extra_conf applies last
 
 
+def _host_conf(monkeypatch, ram_gib):
+    """The confs a new session gets on a host with ``ram_gib`` of RAM."""
+    pages = int(ram_gib * 2**30) // 4096
+    sysconf = {"SC_PHYS_PAGES": pages, "SC_PAGE_SIZE": 4096}
+    monkeypatch.setattr(session.os, "sysconf", sysconf.__getitem__)
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    return session._session_conf(None, None, None)
+
+
+def test_driver_heap_sized_from_the_host(monkeypatch):
+    """Half of physical RAM in whole GiB, capped at 48g, unless
+    SPARK_DRIVER_MEM is set; -Xmn4g only at 16 GiB of heap and up;
+    maxResultSize is half the heap, at most 4g."""
+    for ram_gib, env, heap, xmn, max_result in (
+        (15.7, None, "7g", False, "3584m"),
+        (40, None, "20g", True, "4096m"),
+        (256, None, "48g", True, "4096m"),
+        (256, "3g", "3g", False, "1536m"),
+        # no unit (Spark reads MiB): the guard stays 4g, never 0 (= unlimited)
+        (256, "4096", "4096", False, "4096m"),
+    ):
+        if env:
+            monkeypatch.setenv("SPARK_DRIVER_MEM", env)
+        else:
+            monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+        conf = _host_conf(monkeypatch, ram_gib)
+        assert conf["spark.driver.memory"] == heap, (ram_gib, env)
+        assert ("-Xmn4g" in conf["spark.driver.extraJavaOptions"]) == xmn, (ram_gib, env)
+        assert conf["spark.driver.maxResultSize"] == max_result, (ram_gib, env)
+
+
 def test_spark_submit_keeps_its_topology(monkeypatch):
     """Under spark-submit only the engine confs are set: master, shuffle
-    partitions, driver sizing and the UI stay spark-submit's."""
+    partitions, driver sizing and the UI stay spark-submit's, whatever
+    the host or ``SPARK_DRIVER_MEM``."""
+    monkeypatch.setenv("SPARK_DRIVER_MEM", "3g")
+    _host_conf(monkeypatch, 256)
     monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "12345")
     conf = session._session_conf("local[2]", 3, None)
     assert conf == session.ENGINE_CONF
@@ -88,7 +122,8 @@ def test_session_built_and_configured_only_in_session_py():
 
 def test_retired_options_stay_gone():
     """Deleted options, the bench's 32-core scaling harness included, stay
-    deleted; only get_spark picks the core count; scripts stand alone."""
+    deleted; only get_spark picks the core count and the default driver
+    heap; scripts stand alone."""
     assert not (PKG / "config.py").exists()
     for gone in ("bench_extra.py", "scripts/executor_scaling.py", "scripts/sustained_replay.py"):
         assert not (REPO / gone).exists(), gone
@@ -97,15 +132,16 @@ def test_retired_options_stay_gone():
         r"|SESSION_WARMUP|COMPUTE_PARTS|BENCH_FANOUT)|SPARK_DRIVER_JAVA_OPTS"
         r"|SPARK_GRAFT_BENCH_(BUDGET|STEAL_OK|PROBE_\w+|FAULT_OK|AGG_OK|BW_OK|SUPER_OK"
         r"|SCALING|MODE|DEDUP|CACHE)|SPARK_GRAFT_SCALE_|SPARK_GRAFT_EXEC_"
-        # a hard-coded core count: environ.get/setdefault("SPARK_GRAFT_CPUS", "32")
-        # or environ["SPARK_GRAFT_CPUS"] = "32"
-        r"|SPARK_GRAFT_CPUS[\"']\s*(,|\]\s*=)"
+        # a hard-coded core count or heap: environ.get/setdefault("SPARK_GRAFT_CPUS", "32"),
+        # environ["SPARK_DRIVER_MEM"] = "48g" or ${SPARK_DRIVER_MEM:-48g}
+        r"|(SPARK_GRAFT_CPUS|SPARK_DRIVER_MEM)([\"']\s*(,|\]\s*=)|:-\d)"
         r"|^(import|from) bench\b"
     )
     files = (
         sorted(PKG.rglob("*.py"))
         + sorted((REPO / "jobs").glob("*.py"))
         + sorted((REPO / "scripts").glob("*.py"))
+        + sorted((REPO / "scripts").glob("*.sh"))
         + [REPO / "bench.py"]
     )
     hits = [f"{rel}:{n}: {line}" for rel, n, line in _lines(files) if retired.search(line)]
