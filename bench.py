@@ -17,7 +17,7 @@ Two parts, both on one ``session.get_spark`` session (cores from
 
 The change-log cache and the replay table live under
 ``$SPARK_GRAFT_BENCH_SCRATCH`` (default /tmp/spark_graft_bench). The full
-result goes to BENCH/last_run_detail.json; the line keeps the headline.
+result goes to last_run_detail.json there; the line keeps the headline.
 
 Usage:
   python bench.py
@@ -39,6 +39,7 @@ from perfbench.layers import HEADLINE  # noqa: E402
 
 SCRATCH = os.environ.get("SPARK_GRAFT_BENCH_SCRATCH") or "/tmp/spark_graft_bench"
 CACHE = os.path.join(SCRATCH, "cache")
+DETAIL = os.path.join(SCRATCH, "last_run_detail.json")
 
 # The headline replay shape. prefilter: narrow winner agg + broadcast join,
 # so the wide token arrays never shuffle (winners per batch ~200k ≈ 5 MB
@@ -61,8 +62,7 @@ _EMITTED = False
 def _compact_result(full: dict) -> dict:
     """Keep the emitted line under 1500 chars: callers that capture only
     the last ~2000 chars of output could not parse a 4 KB line despite
-    rc 0. Detail lives in BENCH/last_run_detail.json; the line keeps the
-    headline."""
+    rc 0. Detail lives in ``DETAIL``; the line keeps the headline."""
     out = dict(full)
     rp = out.get("replay")
     if isinstance(rp, dict):
@@ -77,7 +77,7 @@ def _compact_result(full: dict) -> dict:
             out["queries"] = {k: round(v, 2) for k, v in q.items()}
         if len(json.dumps(out)) > 1500:
             out.pop("queries", None)
-            out["queries_detail"] = "BENCH/last_run_detail.json"
+            out["queries_detail"] = DETAIL
     return out
 
 
@@ -89,9 +89,8 @@ def _emit_result() -> None:
     _EMITTED = True
     _RESULT["elapsed_sec"] = round(time.time() - _T0, 1)
     try:
-        detail_path = os.path.join(REPO, "BENCH", "last_run_detail.json")
-        os.makedirs(os.path.dirname(detail_path), exist_ok=True)
-        with open(detail_path, "w") as f:
+        os.makedirs(SCRATCH, exist_ok=True)
+        with open(DETAIL, "w") as f:
             json.dump(_RESULT, f, indent=1)
     except OSError:
         pass  # never let detail-spill block the line

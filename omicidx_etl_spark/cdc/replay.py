@@ -16,7 +16,9 @@ Dedup: ``dedup_latest`` picks one of the two plans in
 aggregate, always correct) or ``prefilter`` (narrow winner aggregation +
 broadcast join, so kB-scale payloads never shuffle; needs ``seq`` unique
 per key within the batch — true for any WAL/binlog feed, where seq is the
-log offset — and a winner set that fits a broadcast).
+log offset — and a winner set that fits a broadcast). A MOR replay with
+``max_by`` hands the raw events to ``LakeTable.merge``, which runs the same
+aggregate inside its bucket exchange.
 """
 
 from __future__ import annotations
@@ -179,12 +181,17 @@ def replay_batch(
         # event exactly once; the wide side stays observation-free.
         narrow = changes.select(key, seq, op_col).observe(obs, *obs_cols)
         latest = C.latest_by_winner_join(changes, key, seq, winners_from=narrow)
+    elif mode == "mor":
+        # the MOR merge keeps the latest row per key inside its bucket
+        # exchange: a max_by dedup here would be a second shuffle
+        latest = changes.observe(obs, *obs_cols)
     else:
         latest = dedup_latest(changes.observe(obs, *obs_cols), key=key, seq=seq)
     snap = table.merge(
         latest,
         op_col=op_col,
         delete_value=delete_value,
+        seq_col=seq,
         app_id=app_id,
         batch_id=batch_id,
         mode=mode,

@@ -85,6 +85,7 @@ from omicidx_etl_spark.operators import cdc_ops as C
 BUCKET_COL = "__bucket"
 SEQ_COL = "__seq"  # per-row version (WAL LSN of the winning event)
 DELETED_COL = "__deleted"  # persisted tombstone flag (merge-on-read delete)
+PART_COL = "__p"  # write-task slot of a bucket (_bucket_exchange), never stored
 
 # Codec for merge-on-read DELTA files. Deltas are the write-hot, short-lived
 # tier (every read reconciles them, compaction folds them away), so decode
@@ -119,16 +120,14 @@ _BUCKET_REMAP_CACHE: dict[int, list[int]] = {}
 def _bucket_remap(n: int) -> list[int]:
     """Remap values ``v[0..n-1]`` such that Spark's shuffle-partition
     assignment ``pmod(murmur3(v[j]), n)`` is pairwise DISTINCT — i.e.
-    repartitioning n distinct groups on ``v[group]`` places every group in
-    its OWN shuffle partition.
+    repartitioning on ``v[j]`` sends each j to its OWN shuffle partition.
 
     Why: ``repartition(n, col)`` hash-partitions, and hashing n distinct
     values into n partitions leaves ~n/e partitions EMPTY while some tasks
     carry 2-3 groups (balls-in-bins; guide §2.5 "synthetic partitioning
     keys with too few distinct values"). Measured on the MOR delta write
     (32 buckets → 32 partitions): only 18 distinct partitions, max load 3,
-    write-stage wall ≈ 3× the median task. The remap makes the write stage
-    1 task = 1 bucket by construction, at any bucket count.
+    write-stage wall ≈ 3× the median task.
 
     Greedy probe: try v = 0, 1, 2, … keeping the first value that lands in
     a not-yet-used partition; expected O(n log n) probes, driver-side,
@@ -148,12 +147,23 @@ def _bucket_remap(n: int) -> list[int]:
     return cached
 
 
-def _bucket_partition_col(idx_col, n: int):
-    """INT column that, hash-partitioned into ``n`` partitions, sends each
-    distinct value of ``idx_col`` (∈ 0..n-1) to its own partition. The
+def _bucket_partition_col(
+    idx_col, n: int, p: int | None = None, used: "list[int] | None" = None
+):
+    """INT column that, hash-partitioned into ``p`` partitions (default
+    ``n``), places the values of ``idx_col`` (∈ 0..n-1) round-robin: the
+    i-th value of ``used`` (default 0..n-1, the values that carry rows)
+    goes to partition slot i mod p. Every value stays whole in one
+    partition, no partition is empty, and none holds more than
+    ⌈len(used)/p⌉ values; at p == n it is one value per partition. The
     literal array is constant-folded by Catalyst; per-row cost is one O(1)
     ``element_at``."""
-    arr = F.array(*[F.lit(v) for v in _bucket_remap(n)])
+    p = p or n
+    vals = _bucket_remap(p)
+    slot = [vals[0]] * n
+    for i, v in enumerate(range(n) if used is None else used):
+        slot[v] = vals[i % p]
+    arr = F.array(*[F.lit(v) for v in slot])
     return F.element_at(arr, idx_col.cast("int") + F.lit(1))
 
 
@@ -717,49 +727,13 @@ class LakeTable:
         # buckets stream through shuffle-free. At scale (mostly-compacted
         # table, one fresh delta batch) this turns a whole-table shuffle
         # into one over just the dirty buckets.
-        by_schema: dict[tuple[int, bool], list[str]] = {}
-        # per dirty bucket: (seq_lo, seq_hi, rows) of every surviving file
-        # group — drives the reconciliation-strategy choice below
-        dirty_meta: dict[str, list[tuple]] = {}
-        for b, raw in snap["buckets"].items():
-            if int(b) not in want:
-                continue
-            entry = _norm_entry(raw)
-            dirty = bool(entry["deltas"])
-            files = ([entry["base"]] if entry["base"] else []) + entry["deltas"]
-            for fe in files:
-                # skip_dirs is KEY-granularity dir exclusion (bloom-proven
-                # absent for every probed key): such a dir contributes no
-                # rows for those keys, so dropping it cannot change their
-                # latest-seq reconciliation. `dirty` stays as computed —
-                # a conservative aggregation over the surviving dirs.
-                if skip_dirs and fe["dir"] in skip_dirs:
-                    continue
-                by_schema.setdefault((fe["schema_id"], dirty), []).append(
-                    os.path.join(self.root, fe["dir"])
-                )
-                if dirty:
-                    seq_bounds = (fe.get("stats") or {}).get(SEQ_COL)
-                    dirty_meta.setdefault(b, []).append(
-                        (seq_bounds, fe.get("rows"))
-                    )
-
-        def _union(keys: list[tuple[int, bool]]) -> DataFrame | None:
-            parts: list[DataFrame] = []
-            for sid, dirty in sorted(keys):
-                s = _phys(T.StructType.fromJson(json.loads(snap["schemas"][str(sid)])))
-                df = self.spark.read.schema(s).parquet(*by_schema[(sid, dirty)])
-                df = _remap(df, snap, sid)
-                parts.append(_align(df, cur_phys))
-            if not parts:
-                return None
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
-
-        clean = _union([k for k in by_schema if not k[1]])
-        dirty = _union([k for k in by_schema if k[1]])
+        by_schema, dirty_meta = self._file_groups(snap, want, skip_dirs)
+        clean = self._union_groups(
+            snap, {k: v for k, v in by_schema.items() if not k[1]}
+        )
+        dirty = self._union_groups(
+            snap, {k: v for k, v in by_schema.items() if k[1]}
+        )
         self.last_reconcile = None
         if dirty is not None:
             strategy = self._reconcile_strategy(dirty_meta)
@@ -796,6 +770,53 @@ class LakeTable:
             out = out.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
         if not include_system:
             out = out.drop(SEQ_COL, DELETED_COL)
+        return out
+
+    def _file_groups(
+        self, snap: dict, want: "set[int]", skip_dirs: "set[str] | None" = None
+    ) -> "tuple[dict[tuple[int, bool], list[str]], dict[str, list[tuple]]]":
+        """The file groups of the ``want`` buckets: their dirs keyed by
+        (schema id, bucket carries deltas), and per dirty bucket the
+        (``__seq`` bounds, rows) of every group — what the reconciliation
+        strategy is chosen from (``_reconcile_strategy``)."""
+        by_schema: dict[tuple[int, bool], list[str]] = {}
+        dirty_meta: dict[str, list[tuple]] = {}
+        for b, raw in snap["buckets"].items():
+            if int(b) not in want:
+                continue
+            entry = _norm_entry(raw)
+            dirty = bool(entry["deltas"])
+            for fe in ([entry["base"]] if entry["base"] else []) + entry["deltas"]:
+                # skip_dirs is KEY-granularity dir exclusion (bloom-proven
+                # absent for every probed key): such a dir contributes no
+                # rows for those keys, so dropping it cannot change their
+                # latest-seq reconciliation. `dirty` stays as computed —
+                # a conservative aggregation over the surviving dirs.
+                if skip_dirs and fe["dir"] in skip_dirs:
+                    continue
+                by_schema.setdefault((fe["schema_id"], dirty), []).append(
+                    os.path.join(self.root, fe["dir"])
+                )
+                if dirty:
+                    seq_bounds = (fe.get("stats") or {}).get(SEQ_COL)
+                    dirty_meta.setdefault(b, []).append(
+                        (seq_bounds, fe.get("rows"))
+                    )
+        return by_schema, dirty_meta
+
+    def _union_groups(
+        self, snap: dict, by_schema: "dict[tuple[int, bool], list[str]]"
+    ) -> DataFrame | None:
+        """Union of file groups (``_file_groups``): each schema id's dirs
+        are read with that schema's exact physical schema, re-mapped and
+        aligned to the current one. None when there are no groups."""
+        cur_phys = _phys(self.current_schema(snap))
+        out: DataFrame | None = None
+        for sid, dirty in sorted(by_schema):
+            s = _phys(T.StructType.fromJson(json.loads(snap["schemas"][str(sid)])))
+            df = self.spark.read.schema(s).parquet(*by_schema[(sid, dirty)])
+            df = _align(_remap(df, snap, sid), cur_phys)
+            out = df if out is None else out.unionByName(df)
         return out
 
     def _reconcile_strategy(self, dirty_meta: "dict[str, list[tuple]]") -> str:
@@ -1193,8 +1214,10 @@ class LakeTable:
                 aligned, cons, on_violation
             )
         new_sid = snap["snapshot_id"] + 1
-        rel = self._stage_write(aligned, new_sid, nb)
-        buckets = _base_only_buckets(rel, nb, snap["current_schema_id"], mk=self._file_entry)
+        rel = self._stage_write(aligned, new_sid, nb, key)
+        buckets = _base_only_buckets(
+            self._file_entries(rel, snap["current_schema_id"]), nb
+        )
         return self._commit(
             snap, new_sid, buckets, app_id, batch_id,
             summary={"operation": "overwrite", "max_seq": seq_value,
@@ -1224,17 +1247,20 @@ class LakeTable:
         carrying their seq, so an older event can never resurrect a deleted
         key (merge-on-read tombstones; reclaim via ``purge_tombstones``).
 
-        ``changes`` must already be deduplicated to ≤1 row per key (use
-        ``cdc.dedup_latest``) — Iceberg's multi-match rule, by contract.
-
-        ``mode="cow"`` physical plan: changes are bucketed with the table
+        ``mode="cow"``: ``changes`` must already be deduplicated to ≤1 row
+        per key (use ``cdc.dedup_latest``) — Iceberg's multi-match rule, by
+        contract. Physical plan: changes are bucketed with the table
         transform; only touched buckets are scanned (manifest pruning) and
         rewritten (copy-on-write). One full-outer shuffle join on the key per
         merge; AQE splits residual skew.
 
-        ``mode="mor"`` physical plan: changes are bucketed and landed as
-        delta files — ONE shuffle of the batch, zero base reads/rewrites.
-        Latest-seq-wins reconciliation moves to read time (see ``read``);
+        ``mode="mor"``: ``changes`` may hold many events per key; the
+        latest ``seq`` per key wins. Physical plan: changes are bucketed,
+        deduplicated inside the bucket exchange and landed as delta files —
+        ONE shuffle of the batch (Exchange → Sort → SortAggregate → write),
+        zero base reads/rewrites. CHECK constraints and the summary counts
+        apply to the deduplicated rows. Latest-seq-wins reconciliation
+        against older file groups moves to read time (see ``read``);
         call ``compact()`` to fold deltas into the base. At 10^10 events this
         is the sustained-throughput path: per-batch cost is O(batch), not
         O(touched table).
@@ -1270,6 +1296,11 @@ class LakeTable:
             is_del.alias(DELETED_COL),
             F.col(BUCKET_COL),
         )
+        if mode == "mor":
+            # latest row per key inside the one bucket exchange (see
+            # _bucket_exchange); the constraints and the observation see
+            # the deduplicated rows, as they do on the COW path
+            ch_phys = self._bucket_exchange(ch_phys, nb, key, latest=True)
         cons = snap.get("constraints") or {}
         if cons:
             # CHECK constraints gate the batch BEFORE staging; delete
@@ -1293,10 +1324,10 @@ class LakeTable:
                 F.sum(F.col(DELETED_COL).cast("long")).alias("tombstone_rows"),
                 F.max(F.col(SEQ_COL)).alias("max_seq"),
             )
-            # AQE has nothing to offer this plan — the join is an explicit
-            # broadcast (no strategy to revise), the only shuffle is the
-            # REPARTITION_BY_NUM bucket exchange (AQE never coalesces it,
-            # and skew-splitting applies only to joins) — while its
+            # AQE has nothing to offer this plan — a prefiltered batch's
+            # join is an explicit broadcast (no strategy to revise), the
+            # bucket exchange is REPARTITION_BY_NUM (AQE never coalesces
+            # it, and skew-splitting applies only to joins) — while its
             # stage-by-stage materialization turns the single write action
             # into map-job + replan + write-job with a driver gap between
             # (measured ~0.25 s/batch on the 2M-event replay: 19.1 vs
@@ -1316,7 +1347,7 @@ class LakeTable:
             try:
                 if flip_aqe:
                     sess_conf.set("spark.sql.adaptive.enabled", "false")
-                rel = self._stage_write(delta, new_sid, nb, codec=DELTA_CODEC)
+                rel = self._write_staged(delta, new_sid, codec=DELTA_CODEC)
             finally:
                 if flip_aqe:
                     sess_conf.set("spark.sql.adaptive.enabled", prev_aqe)
@@ -1411,15 +1442,12 @@ class LakeTable:
             .withColumn(BUCKET_COL, bucket_expr(key, nb))
         )
 
-        rel = self._stage_write(merged, new_sid, nb)
+        rel = self._stage_write(merged, new_sid, nb, key, buckets=touched)
         metrics = obs.get
+        entries = self._file_entries(rel, snap["current_schema_id"])
         buckets = {b: _norm_entry(e) for b, e in snap["buckets"].items()}
         for b in touched:
-            d = rel.get(b)
-            buckets[str(b)] = {
-                "base": self._file_entry(d, snap["current_schema_id"]) if d else None,
-                "deltas": [],
-            }
+            buckets[str(b)] = {"base": entries.get(b), "deltas": []}
         summary = {
             "operation": "merge",
             "mode": "cow",
@@ -1515,7 +1543,7 @@ class LakeTable:
 
         ``tasks_per_bucket``/``target_records_per_file``: parallelize one
         bucket's rewrite across k tasks and bound output file sizes
-        (Iceberg binpack) — see ``_stage_write``. With slicing, key order
+        (Iceberg binpack) — see ``_bucket_exchange``. With slicing, key order
         holds within each file (row-group stats stay tight) but the bucket
         dir holds k overlapping key ranges; lookups still push the key
         predicate per file.
@@ -1539,7 +1567,7 @@ class LakeTable:
         Same cost shape as ``sort_by``: task-local sort, no extra shuffle.
         """
         snap = self.snapshot()
-        nb = snap["table"]["n_buckets"]
+        key, nb = snap["table"]["key"], snap["table"]["n_buckets"]
         todo = [
             int(b)
             for b, e in snap["buckets"].items()
@@ -1548,9 +1576,12 @@ class LakeTable:
         ]
         if not todo:
             return snap
-        merged = self.read(
-            buckets=todo, include_deleted=True, include_system=True
-        ).withColumn(BUCKET_COL, bucket_expr(snap["table"]["key"], nb))
+        # base + deltas, unreconciled: the latest row per key is kept
+        # inside the write's bucket exchange (_stage_write latest=True)
+        by_schema, _ = self._file_groups(snap, set(todo))
+        merged = self._union_groups(snap, by_schema).withColumn(
+            BUCKET_COL, bucket_expr(key, nb)
+        )
         if zorder_by:
             from omicidx_etl_spark.lake.zorder import (
                 bounds_from_manifest,
@@ -1574,17 +1605,15 @@ class LakeTable:
             ]
         new_sid = snap["snapshot_id"] + 1
         rel = self._stage_write(
-            merged, new_sid, nb, sort_by_key=sort_by_key, sort_by=sort_by,
+            merged, new_sid, nb, key, buckets=todo, latest=True,
+            sort_by_key=sort_by_key, sort_by=sort_by,
             tasks_per_bucket=tasks_per_bucket,
             target_records_per_file=target_records_per_file,
         )
+        entries = self._file_entries(rel, snap["current_schema_id"])
         out = {b: _norm_entry(e) for b, e in snap["buckets"].items()}
         for b in todo:
-            d = rel.get(b)
-            out[str(b)] = {
-                "base": self._file_entry(d, snap["current_schema_id"]) if d else None,
-                "deltas": [],
-            }
+            out[str(b)] = {"base": entries.get(b), "deltas": []}
         return self._commit(
             snap, new_sid, out, None, None,
             summary={"operation": "compact", "buckets": len(todo)},
@@ -1620,9 +1649,9 @@ class LakeTable:
             as_of=snap["snapshot_id"],
         ).withColumn(BUCKET_COL, bucket_expr(key, nb))
         new_sid = snap["snapshot_id"] + 1
-        rel = self._stage_write(full, new_sid, nb)
+        rel = self._stage_write(full, new_sid, nb, key)
         buckets = _base_only_buckets(
-            rel, nb, snap["current_schema_id"], mk=self._file_entry
+            self._file_entries(rel, snap["current_schema_id"]), nb
         )
         return self._commit(
             snap, new_sid, buckets, None, None,
@@ -1649,8 +1678,10 @@ class LakeTable:
             ~(F.col(DELETED_COL) & (F.col(SEQ_COL) < before_seq))
         ).withColumn(BUCKET_COL, bucket_expr(key, nb))
         new_sid = snap["snapshot_id"] + 1
-        rel = self._stage_write(kept, new_sid, nb)
-        buckets = _base_only_buckets(rel, nb, snap["current_schema_id"], mk=self._file_entry)
+        rel = self._stage_write(kept, new_sid, nb, key)
+        buckets = _base_only_buckets(
+            self._file_entries(rel, snap["current_schema_id"]), nb
+        )
         return self._commit(
             snap, new_sid, buckets, None, None,
             summary={"operation": "purge_tombstones", "before_seq": before_seq},
@@ -2021,33 +2052,87 @@ class LakeTable:
         return deleted
 
     # -------------------------------------------------------------- internals
-    def _stage_write(
+    def _bucket_exchange(
         self,
         df: DataFrame,
-        sid: int,
         nb: int,
+        key: str,
+        buckets: "list[int] | None" = None,
+        latest: bool = False,
         sort_by_key: bool = False,
         sort_by: "list[str] | None" = None,
         tasks_per_bucket: int = 1,
-        target_records_per_file: int | None = None,
-        codec: str | None = None,
-    ) -> dict[int, str]:
-        """Write df (must carry BUCKET_COL) under data/snap-{sid}/ partitioned
-        by bucket; returns {bucket: relpath} for buckets that produced files.
+    ) -> DataFrame:
+        """The one shuffle of a staged write: ``df`` (carrying BUCKET_COL)
+        repartitioned so each task writes whole buckets (one file per
+        bucket), optionally deduplicated and sorted, ready for
+        ``_write_staged``.
 
-        One task writes each bucket (one file per bucket). ``sort_by_key``
-        adds a task-local key sort (tight row-group stats for point
-        lookups).
+        Partitions: P = min(buckets written, ``defaultParallelism``).
+        ``buckets`` names the buckets that can carry rows (default all
+        ``nb``); the remap (``_bucket_partition_col``) deals them out
+        round-robin, so each task writes at most ⌈buckets/P⌉ whole buckets
+        and every task gets some. Sizing from the bucket count instead put 16
+        write tasks on 4 cores for a 5k-event MOR commit, each paying
+        ~46 ms to deserialize, and gave an 8-bucket compaction slice 16
+        tasks, half of them empty. At P == buckets (as many cores as
+        buckets) every bucket gets its own task, as before.
+
+        ``latest=True`` keeps the latest ``__seq`` row per key INSIDE this
+        exchange: ``latest_per_key`` groups by (BUCKET_COL, partition col,
+        key), whose clustering the hash partitioning already satisfies, so
+        the plan is Exchange → Sort → SortAggregate → write with no second
+        shuffle, and the aggregate's output order (BUCKET_COL first) is the
+        order the partitioned writer needs. A frame with one row per key
+        passes through unchanged.
+
+        ``sort_by_key`` adds a task-local key sort (tight row-group stats
+        for point lookups); ``sort_by`` sorts by other columns instead.
 
         ``tasks_per_bucket > 1`` splits each bucket's rewrite across k tasks
         (a deterministic key-hash slice inside the bucket): at 100 TB a hot
         bucket's base is tens of GB and one task per bucket makes the
         compaction wall equal to the largest bucket — slicing restores
         width-proportional rewrites at the cost of k files per bucket dir
-        (the manifest tracks dirs, so reads are unchanged).
-        ``target_records_per_file`` bounds file size within a task
-        (``maxRecordsPerFile`` — Iceberg's binpack target), independent of
-        slicing.
+        (the manifest tracks dirs, so reads are unchanged). The slices are
+        then the units dealt out to the P partitions."""
+        k = tasks_per_bucket
+        used = [
+            b * k + s for b in (range(nb) if buckets is None else sorted(buckets))
+            for s in range(k)
+        ]
+        p = max(1, min(len(used), self.spark.sparkContext.defaultParallelism))
+        idx = F.col(BUCKET_COL)
+        if k > 1:
+            idx = idx * k + F.pmod(F.xxhash64(F.col(key), F.lit(7)), F.lit(k))
+        out = df.withColumn(
+            PART_COL, _bucket_partition_col(idx, nb * k, p, used)
+        ).repartition(p, PART_COL)
+        if latest:
+            out = C.latest_per_key(out, [BUCKET_COL, PART_COL, key], SEQ_COL)
+        out = out.drop(PART_COL)
+        if sort_by or sort_by_key:
+            # Leading BUCKET_COL matters: the dynamic-partition writer
+            # requires ordering by the partition column and would insert its
+            # own (key-order-destroying) sort unless the child's ordering
+            # already satisfies it.
+            out = out.sortWithinPartitions(
+                BUCKET_COL, *(list(sort_by) if sort_by else [key])
+            )
+        return out
+
+    def _write_staged(
+        self,
+        df: DataFrame,
+        sid: int,
+        target_records_per_file: int | None = None,
+        codec: str | None = None,
+    ) -> dict[int, str]:
+        """Write an exchanged frame (``_bucket_exchange``) under
+        data/snap-{sid}/ partitioned by bucket; returns {bucket: relpath}
+        for buckets that produced files. ``target_records_per_file`` bounds
+        file size within a task (``maxRecordsPerFile`` — Iceberg's binpack
+        target).
 
         The dir carries a per-attempt suffix: concurrent writers both plan
         the same next sid, and optimistic concurrency stages WITHOUT
@@ -2057,36 +2142,7 @@ class LakeTable:
         name)."""
         stage_rel = os.path.join("data", f"snap-{sid:09d}-{uuid.uuid4().hex[:8]}")
         stage = os.path.join(self.root, stage_rel)
-        # One shuffle partition per bucket (not spark.sql.shuffle.partitions):
-        # write tasks then align 1:1 with buckets, so task sizes are as even
-        # as the bucket hash and no core waits on a multi-bucket straggler.
-        # Partition on a REMAPPED bucket value, not the bucket itself:
-        # hash-partitioning nb distinct bucket ids into nb partitions leaves
-        # ~nb/e partitions empty and stacks 2-3 buckets on others (guide
-        # §2.5), making the write wall ~3× the per-bucket cost at every
-        # bucket count (measured: 32 buckets → 18 partitions, max load 3,
-        # task durations 0.06/0.68/1.33 s min/med/max). The remap places
-        # exactly one bucket (or bucket-slice) per write task. Same rows,
-        # same bucket dirs, same file count — only the task placement
-        # changes.
-        if tasks_per_bucket > 1:
-            slice_col = F.pmod(F.xxhash64(F.col(self.key), F.lit(7)),
-                               F.lit(tasks_per_bucket))
-            idx = F.col(BUCKET_COL) * tasks_per_bucket + slice_col
-            out_df = df.repartition(
-                nb * tasks_per_bucket,
-                _bucket_partition_col(idx, nb * tasks_per_bucket),
-            )
-        else:
-            out_df = df.repartition(nb, _bucket_partition_col(F.col(BUCKET_COL), nb))
-        if sort_by or sort_by_key:
-            # Leading BUCKET_COL matters: the dynamic-partition writer
-            # requires ordering by the partition column and would insert its
-            # own (key-order-destroying) sort unless the child's ordering
-            # already satisfies it.
-            cols = list(sort_by) if sort_by else [self.key]
-            out_df = out_df.sortWithinPartitions(BUCKET_COL, *cols)
-        writer = out_df.write.mode("overwrite")
+        writer = df.write.mode("overwrite")
         if codec:
             # per-write codec override (see merge mor: delta files default
             # to snappy — write-hot, short-lived; bases keep the session
@@ -2102,6 +2158,17 @@ class LakeTable:
                     b = int(name.split("=", 1)[1])
                     out[b] = os.path.join(stage_rel, name)
         return out
+
+    def _stage_write(
+        self, df: DataFrame, sid: int, nb: int, key: str,
+        target_records_per_file: int | None = None, **exchange: Any,
+    ) -> dict[int, str]:
+        """``_bucket_exchange`` then ``_write_staged``: stage ``df`` as one
+        file group per bucket."""
+        return self._write_staged(
+            self._bucket_exchange(df, nb, key, **exchange), sid,
+            target_records_per_file=target_records_per_file,
+        )
 
     def _file_entry(self, rel_dir: str, schema_id: int) -> dict[str, Any]:
         """Manifest entry for one staged file group: dir + schema id +
@@ -2389,15 +2456,11 @@ def _norm_entry(entry: dict[str, Any] | None) -> dict[str, Any]:
 
 
 def _base_only_buckets(
-    rel: dict[int, str],
-    nb: int,
-    schema_id: int,
-    mk: "Callable[[str, int], dict[str, Any]] | None" = None,
+    entries: "dict[int, dict[str, Any]]", nb: int
 ) -> dict[str, Any]:
-    mk = mk or (lambda d, sid: {"dir": d, "schema_id": sid})
     buckets: dict[str, Any] = {str(b): _norm_entry(None) for b in range(nb)}
-    for b, d in rel.items():
-        buckets[str(b)] = {"base": mk(d, schema_id), "deltas": []}
+    for b, fe in entries.items():
+        buckets[str(b)] = {"base": fe, "deltas": []}
     return buckets
 
 

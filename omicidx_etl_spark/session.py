@@ -7,8 +7,8 @@ it returns an already-active session as is, with no conf re-applied.
 
 Two kinds of conf:
 - Engine confs (``ENGINE_CONF``) apply to every session it builds: AQE,
-  Arrow, UTC, zstd, driver-side partition discovery, the parquet batch
-  size, shuffle compression and executor GC.
+  Arrow, PySpark call-site capture off, UTC, zstd, driver-side partition
+  discovery, the parquet batch size, shuffle compression and executor GC.
 - Topology and sizing (master, shuffle partitions, driver heap and JVM
   options, UI) are set only when ``get_spark`` launches the JVM itself.
   Under ``spark-submit`` (pyspark sets ``PYSPARK_GATEWAY_PORT``) they come
@@ -52,6 +52,15 @@ ENGINE_CONF = {
     # --- python boundary: Arrow everywhere ---
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+    # PySpark 4.1 wraps every Column method and F.* call in _with_origin
+    # (pyspark/errors/utils.py), which sends the Python call site to the
+    # JVM: ~4 extra py4j round trips per call. Off, a 5k-event MOR commit
+    # into 16 buckets makes 433 round trips instead of 973, a 4-key lookup
+    # 248-268 instead of 538-558, a full read 333 instead of 603 and
+    # auto_maintain 864 instead of 1784 (tests/test_session.py locks the
+    # budget). Runtime error messages lose the Python call site;
+    # extra_conf can turn it back on.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     # --- determinism / oracle comparability ---
     "spark.sql.session.timeZone": "UTC",
     # --- IO ---
@@ -189,7 +198,16 @@ def _warm_session(spark: SparkSession) -> None:
     chains show a similar cold tax. This computes nothing reusable and
     caches no data — it compiles code paths, the same thing the first
     query of any long-lived job/service session would do implicitly.
-    About 2 s, paid once by every new session, CLI jobs included."""
+
+    Paid once by every new session, CLI jobs included. On a 4-core /
+    15.7 GiB host it is 6-11 s of a 12-18 s ``get_spark`` (not the 2 s of
+    a 32-core host), and it moves rather than saves time: in three
+    interleaved perfbench ``curation_queries`` pairs, sessions without it
+    started in 6.5-7.1 s but their checked first pass of the 17 leaves
+    took 29.1-31.3 s instead of 22.1-26.3 s, so ``setup_s`` was 35.7,
+    35.8, 38.4 s without it against 34.4, 40.5, 44.5 s with it; two
+    earlier pairs measured 43.5/49.9 s without against 40.8/43.9 s
+    with. Net: within the run-to-run spread, so it stays."""
     sc = spark.sparkContext
     if sc.applicationId in _WARMED_CONTEXTS:
         return

@@ -19,7 +19,6 @@ maps to ``maxFilesPerTrigger``/``maxBytesPerTrigger``.
 
 from __future__ import annotations
 
-import json
 import os
 import time
 from typing import Any, Callable
@@ -28,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from omicidx_etl_spark.cdc.replay import replay_batch
-from omicidx_etl_spark.lake.table import LakeTable, _norm_entry
+from omicidx_etl_spark.lake.table import LakeTable, _norm_entry, atomic_write_json
 from omicidx_etl_spark.lineage import LineageLog
 
 
@@ -63,8 +62,7 @@ def _quarantine_batch(
         "error": f"{type(err).__name__}: {err}",
         "data_landed": landed,
     }
-    with open(os.path.join(qdir, "error.json"), "w") as f:
-        json.dump(meta, f)
+    atomic_write_json(os.path.join(qdir, "error.json"), meta)
     if lineage is not None:
         lineage.record(
             app_id, batch_id,
@@ -287,8 +285,9 @@ def replay_quarantined(
                  "error": f"{type(e).__name__}: {e}"}
             )
             continue
-        with open(os.path.join(qdir, "_RESOLVED"), "w") as f:
-            f.write(json.dumps({"app_id": app_id, "batch_id": bid}))
+        atomic_write_json(
+            os.path.join(qdir, "_RESOLVED"), {"app_id": app_id, "batch_id": bid}
+        )
         results.append(
             {
                 "batch_id": bid,

@@ -62,3 +62,35 @@ def count_jobs(spark):
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
     return count
+
+
+@pytest.fixture()
+def count_round_trips(spark):
+    """``count_round_trips(fn)`` runs ``fn()`` and returns ``(fn(), number
+    of py4j commands this thread sent to the JVM meanwhile)``: each is one
+    blocking driver↔JVM round trip. Commands from other threads are not
+    counted: py4j's finalizer thread tells the JVM about freed proxies at
+    its own pace, whoever created them."""
+    import threading
+
+    client = spark.sparkContext._gateway._gateway_client
+
+    def count(fn):
+        sent = 0
+        me = threading.get_ident()
+        real = client.send_command
+
+        def send(*args, **kwargs):
+            nonlocal sent
+            if threading.get_ident() == me:
+                sent += 1
+            return real(*args, **kwargs)
+
+        client.send_command = send
+        try:
+            out = fn()
+        finally:
+            del client.send_command
+        return out, sent
+
+    return count

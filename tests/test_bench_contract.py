@@ -1,7 +1,7 @@
 """The bench artifact contract: the ONE emitted JSON line must stay under
 1500 chars, since callers that capture only the last ~2000 chars of
 output could not parse a 4 KB+ line despite rc 0. Full detail goes to
-BENCH/last_run_detail.json instead."""
+``bench.DETAIL``, under the bench scratch dir, instead."""
 
 from __future__ import annotations
 
@@ -63,4 +63,4 @@ def test_compaction_never_empties_headline_keys():
     d = json.loads(line)
     assert d["replay"]["events_per_sec"] == 79681.3
     assert d["replay"]["final_rows"] == 191_234
-    assert d["queries_detail"] == "BENCH/last_run_detail.json"
+    assert d["queries_detail"] == bench.DETAIL

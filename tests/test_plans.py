@@ -770,12 +770,17 @@ def test_label_centroids_partial_agg(spark):
 
 def test_bucket_remap_one_bucket_per_write_task(spark):
     """Staged writes partition on a remapped bucket value so every bucket
-    lands in its OWN shuffle partition: plain repartition(nb, bucket)
+    lands whole in ONE shuffle partition: plain repartition(nb, bucket)
     hash-partitions nb distinct ids into nb partitions and stacks 2-3
     buckets per task while leaving ~nb/e empty (guide §2.5) — measured as
     a 3x write-stage straggler on the MOR delta path. The remap must (a)
-    replicate Spark's hash exactly (tests/test_hashing.py) and (b) yield a
-    perfect 1:1 placement."""
+    replicate Spark's hash exactly (tests/test_hashing.py), (b) yield a
+    perfect 1:1 placement at P == nb, and (c) at P < nb partitions (the
+    exchange is sized to the cores) deal whole buckets round-robin: every
+    partition used, at most ceil(nb/P) buckets each, whichever buckets
+    carry rows."""
+    import math
+
     from pyspark.sql import functions as F
 
     from omicidx_etl_spark.lake.hashing import _murmur3_int32
@@ -789,6 +794,27 @@ def test_bucket_remap_one_bucket_per_write_task(spark):
     for n in (1, 2, 8, 32, 200):
         assert len({_murmur3_int32(v) % n for v in _bucket_remap(n)}) == n
 
+    def placement(nb, p, used=None):
+        ids = list(range(nb)) if used is None else used
+        data = spark.range(0, 20000).select(
+            F.element_at(
+                F.array(*[F.lit(b) for b in ids]),
+                (F.col("id") % len(ids) + 1).cast("int"),
+            ).alias(BUCKET_COL)
+        )
+        rows = (
+            data.repartition(p, _bucket_partition_col(F.col(BUCKET_COL), nb, p, used))
+            .withColumn("pid", F.spark_partition_id())
+            .groupBy(BUCKET_COL)
+            .agg(F.countDistinct("pid").alias("n_pid"), F.min("pid").alias("pid"))
+            .collect()
+        )
+        assert len(rows) == len(ids) and all(r.n_pid == 1 for r in rows)
+        per_pid: dict[int, int] = {}
+        for r in rows:
+            per_pid[r.pid] = per_pid.get(r.pid, 0) + 1
+        return per_pid
+
     # end-to-end: one bucket per shuffle partition after the repartition
     nb = 32
     data = spark.range(0, 20000).select((F.col("id") % nb).cast("int").alias(BUCKET_COL))
@@ -801,3 +827,70 @@ def test_bucket_remap_one_bucket_per_write_task(spark):
     )
     assert len(placed) == nb
     assert max(r.nb for r in placed) == 1
+    assert placement(nb, nb) == {p: 1 for p in range(nb)}
+
+    # P < nb: whole buckets, every partition used, <= ceil(nb/P) per task
+    for nb, p in ((32, 4), (16, 4), (16, 6), (7, 3)):
+        per_pid = placement(nb, p)
+        assert sorted(per_pid) == list(range(p)), (nb, p, per_pid)
+        assert max(per_pid.values()) <= math.ceil(nb / p), (nb, p, per_pid)
+    # a bucket subset (a compaction slice) spreads over every partition
+    # too, even when its ids share a residue mod P
+    used = [0, 4, 8, 12, 16, 20, 24, 28]
+    per_pid = placement(32, 4, used)
+    assert sorted(per_pid) == [0, 1, 2, 3] and max(per_pid.values()) == 2
+
+
+def _last_sql_plan(spark) -> str:
+    """Physical plan of the session's most recent SQL execution (the
+    status store keeps it with the UI off), write commands included."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    ex = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return ex.apply(ex.size() - 1).physicalPlanDescription()
+
+
+def _plan_tree(plan: str) -> list[str]:
+    """Operator names of the plan's tree, top down (the first block of the
+    formatted plan; AQE plans give their final plan)."""
+    tree = plan.split("\n\n")[0].splitlines()
+    if "== Final Plan ==" in plan:
+        tree = tree[tree.index(next(l for l in tree if "== Final Plan ==" in l)) + 1:]
+        tree = tree[: next(i for i, l in enumerate(tree) if "== Initial Plan ==" in l)]
+    ops = []
+    for line in tree:
+        name = line.lstrip(" +-:*").strip()
+        if name and not name.startswith("=="):
+            ops.append(name.split(" (")[0].split(",")[0].strip())
+    return ops
+
+
+def test_mor_merge_and_compaction_one_exchange(spark, tmp_path):
+    """The MOR merge and compaction each run ONE shuffle: the latest row
+    per key is kept inside the bucket exchange (grouping by bucket, its
+    write-task slot and the key, which the hash partitioning already
+    clusters), and the aggregate's output order is the partitioned
+    writer's, so no Sort sits between the aggregate and the write. A replay
+    with the default dedup must not add a key shuffle of its own."""
+    from omicidx_etl_spark import datagen
+    from omicidx_etl_spark.cdc.replay import replay_batch
+    from omicidx_etl_spark.lake.table import LakeTable
+
+    ch = datagen.gen_changes(spark, 3000, 200, seed=9)
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), ch.drop("seq", "op", "event_ts").schema,
+        key="doc_id", n_buckets=8,
+    )
+
+    def check(ops):
+        assert ops.count("Exchange") == 1, ops
+        write = ops.index("WriteFiles")
+        agg = ops.index("SortAggregate")
+        assert write < agg < ops.index("Exchange"), ops
+        assert "Sort" not in ops[write:agg], ops
+
+    for b in range(2):
+        replay_batch(t, ch, batch_id=b, app_id="p", mode="mor")
+        check(_plan_tree(_last_sql_plan(spark)))
+    t.compact()
+    check(_plan_tree(_last_sql_plan(spark)))

@@ -146,3 +146,41 @@ def test_retired_options_stay_gone():
     )
     hits = [f"{rel}:{n}: {line}" for rel, n, line in _lines(files) if retired.search(line)]
     assert hits == [], hits
+
+
+# py4j round-trip budgets of one 5k-event MOR commit into a 16-bucket table
+# and of one 4-key lookup: measured 433 and 244 with the DataFrame-debugging
+# call-site capture off (ENGINE_CONF), plus ~10%. With it on, PySpark sends
+# ~4 more per Column/F.* call, about twice as many.
+COMMIT_ROUND_TRIPS = 480
+LOOKUP_ROUND_TRIPS = 270
+
+
+def test_commit_and_lookup_round_trip_budget(spark, tmp_path, count_round_trips):
+    """Driver→JVM round trips are the per-commit fixed cost on a small
+    batch: lock the budget of one MOR commit and one lookup, so a change
+    that multiplies them (a per-bucket or per-column py4j call, the call-
+    site capture turned back on) fails here instead of in the benchmark."""
+    from omicidx_etl_spark import datagen
+    from omicidx_etl_spark.cdc.replay import replay_batch
+    from omicidx_etl_spark.lake.table import LakeTable
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    ch = datagen.gen_changes(spark, 10000, 2000, seed=3)
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), ch.drop("seq", "op", "event_ts").schema,
+        key="doc_id", n_buckets=16,
+    )
+    replay_batch(t, ch.filter("seq <= 5000"), batch_id=0, app_id="rt", mode="mor")
+    batch = ch.filter("seq > 5000")
+    _, commit = count_round_trips(
+        lambda: replay_batch(t, batch, batch_id=1, app_id="rt", mode="mor")
+    )
+    keys = [
+        r.doc_id
+        for r in ch.select("doc_id").distinct().orderBy("doc_id").limit(4).collect()
+    ]
+    rows, lookup = count_round_trips(lambda: t.lookup(keys).collect())
+    assert rows
+    assert commit <= COMMIT_ROUND_TRIPS, commit
+    assert lookup <= LOOKUP_ROUND_TRIPS, lookup

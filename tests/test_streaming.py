@@ -256,3 +256,69 @@ def test_stream_replay_prefilter_requires_dedup_within(spark, tmp_path):
     exp = _oracle(log)
     assert got["doc_id"].tolist() == exp["doc_id"].tolist()
     assert got["n_tok"].tolist() == exp["n_tok"].tolist()
+
+
+def test_quarantine_markers_never_partial(spark, tmp_path, monkeypatch):
+    """The quarantine markers (``error.json``, ``_RESOLVED``) appear whole
+    or not at all: a crash while writing either one leaves no marker, so a
+    reader never parses half a record and a half-written ``_RESOLVED``
+    never hides a batch that still needs its replay."""
+    import json
+    import os
+
+    import pytest
+
+    from omicidx_etl_spark.streaming.replay import (
+        _quarantine_batch,
+        replay_quarantined,
+    )
+
+    root = str(tmp_path / "t")
+    ch = datagen.gen_changes(spark, 200, 50, seed=5)
+    table = LakeTable.create(
+        spark, root, ch.drop("seq", "op", "event_ts").schema, key="doc_id",
+        n_buckets=2,
+    )
+    markers = ({"app_id", "batch_id"}, {"app_id", "batch_id", "error", "data_landed"})
+    real_dump, real_dumps = json.dump, json.dumps
+
+    def is_marker(obj):
+        return isinstance(obj, dict) and set(obj) in markers
+
+    def dump(obj, fp, *a, **k):
+        if is_marker(obj):
+            fp.write('{"app_id": ')  # the disk fills mid-record
+            raise OSError("no space left on device")
+        return real_dump(obj, fp, *a, **k)
+
+    def dumps(obj, *a, **k):
+        if is_marker(obj):
+            raise OSError("no space left on device")
+        return real_dumps(obj, *a, **k)
+
+    def crash_markers():
+        monkeypatch.setattr(json, "dump", dump)
+        monkeypatch.setattr(json, "dumps", dumps)
+
+    qdir = os.path.join(root, "_quarantine", f"batch-{7:09d}")
+    crash_markers()
+    with pytest.raises(OSError):
+        _quarantine_batch(table, ch, 7, "qa", ValueError("poison"), None)
+    assert not os.path.exists(os.path.join(qdir, "error.json"))
+    monkeypatch.undo()
+    _quarantine_batch(table, ch, 7, "qa", ValueError("poison"), None)
+    with open(os.path.join(qdir, "error.json")) as f:
+        assert json.load(f)["error"] == "ValueError: poison"
+
+    crash_markers()
+    with pytest.raises(OSError):
+        replay_quarantined(table, app_id="qa", mode="mor")
+    assert not os.path.exists(os.path.join(qdir, "_RESOLVED"))
+    monkeypatch.undo()
+    # the batch stays unresolved, so the next pass visits it again; the
+    # merge already committed, so the revisit skips and marks it resolved
+    assert replay_quarantined(table, app_id="qa", mode="mor") == [
+        {"batch_id": 7, "replayed": True, "skipped": True}
+    ]
+    with open(os.path.join(qdir, "_RESOLVED")) as f:
+        assert json.load(f) == {"app_id": "qa", "batch_id": 7}
