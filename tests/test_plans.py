@@ -803,7 +803,7 @@ def test_bucket_remap_one_bucket_per_write_task(spark):
             ).alias(BUCKET_COL)
         )
         rows = (
-            data.repartition(p, _bucket_partition_col(F.col(BUCKET_COL), nb, p, used))
+            data.repartition(p, _bucket_partition_col(F.col(BUCKET_COL), nb, p, ids))
             .withColumn("pid", F.spark_partition_id())
             .groupBy(BUCKET_COL)
             .agg(F.countDistinct("pid").alias("n_pid"), F.min("pid").alias("pid"))
@@ -819,7 +819,9 @@ def test_bucket_remap_one_bucket_per_write_task(spark):
     nb = 32
     data = spark.range(0, 20000).select((F.col("id") % nb).cast("int").alias(BUCKET_COL))
     placed = (
-        data.repartition(nb, _bucket_partition_col(F.col(BUCKET_COL), nb))
+        data.repartition(
+            nb, _bucket_partition_col(F.col(BUCKET_COL), nb, nb, list(range(nb)))
+        )
         .withColumn("pid", F.spark_partition_id())
         .groupBy("pid")
         .agg(F.countDistinct(BUCKET_COL).alias("nb"))
@@ -865,13 +867,16 @@ def _plan_tree(plan: str) -> list[str]:
     return ops
 
 
-def test_mor_merge_and_compaction_one_exchange(spark, tmp_path):
-    """The MOR merge and compaction each run ONE shuffle: the latest row
-    per key is kept inside the bucket exchange (grouping by bucket, its
-    write-task slot and the key, which the hash partitioning already
-    clusters), and the aggregate's output order is the partitioned
-    writer's, so no Sort sits between the aggregate and the write. A replay
-    with the default dedup must not add a key shuffle of its own."""
+def test_mor_merge_one_exchange(spark, tmp_path):
+    """The MOR merge runs ONE shuffle: the latest row per key is kept
+    inside the bucket exchange (grouping by bucket, its write-task slot and
+    the key, which the hash partitioning already clusters), and the
+    aggregate's output order is the partitioned writer's, so no Sort sits
+    between the aggregate and the write. A replay with the default dedup
+    must not add a key shuffle of its own. Compaction's write goes through
+    the same bucket exchange, sized min(buckets rewritten, cores)."""
+    import re
+
     from omicidx_etl_spark import datagen
     from omicidx_etl_spark.cdc.replay import replay_batch
     from omicidx_etl_spark.lake.table import LakeTable
@@ -881,16 +886,15 @@ def test_mor_merge_and_compaction_one_exchange(spark, tmp_path):
         spark, str(tmp_path / "t"), ch.drop("seq", "op", "event_ts").schema,
         key="doc_id", n_buckets=8,
     )
-
-    def check(ops):
+    for b in range(2):
+        replay_batch(t, ch, batch_id=b, app_id="p", mode="mor")
+        ops = _plan_tree(_last_sql_plan(spark))
         assert ops.count("Exchange") == 1, ops
         write = ops.index("WriteFiles")
         agg = ops.index("SortAggregate")
         assert write < agg < ops.index("Exchange"), ops
         assert "Sort" not in ops[write:agg], ops
-
-    for b in range(2):
-        replay_batch(t, ch, batch_id=b, app_id="p", mode="mor")
-        check(_plan_tree(_last_sql_plan(spark)))
     t.compact()
-    check(_plan_tree(_last_sql_plan(spark)))
+    parts = re.findall(r"hashpartitioning\(__p#\d+, (\d+)\)", _last_sql_plan(spark))
+    p = min(8, spark.sparkContext.defaultParallelism)
+    assert parts and set(parts) == {str(p)}, parts
