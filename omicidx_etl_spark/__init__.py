@@ -17,7 +17,8 @@ Layout
                  handling, bucket-pruned copy-on-write merge.
 - ``streaming``  Structured Streaming replay: ``readStream`` over the
                  change-log directory + ``foreachBatch`` idempotent merge,
-                 checkpoint-resumable.
+                 checkpoint-resumable, with poison-batch quarantine;
+                 watermarked window stats and ingest-edge redelivery dedup.
 - ``operators``  The relational operator library mirroring the reference's
                  consolidation SQL (SURVEY.md §2): latest-per-key dedup, joins,
                  explode-bridges, unions, staging coercions, views.
@@ -26,7 +27,8 @@ Layout
                  text quality, token counting, fingerprinting.
 - ``sources``    Readers for the supported formats (parquet/json/csv
                  change feeds, manifest anti-diff discovery).
-- ``plans``      Plan helpers: explain capture, shuffle/scan audits.
+- ``plans``      The curated view catalog (``views``) and the DuckDB
+                 oracle comparison (``oracle``).
 """
 
 __version__ = "0.1.0"

@@ -57,6 +57,7 @@ see ``omicidx_etl/sra/catalog.py:309-320``.)
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import os
 import shutil
@@ -750,22 +751,9 @@ class LakeTable:
                         (seq_bounds, fe.get("rows"))
                     )
 
-        def _union(keys: list[tuple[int, bool]]) -> DataFrame | None:
-            parts: list[DataFrame] = []
-            for sid, dirty in sorted(keys):
-                s = _phys(T.StructType.fromJson(json.loads(snap["schemas"][str(sid)])))
-                df = self.spark.read.schema(s).parquet(*by_schema[(sid, dirty)])
-                df = _remap(df, snap, sid)
-                parts.append(_align(df, cur_phys))
-            if not parts:
-                return None
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
-
-        clean = _union([k for k in by_schema if not k[1]])
-        dirty = _union([k for k in by_schema if k[1]])
+        groups = sorted(by_schema.items())
+        clean = self._scan(snap, [(sid, ds, None) for (sid, d), ds in groups if not d], cur_phys)
+        dirty = self._scan(snap, [(sid, ds, None) for (sid, d), ds in groups if d], cur_phys)
         self.last_reconcile = None
         if dirty is not None:
             strategy = self._reconcile_strategy(dirty_meta)
@@ -864,6 +852,25 @@ class LakeTable:
             "buckets_skipped": sorted(skipped),
         }
         return kept
+
+    def _scan(
+        self,
+        snap: dict,
+        groups: list[tuple[int, list[str], int | None]],
+        cur_phys: T.StructType,
+    ) -> DataFrame | None:
+        """Union of ``(schema_id, dirs, seq_floor)`` groups, in order: each
+        group is read with the exact physical schema it was written under,
+        cut to rows above ``seq_floor`` when one is given, re-mapped to the
+        current field names and aligned to ``cur_phys``. None if empty."""
+        parts: list[DataFrame] = []
+        for sid, dirs, floor in groups:
+            s = _phys(T.StructType.fromJson(json.loads(snap["schemas"][str(sid)])))
+            df = self.spark.read.schema(s).parquet(*dirs)
+            if floor is not None:
+                df = df.filter(F.col(SEQ_COL) > F.lit(floor))
+            parts.append(_align(_remap(df, snap, sid), cur_phys))
+        return functools.reduce(DataFrame.unionByName, parts) if parts else None
 
     def lookup(self, keys: list, use_blooms: bool = True) -> DataFrame:
         """Point lookup by key(s): bucket-pruned read + key filter.
@@ -1126,20 +1133,16 @@ class LakeTable:
                         os.path.join(self.root, fe["dir"])
                     )
 
-        parts: list[DataFrame] = []
-        for (sid, is_rewrite), dirs in sorted(by_schema.items()):
-            s = _phys(T.StructType.fromJson(json.loads(to_snap["schemas"][str(sid)])))
-            df = self.spark.read.schema(s).parquet(*dirs)
-            if is_rewrite:
-                df = df.filter(F.col(SEQ_COL) > F.lit(floor))
-            df = _remap(df, to_snap, sid)
-            parts.append(_align(df, cur_phys))
-        if not parts:
+        base = self._scan(
+            to_snap,
+            [
+                (sid, dirs, floor if is_rewrite else None)
+                for (sid, is_rewrite), dirs in sorted(by_schema.items())
+            ],
+            cur_phys,
+        )
+        if base is None:
             base = self.spark.createDataFrame([], cur_phys)
-        else:
-            base = parts[0]
-            for p in parts[1:]:
-                base = base.unionByName(p)
 
         net = C.latest_per_key(base, [key], SEQ_COL)
         out = net.withColumn(

@@ -1,7 +1,5 @@
 from omicidx_etl_spark.streaming.dedup import dedup_redelivered, stream_dedup_events
-from omicidx_etl_spark.streaming.joins import followup_join, stream_followup_join
 from omicidx_etl_spark.streaming.replay import replay_quarantined, stream_replay
-from omicidx_etl_spark.streaming.stateful import doc_change_stats
 from omicidx_etl_spark.streaming.windows import (
     session_event_stats,
     stream_session_stats,
@@ -11,11 +9,8 @@ from omicidx_etl_spark.streaming.windows import (
 
 __all__ = [
     "dedup_redelivered",
-    "doc_change_stats",
-    "followup_join",
     "session_event_stats",
     "stream_dedup_events",
-    "stream_followup_join",
     "replay_quarantined",
     "stream_replay",
     "stream_session_stats",

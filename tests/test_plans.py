@@ -401,9 +401,10 @@ def test_grouped_sample_window_is_per_stratum(spark):
 
 def test_mor_replay_one_file_per_bucket(spark, tmp_path):
     """The default mor replay stages exactly one parquet file per touched
-    bucket: the merge's bucket exchange gives every bucket its own write
-    task (``_bucket_remap``), so a batch never fans out into
-    tasks × buckets small files."""
+    bucket: the merge's bucket exchange (``_bucket_exchange``) has
+    P = min(buckets, cores) partitions and sends each bucket whole to one
+    write task, so a task writes at most ⌈buckets/P⌉ whole buckets and a
+    batch never fans out into tasks × buckets small files."""
     import os
 
     from omicidx_etl_spark import datagen

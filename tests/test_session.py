@@ -121,12 +121,23 @@ def test_session_built_and_configured_only_in_session_py():
 
 
 def test_retired_options_stay_gone():
-    """Deleted options, the bench's 32-core scaling harness included, stay
-    deleted; only get_spark picks the core count and the default driver
-    heap; scripts stand alone."""
+    """Deleted options, the bench's 32-core scaling harness, the probe
+    scripts and the unreached engine modules included, stay deleted; only
+    get_spark picks the core count and the default driver heap; scripts
+    stand alone."""
     assert not (PKG / "config.py").exists()
-    for gone in ("bench_extra.py", "scripts/executor_scaling.py", "scripts/sustained_replay.py"):
-        assert not (REPO / gone).exists(), gone
+    gone = (
+        "bench_extra.py",
+        "scripts/executor_scaling.py",
+        "scripts/sustained_replay.py",
+        "scripts/composed_replay.py",
+        "scripts/auto_maintain_replay.py",
+        "omicidx_etl_spark/plans/incremental.py",
+        "omicidx_etl_spark/streaming/stateful.py",
+        "omicidx_etl_spark/streaming/joins.py",
+    )
+    for path in gone:
+        assert not (REPO / path).exists(), path
     retired = re.compile(
         r"fanout|SPARK_GRAFT_(PQ_BATCH|SHUFFLE_COMPRESS|WAL_CODEC|READ_PREFILTER_ROWS"
         r"|SESSION_WARMUP|COMPUTE_PARTS|BENCH_FANOUT)|SPARK_DRIVER_JAVA_OPTS"

@@ -1,18 +1,13 @@
-"""Ingest-edge redelivery dedup (dropDuplicatesWithinWatermark) and the
-watermarked stream-stream interval join: each streaming path must emit
-exactly what its shared batch definition computes."""
+"""Ingest-edge redelivery dedup (dropDuplicatesWithinWatermark): the
+streaming path must emit exactly what its shared batch definition
+computes."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from omicidx_etl_spark import datagen
-from omicidx_etl_spark.streaming import (
-    dedup_redelivered,
-    followup_join,
-    stream_dedup_events,
-    stream_followup_join,
-)
+from omicidx_etl_spark.streaming import dedup_redelivered, stream_dedup_events
 
 
 def _redelivered_log(spark, path: str, n_events=4000, n_docs=250, seed=47) -> None:
@@ -57,53 +52,3 @@ def test_stream_dedup_matches_batch(spark, tmp_path):
     stream_dedup_events(spark, log, ckpt, out, within="30 minutes")
     assert spark.read.parquet(out).count() == 4000
 
-
-def test_batch_followup_join_oracle(spark, tmp_path):
-    """Self-check of the batch definition on a hand-built feed."""
-    import datetime as dt
-
-    t0 = dt.datetime(2026, 1, 1, 0, 0, 0)
-    rows = [
-        # doc a: insert then update 10 min later (in horizon), delete 2 h later (out)
-        ("a", 1, "I", t0),
-        ("a", 2, "U", t0 + dt.timedelta(minutes=10)),
-        ("a", 3, "D", t0 + dt.timedelta(hours=2)),
-        # doc b: update before its insert is NOT a follow-up of it
-        ("b", 4, "U", t0 - dt.timedelta(minutes=5)),
-        ("b", 5, "I", t0),
-    ]
-    df = spark.createDataFrame(rows, "doc_id string, seq long, op string, event_ts timestamp")
-    base = df.filter(F.col("op") == "I")
-    foll = df.filter(F.col("op") != "I")
-    got = followup_join(base, foll, horizon="30 minutes").collect()
-    assert len(got) == 1
-    r = got[0]
-    assert (r.doc_id, r.base_seq, r.followup_seq, r.followup_op) == ("a", 1, 2, "U")
-    assert r.lag_us == 600 * 1_000_000
-
-
-def test_stream_followup_join_matches_batch(spark, tmp_path):
-    log = str(tmp_path / "log")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    ch = datagen.gen_changes(spark, 4000, 250, seed=48)
-    datagen.write_change_log(ch, log, files=4)
-
-    stream_followup_join(
-        spark, log, ckpt, out, horizon="30 minutes", watermark="1 hour"
-    )
-
-    feed = spark.read.parquet(log)
-    exp = followup_join(
-        feed.filter(F.col("op") == "I"),
-        feed.filter(F.col("op") != "I"),
-        horizon="30 minutes",
-    )
-    got = spark.read.parquet(out)
-    assert got.count() == exp.count() > 0
-    cols = ["doc_id", "base_seq", "followup_seq", "followup_op", "lag_us"]
-    sym = (
-        got.select(cols).exceptAll(exp.select(cols)).count()
-        + exp.select(cols).exceptAll(got.select(cols)).count()
-    )
-    assert sym == 0
