@@ -11,9 +11,9 @@ Two parts, both on one ``session.get_spark`` session (cores from
    ``omicidx_etl_spark.queries`` on the tables at ``$SPARK_GRAFT_SF_DIR``
    (default: the sf0.1 test tables), each forced through a noop sink so
    every column materializes (no collect-to-driver skew in the timing).
-2. Change-events/sec of a MOR replay (prefilter dedup, 32 buckets, 4
-   batches) of a cached deterministic change log (``datagen.gen_changes``)
-   into a fresh LakeTable: 2M events over 200k docs at sf0.1.
+2. Change-events/sec of a MOR replay (32 buckets, 4 batches) of a cached
+   deterministic change log (``datagen.gen_changes``) into a fresh
+   LakeTable: 2M events over 200k docs at sf0.1.
 
 The change-log cache and the replay table live under
 ``$SPARK_GRAFT_BENCH_SCRATCH`` (default /tmp/spark_graft_bench). The full
@@ -41,11 +41,8 @@ SCRATCH = os.environ.get("SPARK_GRAFT_BENCH_SCRATCH") or "/tmp/spark_graft_bench
 CACHE = os.path.join(SCRATCH, "cache")
 DETAIL = os.path.join(SCRATCH, "last_run_detail.json")
 
-# The headline replay shape. prefilter: narrow winner agg + broadcast join,
-# so the wide token arrays never shuffle (winners per batch ~200k ≈ 5 MB
-# broadcast at sf0.1).
+# The headline replay shape.
 MODE = "mor"
-DEDUP = "prefilter"
 BUCKETS = 32
 SEED = 42
 FILES = 128
@@ -66,8 +63,8 @@ def _compact_result(full: dict) -> dict:
     out = dict(full)
     rp = out.get("replay")
     if isinstance(rp, dict):
-        keep = ("events_per_sec", "sec", "events", "chunk", "mode", "dedup",
-                "final_rows", "attempts", "steal_frac")
+        keep = ("events_per_sec", "sec", "events", "chunk", "mode", "final_rows",
+                "attempts", "steal_frac")
         out["replay"] = {k: rp[k] for k in keep if k in rp}
     out.pop("scratch", None)
     line = json.dumps(out)
@@ -182,8 +179,7 @@ def run_replay(spark, log_path: str, n_events: int, chunk: int, workdir: str) ->
                                n_buckets=BUCKETS)
         s0 = _steal_jiffies()
         t0 = time.time()
-        snaps = replay_log(spark, tbl, log_path, chunk_events=chunk, mode=MODE,
-                           dedup_method=DEDUP)
+        snaps = replay_log(spark, tbl, log_path, chunk_events=chunk, mode=MODE)
         dt = time.time() - t0
         stolen = _steal_frac(_steal_jiffies() - s0, dt)
         res = {
@@ -194,7 +190,6 @@ def run_replay(spark, log_path: str, n_events: int, chunk: int, workdir: str) ->
             "batches": len(snaps),
             "final_rows": tbl.read().count(),
             "mode": MODE,
-            "dedup": DEDUP,
             "steal_frac": round(stolen, 4),
         }
         if best is None or res["events_per_sec"] > best["events_per_sec"]:

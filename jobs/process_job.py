@@ -10,7 +10,8 @@ nonzero at the end when any failed.
       --manifest entities.json [--streaming]
 
 Manifest: JSON list of {"name", "log", "table"} objects, each accepting the
-optional keys {"key", "n_buckets", "mode", "dedup", "chunk", "checkpoint"}.
+optional keys {"key", "n_buckets", "mode", "chunk", "checkpoint"}. Every
+entity keeps the latest event per key (``cdc/replay.py``).
 
 Emits one JSON summary line (per-entity stats + failures) on stdout.
 """
@@ -45,7 +46,6 @@ def main() -> int:
             key=e.get("key", "doc_id"),
             n_buckets=e.get("n_buckets", 16),
             mode=e.get("mode", "mor"),
-            dedup_method=e.get("dedup", "max_by"),
             chunk_events=e.get("chunk", 1_000_000),
             streaming=args.streaming,
             checkpoint_dir=e.get("checkpoint"),

@@ -11,6 +11,8 @@ Usage (multi-executor cluster — the north rule's deployment shape):
       [--mode mor|cow] [--chunk 1000000] [--buckets 32] [--compact-every 8] \\
       [--streaming --checkpoint /path/ckpt]
 
+Every batch keeps the latest event per ``doc_id`` (``cdc/replay.py``).
+
 The job is driver-config agnostic: master/executors come from spark-submit.
 Emits one JSON line with per-batch lineage totals and events/sec.
 
@@ -38,8 +40,6 @@ def main() -> None:
     p.add_argument("--canonicalize-every", type=int, default=None,
                    help="batch replay: run in-flight exact corpus dedup "
                         "(cdc.canonicalize) every N batches")
-    p.add_argument("--dedup", default="max_by",
-                   choices=["max_by", "prefilter"])
     p.add_argument("--no-quarantine", action="store_true",
                    help="streaming: fail the stream on a poison batch instead "
                         "of parking it under <table>/_quarantine/")
@@ -88,7 +88,7 @@ def main() -> None:
         snaps = stream_replay(
             spark, table, args.log, args.checkpoint or args.table + "_ckpt",
             app_id=args.app_id, mode=args.mode, lineage=lineage,
-            dedup_method=args.dedup, quarantine=not args.no_quarantine,
+            quarantine=not args.no_quarantine,
             compact_deltas_over=args.compact_deltas_over,
         )
     else:
@@ -99,7 +99,6 @@ def main() -> None:
         snaps = replay_log(
             spark, table, args.log, chunk_events=args.chunk, app_id=args.app_id,
             mode=args.mode, compact_every=args.compact_every, lineage=lineage,
-            dedup_method=args.dedup,
             canonicalize_every=args.canonicalize_every,
             progress=hb,
         )

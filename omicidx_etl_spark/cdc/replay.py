@@ -11,13 +11,9 @@ Semantics (transcribed from the reference, re-expressed Spark-first):
   (``omicidx_etl/sra/catalog.py:291-297``) become the LakeTable's atomic
   per-app batch watermark.
 
-Dedup: ``dedup_latest`` picks one of the two plans in
-``operators/cdc_ops.py`` — ``max_by`` (default; the map-side combinable
-aggregate, always correct) or ``prefilter`` (narrow winner aggregation +
-broadcast join, so kB-scale payloads never shuffle; needs ``seq`` unique
-per key within the batch — true for any WAL/binlog feed, where seq is the
-log offset — and a winner set that fits a broadcast). A MOR replay with
-``max_by`` hands the raw events to ``LakeTable.merge``, which runs the same
+Dedup: one plan, ``operators/cdc_ops.latest_per_key`` (the map-side
+combinable ``max_by`` aggregate). A COW batch goes through it here; a MOR
+batch goes to ``LakeTable.merge`` raw, and the merge runs the same
 aggregate inside its bucket exchange.
 """
 
@@ -35,8 +31,6 @@ from pyspark.sql import functions as F
 
 from omicidx_etl_spark.lake.table import _WIDEN_OK, LakeTable
 from omicidx_etl_spark.operators import cdc_ops as C
-
-DEDUP_METHODS = ("max_by", "prefilter")
 
 
 def evolve_to_batch_schema(
@@ -114,19 +108,14 @@ def dedup_latest(
     changes: DataFrame,
     key: str = "doc_id",
     seq: str = "seq",
-    method: str = "max_by",
 ) -> DataFrame:
     """Collapse a change set to the single latest event per key.
 
     ``seq`` must be a total order (unique); ties are impossible by contract
-    (a WAL LSN). Output columns == input columns. ``method`` is one of
-    ``DEDUP_METHODS``; see ``operators/cdc_ops.py`` for the two plans.
+    (a WAL LSN). Output columns == input columns. The plan is
+    ``operators/cdc_ops.latest_per_key``.
     """
-    if method == "max_by":
-        return C.latest_per_key(changes, [key], seq)
-    if method == "prefilter":
-        return C.latest_by_winner_join(changes, key, seq)
-    raise ValueError(f"unknown dedup method {method!r}; expected one of {DEDUP_METHODS}")
+    return C.latest_per_key(changes, [key], seq)
 
 
 def replay_batch(
@@ -138,7 +127,6 @@ def replay_batch(
     seq: str = "seq",
     op_col: str = "op",
     delete_value: str = "D",
-    dedup_method: str = "max_by",
     lineage: "LineageLog | None" = None,
     mode: str = "cow",
     branch: str | None = None,
@@ -159,10 +147,6 @@ def replay_batch(
     ``table.read(branch=...)``, then ``table.publish(branch)`` — main
     consumers never observe an unaudited batch.
     """
-    if dedup_method not in DEDUP_METHODS:
-        raise ValueError(
-            f"unknown dedup method {dedup_method!r}; expected one of {DEDUP_METHODS}"
-        )
     key = key or table.key
     t0 = time.time()
     evolved: list[str] = []
@@ -176,17 +160,10 @@ def replay_batch(
         F.max(seq).alias("seq_hi"),
         F.sum(F.when(F.col(op_col) == delete_value, 1).otherwise(0)).alias("delete_events"),
     )
-    if dedup_method == "prefilter":
-        # The observation rides the narrow winner scan, which sees every
-        # event exactly once; the wide side stays observation-free.
-        narrow = changes.select(key, seq, op_col).observe(obs, *obs_cols)
-        latest = C.latest_by_winner_join(changes, key, seq, winners_from=narrow)
-    elif mode == "mor":
-        # the MOR merge keeps the latest row per key inside its bucket
-        # exchange: a max_by dedup here would be a second shuffle
-        latest = changes.observe(obs, *obs_cols)
-    else:
-        latest = dedup_latest(changes.observe(obs, *obs_cols), key=key, seq=seq)
+    events = changes.observe(obs, *obs_cols)
+    # the MOR merge keeps the latest row per key inside its bucket
+    # exchange: a dedup here would be a second shuffle
+    latest = events if mode == "mor" else dedup_latest(events, key=key, seq=seq)
     snap = table.merge(
         latest,
         op_col=op_col,
@@ -254,14 +231,11 @@ def replay_log(
     chunk_events: int = 1_000_000,
     app_id: str = "replay",
     seq: str = "seq",
-    dedup_method: str = "max_by",
     lineage: "LineageLog | None" = None,
     max_batches: int | None = None,
     mode: str = "cow",
     compact_every: int | None = None,
     canonicalize_every: int | None = None,
-    canonicalize_method: str = "exact",
-    canonicalize_content_col: str = "tokens",
     progress: "LogProgress | None" = None,
 ) -> list[dict[str, Any]]:
     """Batch-replay a parquet change log in ordered seq-range micro-batches.
@@ -279,10 +253,11 @@ def replay_log(
     for the 10^10-event scale target.
 
     ``canonicalize_every=k`` runs in-flight corpus dedup
-    (``cdc.canonicalize``) every k batches as its own idempotent commit
-    (batch-id–keyed, so kill/resume never double-deletes). The full pass
-    is right for bounded tables; at corpus scale prefer the standalone
-    incremental job (``canonicalize_incremental`` + signature index).
+    (``cdc.canonicalize``, exact duplicates of ``tokens``) every k batches
+    as its own idempotent commit (batch-id–keyed, so kill/resume never
+    double-deletes). The full pass is right for bounded tables; at corpus
+    scale prefer the standalone incremental job
+    (``canonicalize_incremental`` + signature index).
 
     ``progress``: optional :class:`omicidx_etl_spark.progress.LogProgress`
     heartbeat, updated with each batch's applied event count (the
@@ -357,7 +332,7 @@ def replay_log(
             snaps.append(
                 replay_batch(
                     table, batch, batch_id=b, app_id=app_id, seq=seq,
-                    dedup_method=dedup_method, lineage=lineage, mode=mode,
+                    lineage=lineage, mode=mode,
                 )
             )
             if progress is not None:
@@ -370,8 +345,7 @@ def replay_log(
                 from omicidx_etl_spark.cdc.canonicalize import canonicalize
 
                 canonicalize(
-                    table, method=canonicalize_method,
-                    content_col=canonicalize_content_col,
+                    table, method="exact", content_col="tokens",
                     app_id=f"{app_id}__canon", batch_id=b, mode=mode,
                 )
     return snaps

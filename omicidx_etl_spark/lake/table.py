@@ -1312,8 +1312,8 @@ class LakeTable:
                 F.sum(F.col(DELETED_COL).cast("long")).alias("tombstone_rows"),
                 F.max(F.col(SEQ_COL)).alias("max_seq"),
             )
-            # AQE has nothing to offer this plan — a prefiltered batch's
-            # join is an explicit broadcast (no strategy to revise), the
+            # AQE has nothing to offer this plan — a replay batch arrives
+            # raw, with no join whose strategy it could revise; the
             # bucket exchange is REPARTITION_BY_NUM (AQE never coalesces
             # it, and skew-splitting applies only to joins) — while its
             # stage-by-stage materialization turns the single write action
@@ -1963,52 +1963,59 @@ class LakeTable:
         what a CONCURRENT in-flight commit is writing right now (files land
         outside the commit lock on purpose). Pass 0 to sweep everything in
         tests/offline maintenance."""
-        keep_ids: set[int] = set()
-        sid: int | None = self.snapshot()["snapshot_id"]
-        for _ in range(max(keep_last, 1)):
-            if sid is None:
-                break
-            keep_ids.add(sid)
-            try:
-                sid = self.snapshot_at(sid).get("parent_id")
-            except FileNotFoundError:
-                break
-        for head in self._read_refs().values():
-            chain: int | None = head
-            while chain is not None and chain not in keep_ids:
-                keep_ids.add(chain)
+        # The retained set, the listing and the snapshot-file deletes run
+        # under the commit lock: a commit landing between the pointer read
+        # and the listing would otherwise have its new current snapshot
+        # deleted, leaving ``_current`` naming a missing file. The data-dir
+        # sweep stays outside; an in-flight writer's dirs are unreferenced
+        # and get the grace period.
+        with _commit_lock(self._meta_dir):
+            keep_ids: set[int] = set()
+            sid: int | None = self.snapshot()["snapshot_id"]
+            for _ in range(max(keep_last, 1)):
+                if sid is None:
+                    break
+                keep_ids.add(sid)
                 try:
-                    chain = self.snapshot_at(chain).get("parent_id")
+                    sid = self.snapshot_at(sid).get("parent_id")
                 except FileNotFoundError:
                     break
-        # tags pin only their own snapshot (reads resolve one manifest);
-        # a tag's history stays walkable only while retention keeps it
-        keep_ids.update(self._read_tags().values())
-        snaps = self.history()
-        keep = [s for s in snaps if s["snapshot_id"] in keep_ids]
-        referenced = set()
-        for s in keep:
-            for raw in s["buckets"].values():
-                entry = _norm_entry(raw)
-                for fe in ([entry["base"]] if entry["base"] else []) + entry["deltas"]:
-                    referenced.add(fe["dir"])
-        # every dir ANY historical snapshot references — computed before the
-        # metadata removal below, to distinguish "expired" from "never
-        # committed" (the latter may be a concurrent writer's in-flight
-        # staging and gets the grace period)
-        referenced_any = set(referenced)
-        for s in snaps:
-            for raw in s["buckets"].values():
-                entry = _norm_entry(raw)
-                for fe in ([entry["base"]] if entry["base"] else []) + entry["deltas"]:
-                    referenced_any.add(fe["dir"])
+            for head in self._read_refs().values():
+                chain: int | None = head
+                while chain is not None and chain not in keep_ids:
+                    keep_ids.add(chain)
+                    try:
+                        chain = self.snapshot_at(chain).get("parent_id")
+                    except FileNotFoundError:
+                        break
+            # tags pin only their own snapshot (reads resolve one manifest);
+            # a tag's history stays walkable only while retention keeps it
+            keep_ids.update(self._read_tags().values())
+            snaps = self.history()
+            keep = [s for s in snaps if s["snapshot_id"] in keep_ids]
+            referenced = set()
+            for s in keep:
+                for raw in s["buckets"].values():
+                    entry = _norm_entry(raw)
+                    for fe in ([entry["base"]] if entry["base"] else []) + entry["deltas"]:
+                        referenced.add(fe["dir"])
+            # every dir ANY historical snapshot references — computed before
+            # the metadata removal below, to distinguish "expired" from
+            # "never committed" (the latter may be a concurrent writer's
+            # in-flight staging and gets the grace period)
+            referenced_any = set(referenced)
+            for s in snaps:
+                for raw in s["buckets"].values():
+                    entry = _norm_entry(raw)
+                    for fe in ([entry["base"]] if entry["base"] else []) + entry["deltas"]:
+                        referenced_any.add(fe["dir"])
+            # snapshot metadata
+            for s in snaps:
+                if s["snapshot_id"] not in keep_ids:
+                    p = self._snap_path(s["snapshot_id"])
+                    if os.path.exists(p):
+                        os.remove(p)
         deleted = []
-        # snapshot metadata
-        for s in snaps:
-            if s["snapshot_id"] not in keep_ids:
-                p = self._snap_path(s["snapshot_id"])
-                if os.path.exists(p):
-                    os.remove(p)
         # orphan data dirs (two-pass like catalog.py:212-275, but manifest-driven)
         now = time.time()
         if os.path.isdir(self._data_dir):
@@ -2070,9 +2077,11 @@ class LakeTable:
         shuffle, and the aggregate's output order (BUCKET_COL first) is the
         order the partitioned writer needs. A frame that already has one
         row per key comes out unchanged but still pays the sort and the
-        aggregate: on the ``bench.py`` replay (prefiltered 500k-event
-        batches of wide rows, 32 buckets, 4 cores) that cost did not show,
-        71.99 → 71.07 s median over 6 interleaved runs each.
+        aggregate. A MOR replay hands its batches here raw, so this is
+        the only dedup they get: on the ``bench.py`` replay (500k-event
+        batches of wide rows, 32 buckets, 4 cores) a winner join before
+        the merge measured 63.30 s median against 65.03 s raw over 8
+        interleaved runs each, inside the 5.20 s spread of its own runs.
 
         ``sort_by_key`` adds a task-local key sort (tight row-group stats
         for point lookups); ``sort_by`` sorts by other columns instead.

@@ -33,6 +33,8 @@ def latest_per_key(
       broadcast inner join on ``(key, seq)``. The wide payload never
       enters an aggregation buffer or a shuffle. Preconditions: ``seq`` is
       unique per key in the frame, and the winner set fits a broadcast.
+      Only ``LakeTable.read``'s reconcile uses it, picked from manifest
+      metadata (``_reconcile_strategy``).
 
     ``order_cols`` must be a deterministic total order: a single column
     name (compared as is), or a list of names compared left to right as a
@@ -50,23 +52,15 @@ def latest_per_key(
     ).select(*df.columns)
 
 
-def latest_by_winner_join(
-    df: DataFrame, key: str, seq: str, winners_from: DataFrame | None = None
-) -> DataFrame:
+def latest_by_winner_join(df: DataFrame, key: str, seq: str) -> DataFrame:
     """Latest row per ``key`` by a winner join (see :func:`latest_per_key`
     for when it applies): ``max(seq)`` per key over the two-column
     projection — Catalyst prunes the scan to ``(key, seq)`` — then the
     wide rows of ``df`` inner-join the broadcast winner set.
 
     A duplicate ``(key, seq)`` row in ``df`` surfaces twice, where
-    ``latest_per_key`` keeps one.
-
-    ``winners_from`` aggregates over a frame the caller supplies instead of
-    ``df`` (it must hold the same ``(key, seq)`` rows), so a caller can hang
-    an ``Observation`` on the narrow side alone: on ``df`` it would ride
-    both halves of the self-join and count every row twice."""
-    narrow = df if winners_from is None else winners_from
-    winners = narrow.select(key, seq).groupBy(key).agg(F.max(seq).alias(seq))
+    ``latest_per_key`` keeps one."""
+    winners = df.select(key, seq).groupBy(key).agg(F.max(seq).alias(seq))
     return df.join(F.broadcast(winners), [key, seq], "inner").select(*df.columns)
 
 

@@ -44,7 +44,6 @@ class EntitySpec:
     n_buckets: int = 16
     schema: T.StructType | None = None  # inferred from the log if None
     mode: str = "mor"
-    dedup_method: str = "max_by"
     chunk_events: int = 1_000_000
     streaming: bool = False
     checkpoint_dir: str | None = None
@@ -91,8 +90,7 @@ def process_one(spark: SparkSession, spec: EntitySpec) -> dict[str, Any]:
         snaps = stream_replay(
             spark, table, spec.log_path,
             spec.checkpoint_dir or spec.table_root + "_ckpt",
-            app_id=spec.name, mode=spec.mode, lineage=lineage,
-            dedup_method=spec.dedup_method, **spec.options,
+            app_id=spec.name, mode=spec.mode, lineage=lineage, **spec.options,
         )
     else:
         from omicidx_etl_spark.cdc.replay import replay_log
@@ -100,8 +98,7 @@ def process_one(spark: SparkSession, spec: EntitySpec) -> dict[str, Any]:
         snaps = replay_log(
             spark, table, spec.log_path, chunk_events=spec.chunk_events,
             app_id=spec.name, mode=spec.mode, lineage=lineage,
-            compact_every=spec.compact_every,
-            dedup_method=spec.dedup_method, **spec.options,
+            compact_every=spec.compact_every, **spec.options,
         )
     events = sum((s.get("summary", {}).get("event_count") or 0) for s in snaps)
     return {

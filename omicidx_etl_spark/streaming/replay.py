@@ -90,7 +90,6 @@ def stream_replay(
     op_col: str = "op",
     delete_value: str = "D",
     max_files_per_trigger: int | None = None,
-    dedup_method: str = "max_by",
     lineage: LineageLog | None = None,
     timeout_s: float | None = None,
     mode: str = "cow",
@@ -140,22 +139,13 @@ def stream_replay(
     crash-relands) drop redelivered copies of the same (doc_id, seq) event
     at the ingest edge via ``dropDuplicatesWithinWatermark`` — state is
     bounded by the horizon, and the merge then never shuffles a duplicate.
-    With ``dedup_method="max_by"`` the merge is idempotent to exact
-    redelivery either way (latest-per-key picks the same winner), so this
-    changes COST, not state; lineage ``event_count`` shows the
-    deduplicated counts. ``dedup_method="prefilter"`` joins every row that
-    carries the winning (key, seq), so a redelivered copy in the same batch
-    would land twice: it requires ``dedup_within`` and raises
-    ``ValueError`` without it, before the stream starts.
+    The merge is idempotent to exact redelivery either way (latest-per-key
+    picks the same winner), so this changes COST, not state; lineage
+    ``event_count`` shows the deduplicated counts.
 
     Returns the snapshot dicts committed during this run (compactions and
     quarantined batches included, flagged by ``operation``/``quarantined``).
     """
-    if dedup_method == "prefilter" and dedup_within is None:
-        raise ValueError(
-            "dedup_method='prefilter' is not idempotent to redelivery inside a "
-            "batch; pass dedup_within= or use dedup_method='max_by'"
-        )
     if schema is None:
         schema = spark.read.format(source_format).load(log_path).schema
     reader = spark.readStream.schema(schema)
@@ -191,7 +181,6 @@ def stream_replay(
                 seq=seq,
                 op_col=op_col,
                 delete_value=delete_value,
-                dedup_method=dedup_method,
                 lineage=lineage,
                 mode=mode,
                 auto_evolve=auto_evolve,

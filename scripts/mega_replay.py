@@ -25,7 +25,10 @@ Design (why this is honest at this scale):
 
 Usage: python scripts/mega_replay.py [--events 100000000] [--chunk 1000000]
        [--docs 2000000] [--compact-every 8] [--budget 2700]
-Emits ONE JSON line; detail in BENCH/mega_replay_r04.json.
+Emits ONE JSON line; detail in BENCH/mega_replay_r04.json. The recorded
+``BENCH/mega_replay_r0*.json`` runs used the since-deleted ``prefilter``
+dedup (a winner join before the merge); the script now hands each batch to
+the merge raw, which keeps the latest row per key in its bucket exchange.
 
 Heap: ``--dir`` is tmpfs (= RAM) by default and holds spark.local.dir,
 so the driver heap competes with shuffle files and the table for the
@@ -76,7 +79,6 @@ def main() -> int:
                          "rewrite shuffle never materializes the whole "
                          "table at once (attempt 4 died with ONE live "
                          "75 GB compaction shuffle on tmpfs)")
-    ap.add_argument("--dedup", default="prefilter")
     ap.add_argument("--seed", type=int, default=42)
     ap.add_argument("--sample-keys", type=int, default=200)
     ap.add_argument("--budget", type=float, default=2700.0,
@@ -129,8 +131,7 @@ def main() -> int:
             spark, args.events, args.docs, seed=args.seed, seq_range=(lo, up)
         )
         tb = time.time()
-        replay_batch(t, batch, batch_id=b, app_id="mega", mode="mor",
-                     dedup_method=args.dedup)
+        replay_batch(t, batch, batch_id=b, app_id="mega", mode="mor")
         batch_secs.append(time.time() - tb)
         if args.compact_every and (b + 1) % args.compact_every == 0:
             tc = time.time()
@@ -217,7 +218,6 @@ def main() -> int:
         "buckets": args.buckets,
         "compact_every": args.compact_every,
         "compact_group": args.compact_group,
-        "dedup": args.dedup,
         "replay_sec": round(sum(batch_secs), 1),
         "compact_sec": round(sum(compact_secs), 1),
         "wall_sec": round(wall, 1),

@@ -29,7 +29,6 @@ def _result() -> dict:
             "batches": 4,
             "final_rows": 191_234,
             "mode": "mor",
-            "dedup": "prefilter",
             "events_per_sec": 79681.3,
             "attempts": 1,
             "steal_frac": 0.0004,

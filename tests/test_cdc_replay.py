@@ -61,39 +61,12 @@ def _schema(spark):
     )
 
 
-@pytest.mark.parametrize("method", ["max_by", "prefilter"])
-def test_replay_matches_oracle(spark, change_log, tmp_path, method):
-    # Multi-batch merge mechanics are method-independent (the same
-    # LakeTable.merge path; cross-batch semantics covered by the default
-    # method here plus resume/idempotency tests below), so only the default
-    # runs the full 4-batch replay — prefilter verifies its dedup VALUES
-    # against the oracle in a single batch, saving ~3 merge commits of
-    # suite wall.
-    chunk = 2000 if method == "max_by" else N_EVENTS
+def test_replay_matches_oracle(spark, change_log, tmp_path):
     table = LakeTable.create(
-        spark, str(tmp_path / f"t_{method}"), _schema(spark), key="doc_id", n_buckets=8
+        spark, str(tmp_path / "t"), _schema(spark), key="doc_id", n_buckets=8
     )
-    replay_log(spark, table, change_log, chunk_events=chunk, dedup_method=method)
+    replay_log(spark, table, change_log, chunk_events=2000)
     assert_state_equal(table, change_log)
-
-
-def test_replay_batch_rejects_removed_dedup_methods(spark, tmp_path):
-    """Only max_by and prefilter exist; any other method raises before a
-    snapshot is committed."""
-    from omicidx_etl_spark.cdc import replay_batch
-
-    table = LakeTable.create(
-        spark, str(tmp_path / "t"), _schema(spark), key="doc_id", n_buckets=2
-    )
-    sid = table.snapshot()["snapshot_id"]
-    ch = datagen.gen_changes(spark, 50, 10, seed=3)
-    for method in ["none", "window", "salted_window"]:
-        with pytest.raises(ValueError, match="unknown dedup method"):
-            replay_batch(table, ch, batch_id=0, mode="mor", dedup_method=method)
-        with pytest.raises(ValueError, match="unknown dedup method"):
-            dedup_latest(ch, method=method)
-    assert table.snapshot()["snapshot_id"] == sid
-    assert table.committed_batch("replay") is None
 
 
 def test_replay_single_batch(spark, change_log, tmp_path):

@@ -316,6 +316,60 @@ def test_expire_grace_protects_inflight_staging(spark, tmp_path):
     assert t.read().count() == 50  # table unharmed throughout
 
 
+def test_expire_keeps_a_commit_that_races_it(spark, tmp_path, monkeypatch):
+    """A commit landing while expire_snapshots walks the history must keep
+    its snapshot: expiry reads the pointer, lists the history and deletes
+    snapshot files under the commit lock, so the racing commit waits and
+    then lands on the retained head. The racer is a thread: a flock lock
+    belongs to an open file, so a second lock taken inline would block."""
+    import threading
+
+    import omicidx_etl_spark.lake.table as lake_table
+
+    root = str(tmp_path / "t")
+    t = LakeTable.create(spark, root, SCHEMA, key="doc_id", n_buckets=2)
+    t.overwrite(datagen.gen_sequences(spark, 20, seed=1))
+    t.overwrite(datagen.gen_sequences(spark, 20, seed=2))
+    ch = spark.createDataFrame(
+        [(1, "I", "doc_racing", [7], 1, "web")],
+        "seq long, op string, doc_id string, tokens array<int>, n_tok int, source string",
+    )
+    writer = LakeTable.load(spark, root)
+    errors: list[Exception] = []
+
+    def race():
+        try:
+            writer.merge(ch, app_id="race", batch_id=0, mode="mor")
+        except Exception as e:  # noqa: BLE001 — surfaced by the assert below
+            errors.append(e)
+
+    racer = threading.Thread(target=race)
+    at_lock = threading.Event()
+    real_lock, real_history = lake_table._commit_lock, t.history
+
+    def lock(meta_dir):
+        if threading.current_thread() is racer:
+            at_lock.set()  # staged; about to commit
+        return real_lock(meta_dir)
+
+    def history():
+        # land the racing commit between the pointer read and the listing
+        racer.start()
+        assert at_lock.wait(120)
+        racer.join(timeout=2)  # commits at once unless expiry holds the lock
+        return real_history()
+
+    monkeypatch.setattr(lake_table, "_commit_lock", lock)
+    monkeypatch.setattr(t, "history", history)
+    t.expire_snapshots(keep_last=1)
+    racer.join()
+    assert errors == []
+    t.snapshot()  # the pointer names a live snapshot file
+    assert t.committed_batch("race") == 0
+    assert t.read().filter(F.col("doc_id") == "doc_racing").count() == 1
+    assert t.read().count() == 21
+
+
 def test_compact_sort_by_secondary_column(spark, tmp_path):
     """compact(sort_by=['source']) = Iceberg sort order on a NON-key
     column: every rewritten base is clustered by it, so parquet row-group

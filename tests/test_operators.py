@@ -5,18 +5,18 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from omicidx_etl_spark import datagen
-from omicidx_etl_spark.cdc import dedup_latest
+from omicidx_etl_spark.operators import cdc_ops as C
 from omicidx_etl_spark.operators import relational as R
 from omicidx_etl_spark.functions import multimodal as M
 
 
 def test_dedup_strategies_agree(spark):
+    """``LakeTable.read`` picks either plan from manifest metadata, so the
+    two must return the same rows."""
     ch = datagen.gen_changes(spark, 5000, 200, seed=31)
-    outs = {
-        m: dedup_latest(ch, method=m).orderBy("doc_id").collect()
-        for m in ["max_by", "prefilter"]
-    }
-    assert outs["max_by"] == outs["prefilter"]
+    by_agg = C.latest_per_key(ch, ["doc_id"], "seq").orderBy("doc_id").collect()
+    by_join = C.latest_by_winner_join(ch, "doc_id", "seq").orderBy("doc_id").collect()
+    assert by_agg == by_join
 
 
 def test_latest_row_per_key_only_in_cdc_ops():

@@ -147,15 +147,16 @@ def test_ivf_cells_no_shuffle(spark):
 
 
 def test_prefilter_dedup_broadcasts_winners(spark):
-    """The prefilter dedup's wide side must join the winner set via
-    broadcast — no shuffle of the wide payload columns at all."""
-    from omicidx_etl_spark.cdc.replay import dedup_latest
+    """The winner join (the MOR read's prefilter reconcile) must join the
+    winner set via broadcast — no shuffle of the wide payload columns at
+    all."""
+    from omicidx_etl_spark.operators import cdc_ops as C
 
     log = spark.read.parquet(f"{SF_SMALL}/events.parquet").selectExpr(
         "event_id as seq", "user_id as doc_id", "event_type as op", "value"
     )
     plan = (
-        dedup_latest(log, key="doc_id", seq="seq", method="prefilter")
+        C.latest_by_winner_join(log, "doc_id", "seq")
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -147,6 +147,7 @@ def test_retired_options_stay_gone():
         # environ["SPARK_DRIVER_MEM"] = "48g" or ${SPARK_DRIVER_MEM:-48g}
         r"|(SPARK_GRAFT_CPUS|SPARK_DRIVER_MEM)([\"']\s*(,|\]\s*=)|:-\d)"
         r"|^(import|from) bench\b"
+        r"|dedup_method|DEDUP_METHODS|winners_from|canonicalize_method|canonicalize_content_col"
     )
     files = (
         sorted(PKG.rglob("*.py"))

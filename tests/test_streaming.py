@@ -224,40 +224,6 @@ def test_stream_replay_dedup_within_drops_redelivery(spark, tmp_path):
     assert int(rows["event_count"].fillna(0).sum()) == 3000  # not 3600
 
 
-def test_stream_replay_prefilter_requires_dedup_within(spark, tmp_path):
-    """prefilter keeps every row carrying the winning (doc_id, seq), so an
-    exact redelivery inside one batch would land twice: stream_replay
-    refuses it without dedup_within, before the stream starts, and with
-    dedup_within the redelivered feed replays to the oracle state."""
-    import os
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    log = str(tmp_path / "log")
-    ckpt = str(tmp_path / "ckpt")
-    schema = _mk_log(spark, log, 600, 80, seed=37, files=2)
-    spark.read.parquet(log).filter(F.col("seq") % 4 == 0).write.mode(
-        "append"
-    ).parquet(log)
-    table = LakeTable.create(spark, str(tmp_path / "t"), schema, key="doc_id", n_buckets=4)
-    sid = table.snapshot()["snapshot_id"]
-
-    with pytest.raises(ValueError, match="dedup_within"):
-        stream_replay(spark, table, log, ckpt, dedup_method="prefilter", mode="mor")
-    assert not os.path.exists(ckpt)
-    assert table.snapshot()["snapshot_id"] == sid
-
-    stream_replay(
-        spark, table, log, ckpt, dedup_method="prefilter", mode="mor",
-        dedup_within="30 minutes",
-    )
-    got = table.read().select("doc_id", "n_tok").orderBy("doc_id").toPandas()
-    exp = _oracle(log)
-    assert got["doc_id"].tolist() == exp["doc_id"].tolist()
-    assert got["n_tok"].tolist() == exp["n_tok"].tolist()
-
-
 def test_quarantine_markers_never_partial(spark, tmp_path, monkeypatch):
     """The quarantine markers (``error.json``, ``_RESOLVED``) appear whole
     or not at all: a crash while writing either one leaves no marker, so a
