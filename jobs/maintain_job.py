@@ -83,7 +83,7 @@ def main() -> None:
 
     spark = get_spark("lake-maintain")
 
-    from omicidx_etl_spark.lake import LakeTable
+    from omicidx_etl_spark.lake import LakeTable, manifest
 
     t = LakeTable.load(spark, args.table)
     t0 = time.time()
@@ -91,10 +91,7 @@ def main() -> None:
     zorder_by = args.zorder_by.split(",") if args.zorder_by else None
 
     nb = t.snapshot()["table"]["n_buckets"]
-    dirty_before = sum(
-        1 for e in t.snapshot()["buckets"].values()
-        if (e.get("deltas") if isinstance(e, dict) else None)
-    )
+    dirty_before = sum(1 for n in manifest.delta_chains(t.snapshot()).values() if n)
     group = args.compact_group if args.compact_group > 0 else nb
     auto = None
     if args.auto:

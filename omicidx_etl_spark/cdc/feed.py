@@ -24,6 +24,7 @@ from typing import Any
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from omicidx_etl_spark.lake import manifest as M
 from omicidx_etl_spark.lake.table import LakeTable
 
 _DIR_RE = re.compile(r"^interval-(begin|\d+)-(\d+)$")
@@ -51,19 +52,6 @@ def list_drops_full(feed_dir: str) -> "list[tuple[int, int | None, str]]":
     # overlapping incremental skip under the watermark instead of tripping
     # the contiguity guard
     return sorted(out, key=lambda t: (t[0], t[1] is not None, t[1] or -1))
-
-
-def _has_files(snap: "dict[str, Any]") -> bool:
-    """Manifest-only check (no scan) for 'could this table hold rows':
-    any bucket with a base or delta entry. A freshly created table has
-    none, so the common bootstrap-into-empty apply skips the
-    snapshot-replace anti-join entirely."""
-    from omicidx_etl_spark.lake.table import _norm_entry
-
-    return any(
-        (lambda n: n["base"] or n["deltas"])(_norm_entry(e))
-        for e in (snap.get("buckets") or {}).values()
-    )
 
 
 def apply_feed(
@@ -124,7 +112,10 @@ def apply_feed(
             ],
         )
         is_bootstrap = from_sid is None or from_sid == 0
-        if is_bootstrap and _has_files(table.snapshot()):
+        # Manifest-only check (no scan) for "could this table hold rows": a
+        # freshly created table references no dir, so the common
+        # bootstrap-into-empty apply skips the snapshot-replace anti-join.
+        if is_bootstrap and M.referenced_dirs(table.snapshot()):
             # Snapshot-REPLACE semantics for a bootstrap landing on a
             # consumer that already holds state (ADVICE r5): a full-state
             # drop applied as upsert-only merge cannot remove keys deleted

@@ -183,13 +183,7 @@ def gen_changes_v2(
     )
 
 
-def write_change_log(
-    changes: DataFrame,
-    path: str,
-    files: int = 8,
-    ordered: bool = True,
-    codec: str = WAL_CODEC,
-) -> None:
+def write_change_log(changes: DataFrame, path: str, files: int = 8) -> None:
     """Land the change log as a parquet directory usable by both the batch
     replayer (seq-range reads) and the streaming replayer (file source).
 
@@ -197,8 +191,8 @@ def write_change_log(
     the shape of real WAL segment files; downstream partition pruning on
     ``seq`` ranges works off parquet row-group stats.
 
-    ``codec`` defaults to ``WAL_CODEC`` (snappy): WAL segments are
-    write-once, read-hot and short-lived, so decode speed beats ratio —
+    Segments are written with ``WAL_CODEC`` (snappy): they are write-once,
+    read-hot and short-lived, so decode speed beats ratio —
     the same tiering real CDC relays use (Kafka defaults to snappy/lz4).
     Measured on the bench's token-array events, every replay's wide-side
     scan pays ~3-4x more decode CPU reading a zstd log than a snappy one
@@ -208,6 +202,6 @@ def write_change_log(
         changes.repartitionByRange(files, "seq")
         .sortWithinPartitions("seq")
         .write.mode("overwrite")
-        .option("compression", codec)
+        .option("compression", WAL_CODEC)
         .parquet(path)
     )

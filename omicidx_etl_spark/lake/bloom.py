@@ -38,6 +38,7 @@ from typing import Any, Iterable
 
 from pyspark.sql import functions as F
 
+from omicidx_etl_spark.lake import manifest as M
 from omicidx_etl_spark.lake.hashing import xxhash64
 
 BLOOM_SUBDIR = os.path.join("_index", "bloom")
@@ -70,49 +71,47 @@ def build_blooms(
     expire_snapshots delete dirs, and without this sweep the ~128 KiB
     sidecars of every historical dir would accumulate forever). Returns
     {"built", "existing", "pruned"}."""
-    from omicidx_etl_spark.lake.table import _norm_entry, atomic_write_json
+    from omicidx_etl_spark.lake.table import atomic_write_json
 
     snap = table.snapshot()
     key = snap["table"]["key"]
     built = existing = 0
-    for raw in snap["buckets"].values():
-        e = _norm_entry(raw)
-        for fe in ([e["base"]] if e["base"] else []) + e["deltas"]:
-            rel = fe["dir"]
-            path = _bloom_path(table.root, rel)
-            if os.path.exists(path):
-                existing += 1
-                continue
-            df = table.spark.read.parquet(
-                os.path.join(table.root, rel)
-            ).select(key)
-            n = df.count()
-            m = _size_bits(n, bits_per_key, min_bits, max_bits)
-            cols = [
-                F.pmod(F.xxhash64(F.col(key), F.lit(s)), F.lit(m)).cast("long")
-                for s in range(n_hashes)
-            ]
-            pos = (
-                df.select(F.explode(F.array(*cols)).alias("p"))
-                .distinct()
-                .collect()
-            )
-            bits = bytearray((m + 7) // 8)
-            for r in pos:
-                p = r["p"]
-                bits[p >> 3] |= 1 << (p & 7)
-            os.makedirs(os.path.dirname(path), exist_ok=True)
-            atomic_write_json(
-                path,
-                {
-                    "dir": rel,
-                    "m": m,
-                    "j": n_hashes,
-                    "n": n,
-                    "bits": base64.b64encode(bytes(bits)).decode(),
-                },
-            )
-            built += 1
+    for _, fe, _ in M.snapshot_file_groups(snap):
+        rel = fe["dir"]
+        path = _bloom_path(table.root, rel)
+        if os.path.exists(path):
+            existing += 1
+            continue
+        df = table.spark.read.parquet(
+            os.path.join(table.root, rel)
+        ).select(key)
+        n = df.count()
+        m = _size_bits(n, bits_per_key, min_bits, max_bits)
+        cols = [
+            F.pmod(F.xxhash64(F.col(key), F.lit(s)), F.lit(m)).cast("long")
+            for s in range(n_hashes)
+        ]
+        pos = (
+            df.select(F.explode(F.array(*cols)).alias("p"))
+            .distinct()
+            .collect()
+        )
+        bits = bytearray((m + 7) // 8)
+        for r in pos:
+            p = r["p"]
+            bits[p >> 3] |= 1 << (p & 7)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        atomic_write_json(
+            path,
+            {
+                "dir": rel,
+                "m": m,
+                "j": n_hashes,
+                "n": n,
+                "bits": base64.b64encode(bytes(bits)).decode(),
+            },
+        )
+        built += 1
     d = prune_blooms(table, detail=True)
     return {
         "built": built,

@@ -44,6 +44,8 @@ from typing import Any
 
 from pyspark.sql import SparkSession
 
+from omicidx_etl_spark.lake import manifest as M
+
 
 def _copy_pairs(pairs) -> None:
     """Executor-side: copy (src, dst) file pairs. Module-level, so Spark
@@ -68,7 +70,7 @@ def clone_table(
     ancestry walk as timestamp time travel. Default: current snapshot.
     Returns the new LakeTable. Refuses to overwrite an existing table.
     """
-    from omicidx_etl_spark.lake.table import LakeTable, _norm_entry
+    from omicidx_etl_spark.lake.table import LakeTable
 
     if at is not None and as_of_ts is not None:
         raise ValueError("pass at= or as_of_ts=, not both")
@@ -79,12 +81,7 @@ def clone_table(
         at = src.snapshot_id_as_of(as_of_ts)
     snap = src.snapshot_at(at) if at is not None else src.snapshot()
 
-    rel_dirs: list[str] = []
-    for raw in snap["buckets"].values():
-        e = _norm_entry(raw)
-        if e["base"]:
-            rel_dirs.append(e["base"]["dir"])
-        rel_dirs.extend(d["dir"] for d in e["deltas"])
+    rel_dirs = [g["dir"] for _, g, _ in M.snapshot_file_groups(snap)]
 
     # Driver holds only (src_path, dst_path) pairs — manifest-bounded, the
     # same cardinality every commit's file list already has. Bytes move in
@@ -118,7 +115,7 @@ def clone_table(
         "table": dict(snap["table"]),
         "current_schema_id": snap["current_schema_id"],
         "schemas": dict(snap["schemas"]),
-        "buckets": {b: _norm_entry(raw) for b, raw in snap["buckets"].items()},
+        "buckets": dict(snap["buckets"]),
         "field_ids": {k: dict(v) for k, v in snap["field_ids"].items()},
         "txn": dict(snap.get("txn") or {}),
         "seq_ceiling": snap.get("seq_ceiling", -1),

@@ -37,6 +37,8 @@ import json
 import os
 from typing import Any
 
+from omicidx_etl_spark.lake import manifest as M
+
 
 def _footer_errors(pairs) -> "list[tuple[str, str]]":
     """Executor-side: open each parquet footer; return (path, error) for
@@ -59,7 +61,6 @@ def check_table(table, deep: bool = False) -> dict[str, Any]:
     from pyspark.sql import functions as F
 
     from omicidx_etl_spark.lake.bloom import BLOOM_SUBDIR
-    from omicidx_etl_spark.lake.table import _norm_entry
 
     findings: list[dict[str, str]] = []
 
@@ -72,15 +73,12 @@ def check_table(table, deep: bool = False) -> dict[str, Any]:
     snap = table.snapshot()
     schemas = snap["schemas"]
     entries: list[dict[str, Any]] = []  # every live file-group entry
-    for b, raw in snap["buckets"].items():
-        e = _norm_entry(raw)
-        for ent in ([e["base"]] if e["base"] else []) + e["deltas"]:
-            entries.append(ent)
-            d = os.path.join(table.root, ent["dir"])
-            if not os.path.isdir(d):
-                err("missing_dir", ent["dir"])
-            if str(ent["schema_id"]) not in schemas:
-                err("unknown_schema", f"{ent['dir']}: schema_id {ent['schema_id']}")
+    for _, ent, _ in M.snapshot_file_groups(snap):
+        entries.append(ent)
+        if not os.path.isdir(os.path.join(table.root, ent["dir"])):
+            err("missing_dir", ent["dir"])
+        if str(ent["schema_id"]) not in schemas:
+            err("unknown_schema", f"{ent['dir']}: schema_id {ent['schema_id']}")
 
     # field ids must cover every column of every schema version (rename/drop
     # evolution resolves through them; a hole breaks old-file re-mapping)
@@ -99,7 +97,7 @@ def check_table(table, deep: bool = False) -> dict[str, Any]:
     # refs/tags must point at snapshot files that exist on disk
     for kind, mapping in (("branch", table.branches()), ("tag", table.tags())):
         for name, sid in mapping.items():
-            if not os.path.exists(table._snap_path(sid)):
+            if not os.path.exists(M.snapshot_path(table._meta_dir, sid)):
                 err("dangling_ref", f"{kind} {name!r} -> snapshot {sid}")
 
     # constraints must still parse against the current schema (a dropped or

@@ -32,7 +32,11 @@ trigger-when-due form.
 
 from __future__ import annotations
 
+import os
 from typing import Any
+
+from omicidx_etl_spark.lake import manifest as M
+from omicidx_etl_spark.lake.bloom import BLOOM_SUBDIR, _bloom_path
 
 
 def auto_maintain(
@@ -47,20 +51,11 @@ def auto_maintain(
     zorder_by: "list[str] | None" = None,
 ) -> dict[str, Any]:
     """Run due maintenance on ``table``; returns {"actions": [...], ...}."""
-    import os
-
-    from omicidx_etl_spark.lake.bloom import BLOOM_SUBDIR, _bloom_path
-    from omicidx_etl_spark.lake.table import _norm_entry
-
     actions: list[dict[str, Any]] = []
     snap = table.snapshot()
 
     # ---- compact buckets whose delta chain is too long, in slices
-    due = sorted(
-        int(b)
-        for b, raw in snap["buckets"].items()
-        if len(_norm_entry(raw)["deltas"]) >= max_delta_chain
-    )
+    due = sorted(b for b, n in M.delta_chains(snap).items() if n >= max_delta_chain)
     for i in range(0, len(due), compact_group):
         chunk = due[i : i + compact_group]
         table.compact(buckets=chunk, sort_by=sort_by, zorder_by=zorder_by)
@@ -97,13 +92,10 @@ def auto_maintain(
     # index-free; auto_maintain never decides to CREATE one)
     bdir = os.path.join(table.root, BLOOM_SUBDIR)
     if os.path.isdir(bdir) and os.listdir(bdir):
-        snap = table.snapshot()
-        uncovered = 0
-        for raw in snap["buckets"].values():
-            e = _norm_entry(raw)
-            for ent in ([e["base"]] if e["base"] else []) + e["deltas"]:
-                if not os.path.exists(_bloom_path(table.root, ent["dir"])):
-                    uncovered += 1
+        uncovered = sum(
+            not os.path.exists(_bloom_path(table.root, ent["dir"]))
+            for _, ent, _ in M.snapshot_file_groups(table.snapshot())
+        )
         if uncovered >= bloom_backlog:
             out = table.build_blooms()
             actions.append({"action": "blooms", **out})

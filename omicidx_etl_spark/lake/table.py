@@ -75,6 +75,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from omicidx_etl_spark.lake import manifest as M
 from omicidx_etl_spark.lake.hashing import (
     KEY_TYPES,
     _murmur3_int32,
@@ -218,7 +219,6 @@ class LakeTable:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self._snap: dict[str, Any] | None = None
 
     # ------------------------------------------------------------------ paths
     @property
@@ -231,9 +231,6 @@ class LakeTable:
 
     def _pointer_path(self) -> str:
         return os.path.join(self._meta_dir, "_current")
-
-    def _snap_path(self, sid: int) -> str:
-        return os.path.join(self._meta_dir, f"snapshot-{sid:09d}.json")
 
     def _refs_path(self) -> str:
         return os.path.join(self._meta_dir, "refs.json")
@@ -263,11 +260,7 @@ class LakeTable:
         """Next globally-unique snapshot id. With branches the snapshot graph
         is a DAG, so parent+1 can collide across forks — ids are allocated
         from the max committed id, under the commit lock."""
-        best = -1
-        for name in os.listdir(self._meta_dir):
-            if name.startswith("snapshot-") and name.endswith(".json"):
-                best = max(best, int(name[len("snapshot-"):-len(".json")]))
-        return best + 1
+        return max(M.snapshot_ids(self._meta_dir), default=-1) + 1
 
     # ------------------------------------------------------------ create/load
     @classmethod
@@ -297,9 +290,7 @@ class LakeTable:
             "table": {"key": key, "n_buckets": n_buckets, "spec_id": 0},
             "current_schema_id": 0,
             "schemas": {"0": schema.json()},
-            # bucket id (str) -> {"base": {"dir": relpath, "schema_id": int} | None,
-            #                     "deltas": [{"dir", "schema_id"}, ...]}
-            "buckets": {str(b): _norm_entry(None) for b in range(n_buckets)},
+            "buckets": M.base_only_buckets({}, n_buckets),  # see lake/manifest.py
             # Iceberg-style stable field ids, per schema id: column identity
             # survives renames, so files written under any historical schema
             # re-map to current names at read time (see _name_map).
@@ -326,44 +317,36 @@ class LakeTable:
     def snapshot(self) -> dict[str, Any]:
         with open(self._pointer_path()) as f:
             name = f.read().strip()
-        with open(os.path.join(self._meta_dir, name)) as f:
-            self._snap = json.load(f)
-        return self._snap
+        return M.load_snapshot(os.path.join(self._meta_dir, name))
 
     def _write_snapshot(self, snap: dict[str, Any], swap_pointer: bool = True) -> None:
         sid = snap["snapshot_id"]
-        atomic_write_json(self._snap_path(sid), snap)
-        if not swap_pointer:  # branch commit: the snapshot exists but main
-            return            # does not see it until publish()
-        # atomic pointer swap = the commit point
-        self._swap_pointer(sid)
-        self._snap = snap
+        atomic_write_json(M.snapshot_path(self._meta_dir, sid), snap)
+        if swap_pointer:  # a branch commit leaves main's pointer until publish()
+            self._swap_pointer(sid)  # atomic pointer swap = the commit point
 
     def _swap_pointer(self, sid: int) -> None:
         ptmp = self._pointer_path() + f".tmp-{uuid.uuid4().hex}"
         with open(ptmp, "w") as f:
-            f.write(os.path.basename(self._snap_path(sid)))
+            f.write(os.path.basename(M.snapshot_path(self._meta_dir, sid)))
         os.replace(ptmp, self._pointer_path())
 
     def snapshot_at(self, sid: int) -> dict[str, Any]:
         """Load a pinned snapshot by id (time travel). Raises with a clear
         message if the snapshot has been expired (``expire_snapshots``)."""
-        path = self._snap_path(sid)
+        path = M.snapshot_path(self._meta_dir, sid)
         if not os.path.exists(path):
             raise FileNotFoundError(
                 f"snapshot {sid} not found under {self._meta_dir} "
                 "(expired or never committed)"
             )
-        with open(path) as f:
-            return json.load(f)
+        return M.load_snapshot(path)
 
     def history(self) -> list[dict[str, Any]]:
-        snaps = []
-        for name in sorted(os.listdir(self._meta_dir)):
-            if name.startswith("snapshot-") and name.endswith(".json"):
-                with open(os.path.join(self._meta_dir, name)) as f:
-                    snaps.append(json.load(f))
-        return snaps
+        return [
+            M.load_snapshot(M.snapshot_path(self._meta_dir, sid))
+            for sid in M.snapshot_ids(self._meta_dir)
+        ]
 
     def snapshot_id_as_of(self, ts: float, branch: str | None = None) -> int:
         """Resolve the snapshot that was current at wall-clock ``ts``
@@ -533,21 +516,10 @@ class LakeTable:
                 raise KeyError(f"unknown branch {branch!r}")
             as_of = refs[branch]
         snap = self.snapshot() if as_of is None else self.snapshot_at(as_of)
-        rows = []
-        for b, raw in snap["buckets"].items():
-            e = _norm_entry(raw)
-            entries = [(e["base"], False)] if e["base"] else []
-            entries += [(fe, True) for fe in e["deltas"]]
-            for fe, is_delta in entries:
-                rows.append(
-                    (
-                        int(b),
-                        fe["dir"],
-                        is_delta,
-                        int(fe["schema_id"]),
-                        json.dumps(fe.get("stats")),
-                    )
-                )
+        rows = [
+            (b, fe["dir"], is_delta, int(fe["schema_id"]), json.dumps(fe.get("stats")))
+            for b, fe, is_delta in M.snapshot_file_groups(snap)
+        ]
         return self.spark.createDataFrame(
             rows,
             "bucket int, dir string, is_delta boolean, schema_id int, "
@@ -575,11 +547,7 @@ class LakeTable:
         compaction/expiry and the next ``build_blooms`` prune pass)."""
         from omicidx_etl_spark.lake.bloom import BLOOM_SUBDIR
 
-        live: set[str] = set()
-        for raw in self.snapshot()["buckets"].values():
-            e = _norm_entry(raw)
-            for fe in ([e["base"]] if e["base"] else []) + e["deltas"]:
-                live.add(fe["dir"])
+        live = M.referenced_dirs(self.snapshot())
         bdir = os.path.join(self.root, BLOOM_SUBDIR)
         rows = []
         if os.path.isdir(bdir):
@@ -728,13 +696,11 @@ class LakeTable:
         # per dirty bucket: (seq_lo, seq_hi, rows) of every surviving file
         # group — drives the reconciliation-strategy choice below
         dirty_meta: dict[str, list[tuple]] = {}
-        for b, raw in snap["buckets"].items():
+        for b, entry in snap["buckets"].items():
             if int(b) not in want:
                 continue
-            entry = _norm_entry(raw)
             dirty = bool(entry["deltas"])
-            files = ([entry["base"]] if entry["base"] else []) + entry["deltas"]
-            for fe in files:
+            for fe in M.file_groups(entry):
                 # skip_dirs is KEY-granularity dir exclusion (bloom-proven
                 # absent for every probed key): such a dir contributes no
                 # rows for those keys, so dropping it cannot change their
@@ -837,15 +803,14 @@ class LakeTable:
         cur_sid = snap["current_schema_id"]
         kept: set[int] = set()
         skipped: list[int] = []
-        for b in want:
-            entry = _norm_entry(snap["buckets"].get(str(b)))
-            groups = ([entry["base"]] if entry["base"] else []) + entry["deltas"]
-            if not groups:
+        for b, entry in snap["buckets"].items():
+            groups = M.file_groups(entry)
+            if int(b) not in want or not groups:
                 continue  # empty bucket: nothing to read either way
             if all(_group_excluded(g, where, cur_sid) for g in groups):
-                skipped.append(b)
+                skipped.append(int(b))
             else:
-                kept.add(b)
+                kept.add(int(b))
         self.last_scan = {
             "where": [list(p) for p in where],
             "buckets_read": sorted(kept),
@@ -902,11 +867,7 @@ class LakeTable:
         if use_blooms:
             from omicidx_etl_spark.lake.bloom import dirs_to_skip
 
-            cand = []
-            for b in buckets:
-                e = _norm_entry(snap["buckets"].get(str(b)))
-                for fe in ([e["base"]] if e["base"] else []) + e["deltas"]:
-                    cand.append(fe["dir"])
+            cand = [fe["dir"] for _, fe, _ in M.snapshot_file_groups(snap, buckets)]
             skip = dirs_to_skip(self, keys, cand) or None
         return self.read(buckets=buckets, skip_dirs=skip).filter(
             F.col(key).isin(list(keys))
@@ -1100,17 +1061,13 @@ class LakeTable:
         key = to_snap["table"]["key"]
         cur_phys = _phys(self.current_schema(to_snap))
 
-        old_dirs: set[str] = set()
-        for raw in from_snap["buckets"].values():
-            e = _norm_entry(raw)
-            for fe in ([e["base"]] if e["base"] else []) + e["deltas"]:
-                old_dirs.add(fe["dir"])
+        old_dirs = M.referenced_dirs(from_snap)
         # (schema_id, is_rewrite) -> dirs added since from_snap
         by_schema: dict[tuple[int, bool], list[str]] = {}
-        for raw in to_snap["buckets"].values():
-            e = _norm_entry(raw)
-            if e["base"] and e["base"]["dir"] not in old_dirs:
-                fe = e["base"]
+        for _, fe, is_delta in M.snapshot_file_groups(to_snap):
+            if fe["dir"] in old_dirs:
+                continue
+            if not is_delta:
                 # Manifest seq-bounds pruning: a rewrite dir (compaction /
                 # COW) whose max(__seq) <= the from-snapshot's ceiling holds
                 # only rows the consumer has already seen — skip the scan
@@ -1121,17 +1078,12 @@ class LakeTable:
                 st = (fe.get("stats") or {}).get(SEQ_COL)
                 if st is not None and st[1] <= floor:
                     continue
-                by_schema.setdefault((fe["schema_id"], True), []).append(
-                    os.path.join(self.root, fe["dir"])
-                )
             # delta dirs are NEVER seq-pruned: a post-from delta whose seqs
             # are all <= floor is exactly the documented late-arrival case,
             # which MOR commits must keep visible
-            for fe in e["deltas"]:
-                if fe["dir"] not in old_dirs:
-                    by_schema.setdefault((fe["schema_id"], False), []).append(
-                        os.path.join(self.root, fe["dir"])
-                    )
+            by_schema.setdefault((fe["schema_id"], not is_delta), []).append(
+                os.path.join(self.root, fe["dir"])
+            )
 
         base = self._scan(
             to_snap,
@@ -1203,7 +1155,7 @@ class LakeTable:
             )
         new_sid = snap["snapshot_id"] + 1
         rel = self._stage_write(aligned, new_sid, nb, key)
-        buckets = _base_only_buckets(
+        buckets = M.base_only_buckets(
             self._file_entries(rel, snap["current_schema_id"]), nb
         )
         return self._commit(
@@ -1344,12 +1296,7 @@ class LakeTable:
             # because AQE collapses the empty write plan — don't fetch it
             metrics = obs.get if rel else {}
             new_entries = self._file_entries(rel, snap["current_schema_id"])
-            buckets = {b: _norm_entry(e) for b, e in snap["buckets"].items()}
-            for b, fe in new_entries.items():
-                buckets[str(b)] = {
-                    "base": buckets[str(b)]["base"],
-                    "deltas": buckets[str(b)]["deltas"] + [fe],
-                }
+            buckets = M.append_deltas(snap["buckets"], new_entries)
             summary = {
                 "operation": "merge",
                 "mode": "mor",
@@ -1368,13 +1315,7 @@ class LakeTable:
             # bucket map (Iceberg fast-append rebase).
             def rebase(cur: dict) -> dict[str, Any]:
                 _check_same_layout(snap, cur, "mor merge")
-                out = {b: _norm_entry(e) for b, e in cur["buckets"].items()}
-                for b, fe in new_entries.items():
-                    out[str(b)] = {
-                        "base": out[str(b)]["base"],
-                        "deltas": out[str(b)]["deltas"] + [fe],
-                    }
-                return out
+                return M.append_deltas(cur["buckets"], new_entries)
 
             return self._commit(
                 snap, new_sid, buckets, app_id, batch_id, summary,
@@ -1392,9 +1333,7 @@ class LakeTable:
                 app_id, batch_id, ref=branch,
                 summary={"operation": "merge", "touched_buckets": 0},
                 # nothing written: a rebase just adopts the winner's buckets
-                rebase=lambda cur: {
-                    b: _norm_entry(e) for b, e in cur["buckets"].items()
-                },
+                rebase=lambda cur: dict(cur["buckets"]),
             )
 
         phys_cols = [f.name for f in cur.fields] + [SEQ_COL, DELETED_COL]
@@ -1433,9 +1372,9 @@ class LakeTable:
         rel = self._stage_write(merged, new_sid, nb, key, buckets=touched)
         metrics = obs.get
         entries = self._file_entries(rel, snap["current_schema_id"])
-        buckets = {b: _norm_entry(e) for b, e in snap["buckets"].items()}
+        buckets = dict(snap["buckets"])
         for b in touched:
-            buckets[str(b)] = {"base": entries.get(b), "deltas": []}
+            buckets[str(b)] = M.base_entry(entries.get(b))
         summary = {
             "operation": "merge",
             "mode": "cow",
@@ -1557,10 +1496,8 @@ class LakeTable:
         snap = self.snapshot()
         key, nb = snap["table"]["key"], snap["table"]["n_buckets"]
         todo = [
-            int(b)
-            for b, e in snap["buckets"].items()
-            if _norm_entry(e)["deltas"]
-            and (buckets is None or int(b) in set(buckets))
+            b for b, n in M.delta_chains(snap).items()
+            if n and (buckets is None or b in set(buckets))
         ]
         if not todo:
             return snap
@@ -1596,9 +1533,9 @@ class LakeTable:
             target_records_per_file=target_records_per_file,
         )
         entries = self._file_entries(rel, snap["current_schema_id"])
-        out = {b: _norm_entry(e) for b, e in snap["buckets"].items()}
+        out = dict(snap["buckets"])
         for b in todo:
-            out[str(b)] = {"base": entries.get(b), "deltas": []}
+            out[str(b)] = M.base_entry(entries.get(b))
         return self._commit(
             snap, new_sid, out, None, None,
             summary={"operation": "compact", "buckets": len(todo)},
@@ -1635,7 +1572,7 @@ class LakeTable:
         ).withColumn(BUCKET_COL, bucket_expr(key, nb))
         new_sid = snap["snapshot_id"] + 1
         rel = self._stage_write(full, new_sid, nb, key)
-        buckets = _base_only_buckets(
+        buckets = M.base_only_buckets(
             self._file_entries(rel, snap["current_schema_id"]), nb
         )
         return self._commit(
@@ -1664,7 +1601,7 @@ class LakeTable:
         ).withColumn(BUCKET_COL, bucket_expr(key, nb))
         new_sid = snap["snapshot_id"] + 1
         rel = self._stage_write(kept, new_sid, nb, key)
-        buckets = _base_only_buckets(
+        buckets = M.base_only_buckets(
             self._file_entries(rel, snap["current_schema_id"]), nb
         )
         return self._commit(
@@ -1747,9 +1684,8 @@ class LakeTable:
                 f"snapshot {to_sid} is not an ancestor of main head {sid}; "
                 "rollback only walks main's own history"
             )
-        buckets = {b: _norm_entry(e) for b, e in target["buckets"].items()}
         return self._commit(
-            snap, snap["snapshot_id"] + 1, buckets, None, None,
+            snap, snap["snapshot_id"] + 1, dict(target["buckets"]), None, None,
             summary={
                 "operation": "rollback",
                 "rolled_back_to": to_sid,
@@ -1993,26 +1929,16 @@ class LakeTable:
             keep_ids.update(self._read_tags().values())
             snaps = self.history()
             keep = [s for s in snaps if s["snapshot_id"] in keep_ids]
-            referenced = set()
-            for s in keep:
-                for raw in s["buckets"].values():
-                    entry = _norm_entry(raw)
-                    for fe in ([entry["base"]] if entry["base"] else []) + entry["deltas"]:
-                        referenced.add(fe["dir"])
+            referenced = set().union(*map(M.referenced_dirs, keep))
             # every dir ANY historical snapshot references — computed before
             # the metadata removal below, to distinguish "expired" from
             # "never committed" (the latter may be a concurrent writer's
             # in-flight staging and gets the grace period)
-            referenced_any = set(referenced)
-            for s in snaps:
-                for raw in s["buckets"].values():
-                    entry = _norm_entry(raw)
-                    for fe in ([entry["base"]] if entry["base"] else []) + entry["deltas"]:
-                        referenced_any.add(fe["dir"])
+            referenced_any = referenced.union(*map(M.referenced_dirs, snaps))
             # snapshot metadata
             for s in snaps:
                 if s["snapshot_id"] not in keep_ids:
-                    p = self._snap_path(s["snapshot_id"])
+                    p = M.snapshot_path(self._meta_dir, s["snapshot_id"])
                     if os.path.exists(p):
                         os.remove(p)
         deleted = []
@@ -2434,11 +2360,11 @@ def _disjoint_rewrite_rebase(
     (e.g. a delta file appended mid-rewrite). Disjoint buckets commute:
     take the winner's entries for everything this operation didn't rewrite
     (Iceberg RewriteFiles validation)."""
-    before = {str(b): _norm_entry(parent["buckets"][str(b)]) for b in rewritten}
+    before = {str(b): parent["buckets"][str(b)] for b in rewritten}
 
     def rebase(cur: dict) -> dict[str, Any]:
         _check_same_layout(parent, cur, op)
-        out = {b: _norm_entry(e) for b, e in cur["buckets"].items()}
+        out = dict(cur["buckets"])
         for b in rewritten:
             if out[str(b)] != before[str(b)]:
                 raise CommitConflict(
@@ -2451,25 +2377,6 @@ def _disjoint_rewrite_rebase(
         return out
 
     return rebase
-
-
-def _norm_entry(entry: dict[str, Any] | None) -> dict[str, Any]:
-    """Normalize a snapshot bucket entry. Accepts the legacy base-only form
-    ({"dir", "schema_id"} | None) and the current {"base", "deltas"} form."""
-    if entry is None:
-        return {"base": None, "deltas": []}
-    if "base" in entry or "deltas" in entry:
-        return {"base": entry.get("base"), "deltas": list(entry.get("deltas") or [])}
-    return {"base": entry, "deltas": []}
-
-
-def _base_only_buckets(
-    entries: "dict[int, dict[str, Any]]", nb: int
-) -> dict[str, Any]:
-    buckets: dict[str, Any] = {str(b): _norm_entry(None) for b in range(nb)}
-    for b, fe in entries.items():
-        buckets[str(b)] = {"base": fe, "deltas": []}
-    return buckets
 
 
 def _phys(user_schema: T.StructType) -> T.StructType:

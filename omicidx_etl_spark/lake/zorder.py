@@ -30,6 +30,8 @@ from typing import Any
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from omicidx_etl_spark.lake import manifest as M
+
 _NUMERIC = {"int", "bigint", "smallint", "tinyint", "float", "double"}
 
 
@@ -132,21 +134,16 @@ def bounds_from_manifest(
     z-order quantizer WITHOUT scanning any data. Returns None when any
     referenced file group lacks bounds for any requested column (caller
     falls back to a one-pass min/max aggregation)."""
-    from omicidx_etl_spark.lake.table import _norm_entry  # local import: cycle
-
     lo: dict[str, Any] = {}
     hi: dict[str, Any] = {}
-    for b in buckets:
-        e = _norm_entry(snap["buckets"].get(str(b)))
-        groups = ([e["base"]] if e["base"] else []) + list(e["deltas"])
-        for g in groups:
-            stats = g.get("stats") if isinstance(g, dict) else None
-            for c in cols:
-                if not stats or c not in stats:
-                    return None
-                glo, ghi = stats[c]
-                lo[c] = glo if c not in lo else min(lo[c], glo)
-                hi[c] = ghi if c not in hi else max(hi[c], ghi)
+    for _, g, _ in M.snapshot_file_groups(snap, buckets):
+        stats = g.get("stats")
+        for c in cols:
+            if not stats or c not in stats:
+                return None
+            glo, ghi = stats[c]
+            lo[c] = glo if c not in lo else min(lo[c], glo)
+            hi[c] = ghi if c not in hi else max(hi[c], ghi)
     if any(c not in lo for c in cols):
         return None
     return {c: (lo[c], hi[c]) for c in cols}

@@ -20,6 +20,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
+from omicidx_etl_spark.lake import manifest as M
+
 LINEAGE_SCHEMA = pa.schema(
     [
         ("app_id", pa.string()),
@@ -59,29 +61,15 @@ class LineageLog:
         self.checksums = checksums
         os.makedirs(self.dir, exist_ok=True)
 
-    @staticmethod
-    def _referenced_dirs(snap: dict[str, Any]) -> set:
-        from omicidx_etl_spark.lake.table import _norm_entry
-
-        dirs = set()
-        for e in (snap.get("buckets") or {}).values():
-            e = _norm_entry(e)
-            if e["base"]:
-                dirs.add(e["base"]["dir"])
-            for d in e["deltas"]:
-                dirs.add(d["dir"])
-        return dirs
-
     def _file_checksums(self, spark: SparkSession, snap: dict[str, Any]) -> list[dict]:
         """Data dirs NEW in this commit = referenced by the snapshot but not
         by its parent (reference-based, not name-based: stage dir names
         carry per-attempt suffixes and a rebased commit's planned sid)."""
-        new_dirs = self._referenced_dirs(snap)
+        new_dirs = M.referenced_dirs(snap)
         pid = snap.get("parent_id")
-        ppath = os.path.join(self.root, "_meta", f"snapshot-{pid:09d}.json") if pid is not None else None
+        ppath = M.snapshot_path(os.path.join(self.root, "_meta"), pid) if pid is not None else None
         if ppath and os.path.exists(ppath):
-            with open(ppath) as f:
-                new_dirs -= self._referenced_dirs(json.load(f))
+            new_dirs -= M.referenced_dirs(M.load_snapshot(ppath))
         paths = [os.path.join(self.root, d) for d in sorted(new_dirs)]
         paths = [p for p in paths if os.path.isdir(p)]
         if not paths:

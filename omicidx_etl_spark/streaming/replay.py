@@ -27,7 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from omicidx_etl_spark.cdc.replay import replay_batch
-from omicidx_etl_spark.lake.table import LakeTable, _norm_entry, atomic_write_json
+from omicidx_etl_spark.lake import manifest as M
+from omicidx_etl_spark.lake.table import LakeTable, atomic_write_json
 from omicidx_etl_spark.lineage import LineageLog
 
 
@@ -70,14 +71,6 @@ def _quarantine_batch(
             0.0,
         )
     return {"batch_id": batch_id, "quarantined": True, **meta}
-
-
-def _max_delta_depth(table: LakeTable) -> int:
-    snap = table.snapshot()
-    return max(
-        (len(_norm_entry(e)["deltas"]) for e in snap["buckets"].values()),
-        default=0,
-    )
 
 
 def stream_replay(
@@ -193,7 +186,7 @@ def stream_replay(
             )
             return
         committed.append(snap)
-        if compact_deltas_over is not None and _max_delta_depth(table) > compact_deltas_over:
+        if compact_deltas_over is not None and M.max_delta_depth(table.snapshot()) > compact_deltas_over:
             t0 = time.time()
             csnap = table.compact()
             if lineage is not None:

@@ -9,8 +9,7 @@ from pyspark.sql import types as T
 
 from omicidx_etl_spark import datagen
 from omicidx_etl_spark.cdc import dedup_latest
-from omicidx_etl_spark.lake import LakeTable
-from omicidx_etl_spark.lake.table import _norm_entry
+from omicidx_etl_spark.lake import LakeTable, manifest
 
 SCHEMA = T.StructType(
     [
@@ -30,10 +29,7 @@ def _changes_df(spark, rows):
 
 
 def _chains(t):
-    return {
-        int(b): len(_norm_entry(raw)["deltas"])
-        for b, raw in t.snapshot()["buckets"].items()
-    }
+    return manifest.delta_chains(t.snapshot())
 
 
 @pytest.fixture()
@@ -175,11 +171,9 @@ def test_auto_threads_sort_spec(spark, table):
     out = table.auto_maintain(max_delta_chain=4, sort_by=["n_tok"], orphan_grace_s=0)
     comp = [a for a in out["actions"] if a["action"] == "compact"]
     assert comp
-    from omicidx_etl_spark.lake.table import _norm_entry
-
     snap = table.snapshot()
     b = str(comp[0]["buckets"][0])
-    base = _norm_entry(snap["buckets"][b])["base"]
+    base = snap["buckets"][b]["base"]
     d = os.path.join(table.root, base["dir"])
     for fn in os.listdir(d):
         if fn.endswith(".parquet"):

@@ -9,7 +9,7 @@ from pyspark.sql import types as T
 
 from omicidx_etl_spark import datagen
 from omicidx_etl_spark.cdc import dedup_latest
-from omicidx_etl_spark.lake import LakeTable
+from omicidx_etl_spark.lake import LakeTable, manifest
 from omicidx_etl_spark.lake.bloom import dirs_to_skip
 
 SCHEMA = T.StructType(
@@ -89,13 +89,7 @@ def test_dirs_to_skip_is_conservative(table):
     """dirs_to_skip never names a dir that actually holds the key."""
     table.build_blooms()
     snap = table.snapshot()
-    from omicidx_etl_spark.lake.table import _norm_entry
-
-    all_dirs = []
-    for raw in snap["buckets"].values():
-        e = _norm_entry(raw)
-        for fe in ([e["base"]] if e["base"] else []) + e["deltas"]:
-            all_dirs.append(fe["dir"])
+    all_dirs = [fe["dir"] for _, fe, _ in manifest.snapshot_file_groups(snap)]
     key = "doc_00000003"
     skip = dirs_to_skip(table, [key], all_dirs)
     holding = {
@@ -113,14 +107,7 @@ def test_dirs_to_skip_submits_no_spark_job(table, count_jobs):
     """The probe hashes keys on the driver (lake.hashing), so choosing the
     dirs to skip costs no Spark job."""
     table.build_blooms()
-    from omicidx_etl_spark.lake.table import _norm_entry
-
-    dirs = [
-        fe["dir"]
-        for raw in table.snapshot()["buckets"].values()
-        for e in [_norm_entry(raw)]
-        for fe in ([e["base"]] if e["base"] else []) + e["deltas"]
-    ]
+    dirs = [fe["dir"] for _, fe, _ in manifest.snapshot_file_groups(table.snapshot())]
     skip, n_jobs = count_jobs(lambda: dirs_to_skip(table, ["doc_00000002", "nope"], dirs))
     assert n_jobs == 0
     assert skip  # the other single-key deltas' blooms exclude both keys
@@ -140,13 +127,7 @@ def test_bloom_sidecars_pruned_after_compaction(table):
     out = table.build_blooms()
     assert out["pruned"] > 0
     # only live dirs carry sidecars now
-    live = set()
-    from omicidx_etl_spark.lake.table import _norm_entry
-
-    for raw in table.snapshot()["buckets"].values():
-        e = _norm_entry(raw)
-        for fe in ([e["base"]] if e["base"] else []) + e["deltas"]:
-            live.add(fe["dir"])
+    live = manifest.referenced_dirs(table.snapshot())
     import json as _json
 
     for name in _os.listdir(bdir):

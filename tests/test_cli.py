@@ -65,21 +65,20 @@ def test_dispatch_preserves_exit_code(spark, tmp_path, capsys):
         n_buckets=2,
     )
     t.overwrite(datagen.gen_sequences(spark, 50, seed=5))
-    from omicidx_etl_spark.lake.table import _norm_entry, atomic_write_json
+    from omicidx_etl_spark.lake import manifest
+    from omicidx_etl_spark.lake.table import atomic_write_json
 
     snap = t.snapshot()
     tampered = False
-    for b, raw in snap["buckets"].items():
-        e = _norm_entry(raw)
-        if e["base"] and e["base"].get("stats", {}).get("n_tok"):
-            lo, hi = e["base"]["stats"]["n_tok"]
+    for _, g, is_delta in manifest.snapshot_file_groups(snap):
+        if not is_delta and g.get("stats", {}).get("n_tok"):
+            lo, hi = g["stats"]["n_tok"]
             if hi > lo:
-                e["base"]["stats"]["n_tok"] = [lo, lo]
-                snap["buckets"][b] = e
+                g["stats"]["n_tok"] = [lo, lo]
                 tampered = True
                 break
     assert tampered
-    atomic_write_json(t._snap_path(snap["snapshot_id"]), snap)
+    atomic_write_json(manifest.snapshot_path(t._meta_dir, snap["snapshot_id"]), snap)
     rc = main(["maintain", "--table", root, "--auto", "--fsck", "deep"])
     assert rc == 2
     capsys.readouterr()

@@ -15,8 +15,8 @@ from pyspark.sql import functions as F
 
 from omicidx_etl_spark import datagen
 from omicidx_etl_spark.cdc.replay import replay_batch
-from omicidx_etl_spark.lake import LakeTable
-from omicidx_etl_spark.lake.table import ConstraintViolation, _norm_entry
+from omicidx_etl_spark.lake import LakeTable, manifest
+from omicidx_etl_spark.lake.table import ConstraintViolation
 from omicidx_etl_spark.streaming.replay import _quarantine_batch, replay_quarantined
 
 BATCHES, BATCH_EVENTS, DOCS = 14, 5000, 10000
@@ -83,7 +83,7 @@ def test_composed_replay_policy_evolution_quarantine_exactly_once(spark, tmp_pat
             assert _schema(t)["lang"] == "string" and _schema(t)["n_tok"] == "bigint"
         if (b + 1) % CADENCE == 0:
             t.auto_maintain(max_delta_chain=MAX_CHAIN, keep_last=2, orphan_grace_s=0)
-        chains = [len(_norm_entry(raw)["deltas"]) for raw in t.snapshot()["buckets"].values()]
+        chains = manifest.delta_chains(t.snapshot()).values()
         max_chain_seen = max(max_chain_seen, *chains)
     # the chain is measured after the batch's maintenance, so a working
     # policy shows at most (MAX_CHAIN - 1) + (CADENCE - 1)

@@ -13,7 +13,7 @@ from pyspark.sql import types as T
 
 from omicidx_etl_spark import datagen
 from omicidx_etl_spark.cdc import dedup_latest
-from omicidx_etl_spark.lake import LakeTable
+from omicidx_etl_spark.lake import LakeTable, manifest
 
 SCHEMA = T.StructType(
     [
@@ -58,12 +58,8 @@ def test_healthy_table_passes_deep(table):
 
 def test_missing_dir_detected(table):
     snap = table.snapshot()
-    from omicidx_etl_spark.lake.table import _norm_entry
-
     victim = next(
-        _norm_entry(raw)["base"]["dir"]
-        for raw in snap["buckets"].values()
-        if _norm_entry(raw)["base"]
+        g["dir"] for _, g, is_delta in manifest.snapshot_file_groups(snap) if not is_delta
     )
     shutil.rmtree(os.path.join(table.root, victim))
     r = table.fsck()
@@ -74,12 +70,10 @@ def test_corrupt_file_detected_deep_only(table):
     # truncate one parquet file mid-byte: metadata tier stays green, the
     # deep footer check fires
     snap = table.snapshot()
-    from omicidx_etl_spark.lake.table import _norm_entry
-
     d = next(
-        os.path.join(table.root, _norm_entry(raw)["base"]["dir"])
-        for raw in snap["buckets"].values()
-        if _norm_entry(raw)["base"]
+        os.path.join(table.root, g["dir"])
+        for _, g, is_delta in manifest.snapshot_file_groups(snap)
+        if not is_delta
     )
     f = next(os.path.join(d, n) for n in os.listdir(d) if n.endswith(".parquet"))
     with open(f, "r+b") as fh:
@@ -93,21 +87,18 @@ def test_lying_stats_bounds_detected(table):
     """Tighten a recorded max below the data's max — the corruption that
     makes bounds-pruned reads silently drop rows."""
     snap = table.snapshot()
-    from omicidx_etl_spark.lake.table import _norm_entry, atomic_write_json
+    from omicidx_etl_spark.lake.table import atomic_write_json
 
     tampered = False
-    for b, raw in snap["buckets"].items():
-        e = _norm_entry(raw)
-        if e["base"] and e["base"].get("stats", {}).get("n_tok"):
-            lo, hi = e["base"]["stats"]["n_tok"]
+    for _, g, is_delta in manifest.snapshot_file_groups(snap):
+        if not is_delta and g.get("stats", {}).get("n_tok"):
+            lo, hi = g["stats"]["n_tok"]
             if hi > lo:
-                e["base"]["stats"]["n_tok"] = [lo, lo]  # lie: max == min
-                snap["buckets"][b] = e
+                g["stats"]["n_tok"] = [lo, lo]  # lie: max == min
                 tampered = True
                 break
     assert tampered, "fixture produced no multi-value n_tok dir"
-    atomic_write_json(table._snap_path(snap["snapshot_id"]), snap)
-    table._snap = None  # force re-resolve
+    atomic_write_json(manifest.snapshot_path(table._meta_dir, snap["snapshot_id"]), snap)
     r = table.fsck(deep=True)
     assert not r["ok"] and "stats_bounds" in _codes(r)
 
@@ -134,8 +125,7 @@ def test_bad_constraint_detected(table):
     from omicidx_etl_spark.lake.table import atomic_write_json
 
     snap["constraints"]["nonneg"] = "no_such_column >= 0"
-    atomic_write_json(table._snap_path(snap["snapshot_id"]), snap)
-    table._snap = None
+    atomic_write_json(manifest.snapshot_path(table._meta_dir, snap["snapshot_id"]), snap)
     r = table.fsck()
     assert not r["ok"] and "bad_constraint" in _codes(r)
 
@@ -161,8 +151,7 @@ def test_seq_ceiling_low_detected(table):
     from omicidx_etl_spark.lake.table import atomic_write_json
 
     snap["seq_ceiling"] = -1  # below the merged seq=100
-    atomic_write_json(table._snap_path(snap["snapshot_id"]), snap)
-    table._snap = None
+    atomic_write_json(manifest.snapshot_path(table._meta_dir, snap["snapshot_id"]), snap)
     r = table.fsck(deep=True)
     assert not r["ok"] and "seq_ceiling_low" in _codes(r)
 

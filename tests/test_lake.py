@@ -3,7 +3,10 @@ crash-safety of the commit protocol."""
 
 from __future__ import annotations
 
+import json
 import os
+import pathlib
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -11,8 +14,8 @@ from pyspark.sql import types as T
 
 from omicidx_etl_spark import datagen
 from omicidx_etl_spark.cdc import dedup_latest
-from omicidx_etl_spark.lake import LakeTable
-from omicidx_etl_spark.lake.table import bucket_expr
+from omicidx_etl_spark.lake import LakeTable, manifest
+from omicidx_etl_spark.lake.table import atomic_write_json, bucket_expr
 
 SCHEMA = T.StructType(
     [
@@ -397,3 +400,59 @@ def test_compact_sort_by_secondary_column(spark, tmp_path):
     assert checked > 0
     after = {r["doc_id"]: r["source"] for r in t.read().collect()}
     assert after == before  # sort order never changes table contents
+
+
+def test_manifest_format_only_in_manifest_py():
+    """lake/manifest.py is the engine's only reader of the bucket-entry
+    format and the only spelling of the snapshot file name: no other
+    engine module walks an entry base-then-deltas or formats
+    ``snapshot-{sid}``."""
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "omicidx_etl_spark"
+    pattern = re.compile(r'\["base"\]\]\s+if|snapshot-\{')
+    hits = [
+        f"{path.relative_to(pkg)}:{n}: {line.strip()}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path.relative_to(pkg).as_posix() != "lake/manifest.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert hits == [], hits
+
+
+def test_legacy_bucket_entries_read_like_normalized(spark, tmp_path):
+    """Tables written before the delta tier stored a bucket entry as None
+    (empty bucket) or as a bare file group (base only). Rewriting the
+    current snapshot into those forms changes nothing a reader returns."""
+    t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, key="doc_id", n_buckets=4)
+    rows = datagen.gen_sequences(spark, 120, seed=7).withColumn("b", bucket_expr("doc_id", 4))
+    t.overwrite(rows.filter(F.col("b") != 3).drop("b"))
+    dirty_key = rows.filter(F.col("b") == 2).first()["doc_id"]
+    ch = spark.createDataFrame(
+        [(5, "U", dirty_key, [5], 1, "web")],
+        "seq long, op string, doc_id string, tokens array<int>, n_tok int, source string",
+    )
+    t.merge(dedup_latest(ch), mode="mor")
+    keys = [dirty_key] + [r["doc_id"] for r in rows.filter(F.col("b") == 0).limit(2).collect()]
+
+    def observed():
+        fsck = t.fsck()
+        return (
+            sorted(tuple(r) for r in t.read().select("doc_id", "n_tok").collect()),
+            sorted(tuple(r) for r in t.lookup(keys).select("doc_id", "n_tok").collect()),
+            sorted(tuple(r) for r in t.meta_files().collect()),
+            (fsck["ok"], fsck["findings"], fsck["checked"]),
+        )
+
+    want = observed()
+    snap = t.snapshot()
+    path = manifest.snapshot_path(os.path.join(t.root, "_meta"), snap["snapshot_id"])
+    with open(path) as f:
+        raw = json.load(f)
+    assert raw["buckets"]["3"] == {"base": None, "deltas": []}
+    assert raw["buckets"]["0"]["deltas"] == [] and raw["buckets"]["2"]["deltas"]
+    raw["buckets"]["3"] = None
+    raw["buckets"]["0"] = raw["buckets"]["0"]["base"]
+    atomic_write_json(path, raw)
+
+    assert t.snapshot()["buckets"] == snap["buckets"]
+    assert observed() == want

@@ -12,8 +12,7 @@ from pyspark.sql import types as T
 
 from omicidx_etl_spark import datagen
 from omicidx_etl_spark.cdc import replay_log
-from omicidx_etl_spark.lake import LakeTable
-from omicidx_etl_spark.lake.table import _norm_entry
+from omicidx_etl_spark.lake import LakeTable, manifest
 
 N_DOCS, N_EVENTS = 400, 6000
 
@@ -58,9 +57,7 @@ def _schema(spark):
 
 
 def _delta_count(table: LakeTable) -> int:
-    return sum(
-        len(_norm_entry(e)["deltas"]) for e in table.snapshot()["buckets"].values()
-    )
+    return sum(manifest.delta_chains(table.snapshot()).values())
 
 
 def test_mor_replay_matches_oracle(spark, change_log, tmp_path):

@@ -148,6 +148,7 @@ def test_retired_options_stay_gone():
         r"|(SPARK_GRAFT_CPUS|SPARK_DRIVER_MEM)([\"']\s*(,|\]\s*=)|:-\d)"
         r"|^(import|from) bench\b"
         r"|dedup_method|DEDUP_METHODS|winners_from|canonicalize_method|canonicalize_content_col"
+        r"|_norm_entry|_max_delta_depth|_referenced_dirs|_has_files"
     )
     files = (
         sorted(PKG.rglob("*.py"))

@@ -6,7 +6,7 @@ from __future__ import annotations
 import duckdb
 
 from omicidx_etl_spark import datagen
-from omicidx_etl_spark.lake import LakeTable
+from omicidx_etl_spark.lake import LakeTable, manifest
 from omicidx_etl_spark.streaming import stream_replay
 
 
@@ -149,8 +149,6 @@ def test_quarantine_unreadable_batch(spark, tmp_path):
 def test_stream_auto_compact_bounds_delta_depth(spark, tmp_path):
     """MOR + compact_deltas_over: the stream folds deltas itself, so the
     read-side delta chain stays bounded across many micro-batches."""
-    from omicidx_etl_spark.streaming.replay import _max_delta_depth
-
     log = str(tmp_path / "log")
     root = str(tmp_path / "t")
     schema = _mk_log(spark, log, 6000, 300, seed=43, files=6)
@@ -163,7 +161,7 @@ def test_stream_auto_compact_bounds_delta_depth(spark, tmp_path):
     compactions = [c for c in committed if c["summary"].get("operation") == "compact"]
     merges = [c for c in committed if c["summary"].get("operation") == "merge"]
     assert len(merges) == 6 and compactions, "no auto-compaction happened"
-    assert _max_delta_depth(table) <= 2
+    assert manifest.max_delta_depth(table.snapshot()) <= 2
     got = table.read().select("doc_id", "n_tok").orderBy("doc_id").toPandas()
     exp = _oracle(log)
     assert got["doc_id"].tolist() == exp["doc_id"].tolist()

@@ -142,6 +142,24 @@ def test_changes_excludes_compaction_rewrites(spark, table):
     assert [r["doc_id"] for r in got] == ["doc_00000007"]
 
 
+def test_changes_keeps_delta_over_pruned_compaction_base(spark, table):
+    """A compacted base whose seqs are all below the from-ceiling is pruned
+    from the changelog scan; the MOR deltas appended to the same bucket
+    after the compaction are still scanned."""
+    table.merge(
+        dedup_latest(_changes_df(spark, [(5, "U", "doc_00000006", [3], 1, "web")])),
+        mode="mor",
+    )
+    sid_after = table.snapshot()["snapshot_id"]
+    table.compact()
+    table.merge(
+        dedup_latest(_changes_df(spark, [(9, "U", "doc_00000006", [4], 2, "web")])),
+        mode="mor",
+    )
+    got = [(r["doc_id"], r["n_tok"]) for r in table.changes(sid_after).collect()]
+    assert got == [("doc_00000006", 2)]
+
+
 def test_changes_include_seq_orders_consumers(spark, table):
     sid1 = table.snapshot()["snapshot_id"]
     table.merge(
